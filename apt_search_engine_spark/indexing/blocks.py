@@ -247,6 +247,14 @@ def write_blocks(
     blocks. No shuffle — the merge already ordered and ord-stamped it.
     df is not duplicated here; WAND takes it from the lexicon.
 
+    One wave: the input is coalesced (narrow, no shuffle) to
+    defaultParallelism partitions before the Arrow pass, so the per-task
+    Python-worker cost is paid once per core rather than once per
+    postings file. Postings writes are bucket-aligned
+    (build.bucket_ranged), so each task writes one blocks file per
+    (input postings file or partition, bucket) it covers: blocks files
+    <= postings files.
+
     `postings_src` is a directory path OR a (persisted) postings
     DataFrame — passing the in-flight frame from the merge avoids
     re-reading and re-decoding the whole index's nested arrays.
@@ -258,7 +266,9 @@ def write_blocks(
         "term", "term_bucket", "doc_ords", "occs", "dls", "xtras",
         "n_titles", "n_h1s", "n_h2s", "n_h3s",
     )
-    blocks = postings.mapInArrow(_blocks_from_segments, schema=BLOCKS_SCHEMA)
+    blocks = postings.coalesce(
+        spark.sparkContext.defaultParallelism
+    ).mapInArrow(_blocks_from_segments, schema=BLOCKS_SCHEMA)
     writer = blocks.write.mode(mode)
     if dynamic:
         writer = writer.option("partitionOverwriteMode", "dynamic")

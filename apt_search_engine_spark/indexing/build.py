@@ -18,21 +18,28 @@ per doc, per-term Mongo upserts, mark isIndexed) with a 3-stage Spark job:
            Zipfian head terms make a naive groupBy(term).collect_list both
            a shuffle hot-spot AND an unbounded-row OOM (a head term at
            10^12 turns is ~10^11 postings — it cannot be one row, or even
-           one partition). Instead the flat postings are
-           repartitionByRange(term, doc_id) + sortWithinPartitions — the
-           doc_id range shard plays the salt's role in the salted
+           one partition). Instead the (term, stripe) runs are
+           repartitionByRange(term_bucket, term, stripe) +
+           sortWithinPartitions on the same keys (bucket_ranged) — the
+           stripe range shard plays the salt's role in the salted
            repartition-by-term pattern (SURVEY.md 4.2 item 1) while
-           keeping global (term, doc_id) order — and an Arrow-batched
-           pass emits one postings row per (term, run of <=
-           MAX_POSTINGS_PER_ROW docs): bounded memory everywhere, sorted
-           segments, no giant rows. df (true document frequency, what the
-           reference reads as postings-map size, Ranker.java:194) goes to
-           a separate LEXICON table via a skew-free partial aggregate —
-           see build_lexicon / schema.py LEXICON.
+           keeping each term's runs contiguous and doc-ordered — and an
+           Arrow-batched pass emits one postings row per (term, run of
+           <= MAX_POSTINGS_PER_ROW docs): bounded memory everywhere,
+           sorted segments, no giant rows. Leading with term_bucket
+           makes the exchange bucket-aligned: each task holds one
+           contiguous bucket range, so the stage-3 write makes at most
+           N_TERM_BUCKETS + n_parts - 1 files, term-sorted inside each
+           file. df (true document frequency, what the reference reads
+           as postings-map size, Ranker.java:194) goes to a separate
+           LEXICON table via a skew-free partial aggregate — see
+           build_lexicon / schema.py LEXICON.
 
   stage 3  WRITE: postings directory-partitioned by
            term_bucket = pmod(xxhash64(term), N) so query-time term lookup
-           prunes to |terms| buckets; per-bucket lineage metrics appended.
+           prunes to |terms| buckets; the block-max companion is derived
+           from them in one narrow wave (indexing/blocks.write_blocks);
+           per-bucket lineage metrics appended.
 
 The per-term Mongo upsert pattern (DBManager.java:214-302, one round trip
 per (term, doc)) is the reference's main scalability bug and is deliberately
@@ -1170,10 +1177,7 @@ def merge_postings(
             "term", "stripe", "n",
             "doc_ords_vb", "positions_vb", "meta_vb",
         )
-        ranged = runs.repartitionByRange(
-            n_parts, F.col("term"), F.col("stripe")
-        ).sortWithinPartitions("term", "stripe")
-        assembled = ranged.mapInArrow(
+        assembled = bucket_ranged(runs, n_parts, "stripe").mapInArrow(
             _assemble_grouped_arrow_factory(max_per_row, _COLS_ORD),
             _ASSEMBLED_SCHEMA_ORD,
         )
@@ -1231,10 +1235,7 @@ def merge_postings(
         runs = flat.select(
             "term", "doc_ord", "positions_vb", "meta_vb"
         ).mapInArrow(_group_runs_arrow_factory(width), GROUPED_SCHEMA)
-        ranged = runs.repartitionByRange(
-            n_parts, F.col("term"), F.col("stripe")
-        ).sortWithinPartitions("term", "stripe")
-        assembled = ranged.mapInArrow(
+        assembled = bucket_ranged(runs, n_parts, "stripe").mapInArrow(
             _assemble_grouped_arrow_factory(max_per_row, cols), schema
         )
     else:
@@ -1248,9 +1249,7 @@ def merge_postings(
         # ord builds range/sort on the ordinal (same order as doc_id, 8
         # bytes vs a string in every shuffle row + sort comparison)
         sub_key = "doc_ord" if with_ord else "doc_id"
-        ranged = flat.repartitionByRange(
-            n_parts, F.col("term"), F.col(sub_key)
-        ).sortWithinPartitions("term", sub_key)
+        ranged = bucket_ranged(flat, n_parts, sub_key)
         # Arrow-native assembly (zero-copy slicing of the sorted
         # columns); the pandas path survives for the bit-equality
         # regression test and as an operational fallback
@@ -1265,6 +1264,35 @@ def merge_postings(
     return _finish_segments(assembled, with_ord)
 
 
+def term_bucket_col():
+    """The postings/lexicon/blocks directory partition key:
+    pmod(xxhash64(term), N_TERM_BUCKETS)."""
+    return F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).cast("int")
+
+
+def bucket_ranged(
+    df: DataFrame, n_parts: int, sub_key: str, split_terms: bool = True
+) -> DataFrame:
+    """The exchange in front of every partitionBy("term_bucket") postings
+    write: range-partition on (term_bucket, term, sub_key) and sort
+    within partitions on the same keys, stamping term_bucket if absent.
+    Each task then holds one contiguous bucket range, so a write makes
+    at most N_TERM_BUCKETS + n_parts - 1 files (a term-only range put
+    every task into every bucket: n_parts x N_TERM_BUCKETS small files,
+    each its own blocks-pass split), and rows stay term-sorted inside a
+    file for row-group pruning. A term's rows stay contiguous and
+    sub_key-ordered, which is all the assemblers read. split_terms=False
+    ranges on (term_bucket, term) only, so every row of a term lands in
+    one task: the rechunk passes (purge, merge, recompact) fold all of a
+    term's segments."""
+    if "term_bucket" not in df.columns:
+        df = df.withColumn("term_bucket", term_bucket_col())
+    keys = ["term_bucket", "term", sub_key]
+    return df.repartitionByRange(
+        n_parts, *keys[: 3 if split_terms else 2]
+    ).sortWithinPartitions(*keys)
+
+
 def _finish_segments(assembled: DataFrame, with_ord: bool) -> DataFrame:
     """Shared merge tail: term bucket + scalar doc-range columns.
     Storage stays columnar-in-row (parallel arrays, tag prefix counts):
@@ -1272,10 +1300,7 @@ def _finish_segments(assembled: DataFrame, with_ord: bool) -> DataFrame:
     unvectorized codegen loop per 32k-element row and multiplies index
     bytes — consumers reconstruct lazily via with_postings_struct on
     term-pruned reads (schema.py POSTINGS rationale)."""
-    merged = assembled.withColumn(
-        "term_bucket",
-        F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).cast("int"),
-    )
+    merged = assembled.withColumn("term_bucket", term_bucket_col())
     if with_ord:
         # scalar ordinal range per segment (lineage stats / range pruning
         # without touching the nested arrays); doc_id strings appear
@@ -1323,10 +1348,9 @@ def build_lexicon_from_flat(flat: DataFrame) -> DataFrame:
         )
     else:
         agg = flat.groupBy("term").agg(F.count("*").cast("int").alias("df"))
-    return agg.withColumn(
-        "term_bucket",
-        F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).cast("int"),
-    ).select("term", "df", "term_bucket")
+    return agg.withColumn("term_bucket", term_bucket_col()).select(
+        "term", "df", "term_bucket"
+    )
 
 
 def build_doc_len_from_flat(flat: DataFrame) -> DataFrame:
@@ -1531,6 +1555,10 @@ class IndexBuilder:
         return os.path.join(self.index_dir, "meta.json")
 
     def _completed_batches(self) -> set[int]:
+        # a fresh build has no lineage yet: planning a read of the
+        # missing path would raise (and log) PATH_NOT_FOUND
+        if not os.path.isdir(self.lineage_dir):
+            return set()
         try:
             lin = self.spark.read.parquet(self.lineage_dir)
         except Exception:

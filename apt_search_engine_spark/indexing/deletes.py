@@ -149,7 +149,9 @@ def purge_deleted(
         _COLS_ORD,
         _assemble_arrow_factory,
         _flatten_segments_arrow_factory,
+        bucket_ranged,
         build_lexicon,
+        term_bucket_col,
     )
 
     # single-writer maintenance (the compact() contract): stale staged or
@@ -174,16 +176,14 @@ def purge_deleted(
     with_blocks = os.path.isdir(blocks_dir)
 
     # ---- postings: flatten -> drop dead ords -> re-assemble ------------
-    # same term-ranged, streaming-rechunk shape as recompact: all of a
+    # same bucket-aligned, streaming-rechunk shape as recompact: all of a
     # term's segments colocate (sorted by first ordinal), flatten to
     # posting rows zero-copy, mask, re-chunk at the standard cap
     src = spark.read.parquet(postings_dir).withColumn(
         "seg_lo", F.expr("doc_ords[0]")
     )
     n_parts = max(spark.sparkContext.defaultParallelism, N_TERM_BUCKETS)
-    ranged = src.repartitionByRange(n_parts, F.col("term")).sortWithinPartitions(
-        "term", "seg_lo"
-    )
+    ranged = bucket_ranged(src, n_parts, "seg_lo", split_terms=False)
     flatten = _flatten_segments_arrow_factory(_COLS_ORD)
     assemble = _assemble_arrow_factory(MAX_POSTINGS_PER_ROW, _COLS_ORD)
     ord_idx = 1 + _COLS_ORD.index("doc_ord")  # after the leading term col
@@ -206,10 +206,7 @@ def purge_deleted(
 
     body = ranged.mapInArrow(_rewrite, _ASSEMBLED_SCHEMA_ORD)
     rewritten = (
-        body.withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).cast("int"),
-        )
+        body.withColumn("term_bucket", term_bucket_col())
         .withColumn("ord_lo", F.expr("doc_ords[0]"))
         .withColumn("ord_hi", F.expr("element_at(doc_ords, -1)"))
     )

@@ -29,10 +29,13 @@ Like a streamed index after incremental compaction, a merged index's
 ordinal order is shard-concatenation order, not global doc_id order —
 only the tie-break among EXACTLY equal scores can observe that.
 
-Cost shape at scale: one map-only ordinal shift + ONE
-repartitionByRange(term) exchange for the re-chunk + the lexicon/blocks
-derivations — the batch build minus its analyze stage (which at 10^12
-turns is the dominant cost the per-shard builds already paid).
+Cost shape at scale: one map-only ordinal shift + ONE bucket-aligned
+repartitionByRange(term_bucket, term) exchange for the re-chunk
+(build.bucket_ranged: each task writes one contiguous bucket range, so
+the postings write makes at most N_TERM_BUCKETS + n_parts - 1 files) +
+the lexicon derivation and the one-wave blocks pass — the batch build
+minus its analyze stage (which at 10^12 turns is the dominant cost the
+per-shard builds already paid).
 """
 
 from __future__ import annotations
@@ -75,7 +78,9 @@ def merge_indexes(
         _COLS_ORD,
         _assemble_arrow_factory,
         _flatten_segments_arrow_factory,
+        bucket_ranged,
         build_lexicon,
+        term_bucket_col,
     )
     from apt_search_engine_spark.indexing.deletes import tombstones_df
 
@@ -166,10 +171,9 @@ def merge_indexes(
             "doc_ords", F.expr(f"transform(doc_ords, x -> x + {off}L)")
         )
         src = p if src is None else src.unionByName(p)
-    ranged = (
-        src.withColumn("seg_lo", F.expr("doc_ords[0]"))
-        .repartitionByRange(n_parts, F.col("term"))
-        .sortWithinPartitions("term", "seg_lo")
+    ranged = bucket_ranged(
+        src.withColumn("seg_lo", F.expr("doc_ords[0]")),
+        n_parts, "seg_lo", split_terms=False,
     )
     flatten = _flatten_segments_arrow_factory(_COLS_ORD)
     assemble = _assemble_arrow_factory(MAX_POSTINGS_PER_ROW, _COLS_ORD)
@@ -179,10 +183,7 @@ def merge_indexes(
 
     body = ranged.mapInArrow(_rechunk, _ASSEMBLED_SCHEMA_ORD)
     rewritten = (
-        body.withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).cast("int"),
-        )
+        body.withColumn("term_bucket", term_bucket_col())
         .withColumn("ord_lo", F.expr("doc_ords[0]"))
         .withColumn("ord_hi", F.expr("element_at(doc_ords, -1)"))
     )

@@ -259,6 +259,14 @@ def make_handler(engine, synonyms_df=None, cache_size: int = 256):
             return obj
 
         def do_GET(self):
+            try:
+                self._route()
+            except Exception as e:
+                # any engine failure: a JSON 500 instead of a dropped
+                # connection; the server keeps answering later requests
+                self._json(500, {"error": f"{type(e).__name__}: {e}"})
+
+        def _route(self):
             u = urlparse(self.path)
             if u.path == "/suggest":
                 self._suggest(u)

@@ -2681,7 +2681,12 @@ class SearchEngine:
         rows — driver-side on k rows only (R9/P8)."""
         ids = [r.doc_id for r in top]
         meta = {}
-        if ids and self.doc_meta_path is not None:
+        # a streamed index has no doc_meta: fall back to url = doc_id
+        if (
+            ids
+            and self.doc_meta_path is not None
+            and os.path.isdir(self.doc_meta_path)
+        ):
             meta_rows = (
                 self._read(self.doc_meta_path)
                 .filter(F.col("doc_id").isin(ids))

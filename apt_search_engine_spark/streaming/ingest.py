@@ -602,10 +602,7 @@ def recompact(
     import numpy as np
     import pandas as pd
 
-    from apt_search_engine_spark.config import (
-        MAX_POSTINGS_PER_ROW,
-        N_TERM_BUCKETS,
-    )
+    from apt_search_engine_spark.config import MAX_POSTINGS_PER_ROW
     from apt_search_engine_spark.indexing.blocks import write_blocks
     from apt_search_engine_spark.indexing.build import (
         _ASSEMBLED_SCHEMA_ORD,
@@ -613,6 +610,8 @@ def recompact(
         _N_PLURALS,
         _assemble_arrow_factory,
         _flatten_segments_arrow_factory,
+        bucket_ranged,
+        term_bucket_col,
     )
 
     cap = max_per_row or MAX_POSTINGS_PER_ROW
@@ -645,18 +644,17 @@ def recompact(
         src.sparkSession.sparkContext.defaultParallelism,
         len(buckets),
     )
-    # range by TERM ONLY: all of a term's segments must colocate or the
-    # per-term fold cannot reach max_segments_per_term (a boundary
-    # between two of its segments leaves one per side — latent under
-    # per-posting merges, guaranteed under the v12 stripe-grouped merge
-    # which legitimately emits one segment per (term, stripe-range)
-    # partition). rechunk streams segment rows and emits every `cap`
-    # postings, so colocation costs bounded memory; the cost is one
-    # serial task per head term during MAINTENANCE only — acceptable
-    # read-amplification upkeep, and only fragmented buckets are read.
-    ranged = src.repartitionByRange(
-        n_parts, F.col("term")
-    ).sortWithinPartitions("term", "seg_lo")
+    # range by (term_bucket, term) only, never by segment: all of a
+    # term's segments must colocate or the per-term fold cannot reach
+    # max_segments_per_term (a boundary between two of its segments
+    # leaves one per side — latent under per-posting merges, guaranteed
+    # under the v12 stripe-grouped merge which legitimately emits one
+    # segment per (term, stripe-range) partition). rechunk streams
+    # segment rows and emits every `cap` postings, so colocation costs
+    # bounded memory; the cost is one serial task per head term during
+    # MAINTENANCE only — acceptable read-amplification upkeep, and only
+    # fragmented buckets are read.
+    ranged = bucket_ranged(src, n_parts, "seg_lo", split_terms=False)
 
     def rechunk(batches):
         cur_term = None
@@ -719,10 +717,7 @@ def recompact(
         body = ranged.mapInPandas(rechunk, _ASSEMBLED_SCHEMA_ORD)
     rewritten = (
         body
-        .withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(N_TERM_BUCKETS)).cast("int"),
-        )
+        .withColumn("term_bucket", term_bucket_col())
         .withColumn("ord_lo", F.expr("doc_ords[0]"))
         .withColumn("ord_hi", F.expr("element_at(doc_ords, -1)"))
         .select(

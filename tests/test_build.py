@@ -142,6 +142,53 @@ def test_blocks_roundtrip(spark, index_dir):
         assert max(b.block_max_wtf for b in bs) == pytest.approx(max(wtfs)), term
 
 
+def _parquet_files(table_dir):
+    import glob
+
+    return glob.glob(f"{table_dir}/term_bucket=*/*.parquet")
+
+
+def test_bucket_aligned_file_fanout(spark, index_dir, tmp_path):
+    """Every postings write is bucket-aligned (build.bucket_ranged): each
+    task covers one contiguous term_bucket range, so a write makes at most
+    N_TERM_BUCKETS + n_parts - 1 files, and the one-wave blocks pass
+    writes no more files than it reads. A term-only range makes up to
+    n_parts x N_TERM_BUCKETS files. Checked after a bulk build and again
+    after a purge rewrites the postings."""
+    import shutil
+
+    from apt_search_engine_spark.config import N_TERM_BUCKETS
+    from apt_search_engine_spark.indexing.deletes import (
+        delete_docs,
+        purge_deleted,
+    )
+
+    dp = spark.sparkContext.defaultParallelism
+    merge_parts = max(
+        dp * 2, int(spark.conf.get("spark.sql.shuffle.partitions"))
+    )
+    postings = _parquet_files(f"{index_dir}/postings")
+    blocks = _parquet_files(f"{index_dir}/blocks")
+    assert 0 < len(postings) <= N_TERM_BUCKETS + merge_parts - 1
+    assert 0 < len(blocks) <= len(postings)
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(index_dir, idx)
+    dead = [
+        r.doc_id
+        for r in spark.read.parquet(f"{idx}/doc_map")
+        .orderBy("doc_ord")
+        .limit(3)
+        .collect()
+    ]
+    delete_docs(spark, idx, dead)
+    assert purge_deleted(spark, idx) == 3
+    purge_parts = max(dp, N_TERM_BUCKETS)
+    postings = _parquet_files(f"{idx}/postings")
+    assert 0 < len(postings) <= N_TERM_BUCKETS + purge_parts - 1
+    assert 0 < len(_parquet_files(f"{idx}/blocks")) <= len(postings)
+
+
 def test_no_python_row_udfs_in_merge_plan(spark, index_dir):
     """North-rule: no per-row Python on the hot path. The merge/query plans
     must not contain BatchEvalPython (row-at-a-time UDF) nodes; Python only

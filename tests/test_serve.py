@@ -59,6 +59,64 @@ def test_search_returns_stored_url(spark, tmp_path):
         httpd.shutdown()
 
 
+def test_search_without_doc_meta_falls_back_to_doc_id(spark, tmp_path):
+    """A streamed index has no doc_meta. Result assembly then returns the
+    url = doc_id fallback with the same ranking instead of failing the
+    read of the missing table."""
+    import shutil
+
+    from apt_search_engine_spark.corpus import gen_corpus_spark
+    from apt_search_engine_spark.indexing.build import IndexBuilder
+    from apt_search_engine_spark.query.engine import SearchEngine
+
+    d = str(tmp_path / "idx")
+    IndexBuilder(spark, d, n_batches=1).build(
+        gen_corpus_spark(spark, 8), with_blocks=False
+    )
+    before = SearchEngine(spark, index_dir=d).search("travel guide", k=5)
+    assert before, "query must match on the seeded corpus"
+    shutil.rmtree(f"{d}/doc_meta")
+    eng = SearchEngine(spark, index_dir=d)
+    after = eng.search("travel guide", k=5)
+    assert [(r["doc_id"], r["score"]) for r in after] == [
+        (r["doc_id"], r["score"]) for r in before
+    ]
+    for r in after:
+        assert r["url"] == r["doc_id"] and r["title"] is None
+    assert eng.search_prefix("tra", k=5)
+
+
+def test_search_error_returns_json_500(engine, monkeypatch):
+    """An engine failure answers 500 with a JSON error body instead of
+    dropping the connection, and the server keeps serving."""
+    import urllib.error
+
+    import pytest
+
+    from apt_search_engine_spark.jobs.serve import serve
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("engine exploded")
+
+    monkeypatch.setattr(engine, "search", boom)
+    httpd = serve(engine, host="127.0.0.1", port=0)
+    port = httpd.server_address[1]
+    t = threading.Thread(target=httpd.serve_forever, daemon=True)
+    t.start()
+    try:
+        with pytest.raises(urllib.error.HTTPError) as err:
+            _get(f"http://127.0.0.1:{port}/search?query=travel%20guide")
+        assert err.value.code == 500
+        body = json.loads(err.value.read())
+        assert body == {"error": "RuntimeError: engine exploded"}
+        status, body = _get(
+            f"http://127.0.0.1:{port}/search?query=travel%20guide&scorer=bm25"
+        )
+        assert status == 200 and body["results"]
+    finally:
+        httpd.shutdown()
+
+
 def test_search_endpoint_contract(engine):
     from apt_search_engine_spark.jobs.serve import serve
 
