@@ -1989,7 +1989,13 @@ class IndexBuilder:
         the reference's paragraph list analog for snippets). `url_expr`
         overrides the default url == doc_id (transcripts use natural
         keys); sources with real URLs feed it so the R10 per-URL score
-        dedup (engine dedup_by_url) has something to merge."""
+        dedup (engine dedup_by_url) has something to merge.
+
+        Rows are range-partitioned and sorted by doc_id, as write_doc_map
+        does, so each file holds a disjoint doc_id range: the query
+        side's driver-side point read of the k result docs
+        (query/pointread.py) opens only the row groups whose footer
+        range holds one of them, whatever order the input arrives in."""
         meta = transcripts.select(
             doc_id_expr().alias("doc_id"),
             (url_expr if url_expr is not None else doc_id_expr()).alias("url"),
@@ -2001,7 +2007,10 @@ class IndexBuilder:
             .otherwise(F.array().cast("array<string>"))
             .alias("ps"),
         )
-        meta.write.mode("overwrite").parquet(
+        n_parts = max(2, self.spark.sparkContext.defaultParallelism)
+        meta.repartitionByRange(n_parts, "doc_id").sortWithinPartitions(
+            "doc_id"
+        ).write.mode("overwrite").parquet(
             os.path.join(self.index_dir, "doc_meta")
         )
 

@@ -48,6 +48,8 @@ from apt_search_engine_spark.config import (
     idf_numerator,
 )
 from apt_search_engine_spark.query import parser
+from apt_search_engine_spark.query.pointread import local_frame, read_rows
+from apt_search_engine_spark.query.wand import RESULT_SCHEMA
 from apt_search_engine_spark.query.snippets import generate_snippet
 
 # R1/R2 tag-weight fold (Ranker.java:43-66) is precomputed at build time
@@ -292,7 +294,10 @@ def _boolean_fold_udf(seg_specs: list[list[str]]):
 
         return pd.Series(np.stack(pres, axis=1).tolist())
 
-    return _m
+    # nondeterministic so Catalyst evaluates it ONCE: the caller projects
+    # `segm` and filters on it, and a deterministic UDF would be copied
+    # into the pushed-down filter — a second Arrow pass over the rows
+    return _m.asNondeterministic()
 
 
 def _near_match_udf(w1: str, w2: str, slop: int, ordered: bool = False):
@@ -421,6 +426,9 @@ class SearchEngine:
         self._deleted_cache: dict[str, object] = {}
         self._df_cache: dict[str, int | None] = {}
         self._reader_cache: dict[str, DataFrame] = {}
+        # parquet footer key ranges per (table dir, key column) for the
+        # driver-side point reads (query/pointread.py)
+        self._footer_cache: dict[tuple[str, str], list] = {}
         if index_dir is not None:
             self.postings_path = os.path.join(index_dir, "postings")
             self.lexicon_path = os.path.join(index_dir, "lexicon")
@@ -479,6 +487,7 @@ class SearchEngine:
         committed a new index state under a long-lived engine."""
         self._df_cache.clear()
         self._reader_cache.clear()
+        self._footer_cache.clear()
         self._deleted_cache.clear()
         # the MLT term-selection memo pins the same index state (dfs and
         # the seed's stored text both feed it)
@@ -518,9 +527,10 @@ class SearchEngine:
         order == global doc_id order (write_doc_map assigns ordinals in
         doc_id order), so tiebreaks, fold order and top-k cuts are
         identical, and translation back to doc_id happens ONCE on the
-        final <=k rows (query/wand.translate_topk point lookup) instead of
-        joining the corpus-sized doc_map into every candidate row
-        (VERDICT r3 'what's wrong' #3)."""
+        final <=k rows (query/wand.translate_topk: a driver-side point
+        read of the ordinal-ordered doc_map, returned as a local
+        relation) instead of joining the corpus-sized doc_map into every
+        candidate row (VERDICT r3 'what's wrong' #3)."""
         return "doc_id" if self._postings_df is not None else "doc_ord"
 
     # ------------------------------------------------------------------ P2
@@ -620,33 +630,42 @@ class SearchEngine:
         return df
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        """Document frequency per term from the lexicon (bucket-pruned
-        disk read or the in-memory lexicon frame).
+        """Document frequency per term from the lexicon: a driver-side
+        point read of the query terms' `lexicon/term_bucket=*`
+        directories (query/pointread.py — pyarrow opens only the row
+        groups whose footer term range holds a query term; the lexicon
+        is term-sorted within each bucket, so no Spark job runs), or a
+        filter over the in-memory lexicon frame.
 
         Memoized per engine instance (absent terms cached as absent
         too): one query touches the lexicon for the same words from
         several plan builders (_exploded's df stamp, the phrase rare
-        probe, the scorer's idf), and each un-memoized call is a full
-        driver round trip — a serial ~0.2 s Spark job whose latency no
-        amount of cluster buys down. An engine is bound to one index
-        state (recompaction writes a new state and readers re-open), so
-        the cache cannot go stale mid-instance."""
+        probe, the scorer's idf). An engine is bound to one index
+        state (refresh() clears the memo when a commit publishes a new
+        one), so the cache cannot go stale mid-instance."""
         distinct = sorted(set(terms))
         if not distinct:
             return {}
         missing = [t for t in distinct if t not in self._df_cache]
         if missing:
             if self._lexicon_df is not None:
-                src = self._lexicon_df
+                rows = self._lexicon_df.filter(
+                    F.col("term").isin(missing)
+                ).select("term", "df").collect()
+                got = {r.term: int(r.df) for r in rows}
             else:
-                buckets = sorted({self._bucket(t) for t in missing})
-                src = self._read(self.lexicon_path).filter(
-                    F.col("term_bucket").isin(buckets)
-                )
-            rows = src.filter(F.col("term").isin(missing)).select(
-                "term", "df"
-            ).collect()
-            got = {r.term: int(r.df) for r in rows}
+                by_bucket: dict[int, list[str]] = {}
+                for t in missing:
+                    by_bucket.setdefault(self._bucket(t), []).append(t)
+                got = {}
+                for b, ts in sorted(by_bucket.items()):
+                    for r in self._point_read(
+                        os.path.join(self.lexicon_path, f"term_bucket={b}"),
+                        "term",
+                        ts,
+                        ["term", "df"],
+                    ):
+                        got[r["term"]] = int(r["df"])
             for t in missing:
                 self._df_cache[t] = got.get(t)  # None = absent
         return {
@@ -654,6 +673,25 @@ class SearchEngine:
             for t in distinct
             if self._df_cache[t] is not None
         }
+
+    def _point_read(
+        self, table_dir: str, key: str, keys, columns: list[str]
+    ) -> list[dict]:
+        """Rows of one index table whose `key` is in `keys`, read in the
+        driver from the row groups whose footer range can hold them
+        (query/pointread.read_rows; footers memoized per index state)."""
+        return read_rows(table_dir, key, keys, columns, self._footer_cache)
+
+    def _doc_ids(self, ords: list[int]) -> dict[int, str]:
+        """ord -> doc_id for a few ordinals: a point read of the
+        ordinal-ordered doc_map (the top-k translation, translate_topk)."""
+        rows = self._point_read(
+            os.path.join(self.index_dir, "doc_map"),
+            "doc_ord",
+            ords,
+            ["doc_ord", "doc_id"],
+        )
+        return {r["doc_ord"]: r["doc_id"] for r in rows}
 
     def _read(self, path: str) -> DataFrame:
         """Memoized `spark.read.parquet` over one index table. The
@@ -814,8 +852,8 @@ class SearchEngine:
         )
         pos = ", positions_vb binary" if with_positions else ""
         occ_dl = ", occ int, dl int" if with_occ_dl else ""
-        return self.spark.createDataFrame(
-            [], f"term string, {key}, wtf double{pos}{occ_dl}"
+        return local_frame(
+            self.spark, [], f"term string, {key}, wtf double{pos}{occ_dl}"
         )
 
     def _term_doc_set(self, term: str) -> DataFrame:
@@ -1257,7 +1295,7 @@ class SearchEngine:
         # ordinal results: point-look-up doc_map for the final <=k rows
         from apt_search_engine_spark.query.wand import translate_topk
 
-        return translate_topk(self.spark, topk, self._doc_map(), k)
+        return translate_topk(self.spark, topk, self._doc_ids, k)
 
     def _prior_by_ord(self) -> DataFrame | None:
         """The url-keyed doc_prior mapped into ordinal space:
@@ -1324,13 +1362,10 @@ class SearchEngine:
             .filter(F.col("term_bucket").isin(buckets))
             .filter(F.col("term").isin(list(term_mult)))
         )
-        doc_map = self._read(
-            os.path.join(self.index_dir, "doc_map")
-        )
         return wand_topk(
             self.spark,
             blocks,
-            doc_map,
+            self._doc_ids,
             term_mult,
             self.term_dfs(words),
             self.n_docs,
@@ -1390,7 +1425,7 @@ class SearchEngine:
         self._ensure_fresh()
         filtered, words, gate = self._filtered_plan(parser.parse(query))
         if not words:
-            return self.spark.createDataFrame([(0,)], "n_matches long")
+            return local_frame(self.spark, [(0,)], "n_matches long")
         return self._score(
             filtered, words, gate, k=0,
             dedup_by_url=dedup_by_url, count_only=True,
@@ -1427,15 +1462,15 @@ class SearchEngine:
         if key == "doc_id":
             keyval = doc_id
         else:
-            hit = (
-                self._doc_map()
-                .filter(F.col("doc_id") == doc_id)
-                .select("doc_ord")
-                .collect()
+            hit = self._point_read(
+                os.path.join(self.index_dir, "doc_map"),
+                "doc_id",
+                [doc_id],
+                ["doc_id", "doc_ord"],
             )
             if not hit:
                 return out
-            keyval = int(hit[0].doc_ord)
+            keyval = int(hit[0]["doc_ord"])
         present = sorted(set(words))
         sp = filtered.filter(F.col("term").isin(present))
         if "df" not in sp.columns:
@@ -1479,17 +1514,12 @@ class SearchEngine:
         prior = self.prior
         if self.doc_prior is not None:
             url = doc_id
-            if self.doc_meta_path is not None and os.path.isdir(
-                self.doc_meta_path
-            ):
-                m = (
-                    self._read(self.doc_meta_path)
-                    .filter(F.col("doc_id") == doc_id)
-                    .select("url")
-                    .collect()
+            if self.doc_meta_path is not None:
+                m = self._point_read(
+                    self.doc_meta_path, "doc_id", [doc_id], ["doc_id", "url"]
                 )
                 if m:
-                    url = m[0].url
+                    url = m[0]["url"]
             p = (
                 self.doc_prior.filter(F.col("url") == url)
                 .select(F.col("prior").cast("double").alias("prior"))
@@ -1870,16 +1900,16 @@ class SearchEngine:
             if w and _admit(w):
                 stems.setdefault(w, parser.stem(w))
         if not stems:
-            return self.spark.createDataFrame(
-                [], "word string, suggestion string, dist int, df long"
+            return local_frame(
+                self.spark, [], "word string, suggestion string, dist int, df long"
             )
         dfs = self.term_dfs(sorted(set(stems.values())))
         unknown = sorted(
             w for w, s in stems.items() if dfs.get(s, 0) == 0
         )
         if not unknown:
-            return self.spark.createDataFrame(
-                [], "word string, suggestion string, dist int, df long"
+            return local_frame(
+                self.spark, [], "word string, suggestion string, dist int, df long"
             )
         wl = self.spark.createDataFrame(
             [(w, stems[w]) for w in unknown], "word string, stem string"
@@ -2134,7 +2164,7 @@ class SearchEngine:
         history. Fully declarative: one lexicon scan -> TakeOrdered(k)."""
         self._ensure_fresh()
         if not prefix:
-            return self.spark.createDataFrame([], "term string, df long")
+            return local_frame(self.spark, [], "term string, df long")
         return (
             self._lexicon_src()
             .filter(F.col("term").startswith(prefix))
@@ -2158,7 +2188,7 @@ class SearchEngine:
             {w for w in parsed.query_words if w.upper() not in parser.OPERATORS}
         )
         if not words:
-            return self.spark.createDataFrame([], "facet string, n_docs long")
+            return local_frame(self.spark, [], "facet string, n_docs long")
         key = self._key()
         docs = self._exploded(words).select(key).distinct()
         if key == "doc_ord":
@@ -2271,7 +2301,7 @@ class SearchEngine:
             return topk
         from apt_search_engine_spark.query.wand import translate_topk
 
-        return translate_topk(self.spark, topk, self._doc_map(), k)
+        return translate_topk(self.spark, topk, self._doc_ids, k)
 
     def search_bm25f_df(
         self,
@@ -2390,7 +2420,7 @@ class SearchEngine:
             return topk
         from apt_search_engine_spark.query.wand import translate_topk
 
-        return translate_topk(self.spark, topk, self._doc_map(), k)
+        return translate_topk(self.spark, topk, self._doc_ids, k)
 
     def search_bm25_wand_df(
         self,
@@ -2441,13 +2471,10 @@ class SearchEngine:
             .filter(F.col("term_bucket").isin(buckets))
             .filter(F.col("term").isin(words))
         )
-        doc_map = self._read(
-            os.path.join(self.index_dir, "doc_map")
-        )
         return wand_bm25_topk(
             self.spark,
             blocks,
-            doc_map,
+            self._doc_ids,
             idfs,
             k1 + 1.0,
             k1 * (1.0 - b),
@@ -2552,31 +2579,20 @@ class SearchEngine:
                 parts.append(topk)
             else:
                 # bounded materialization (<= Q*k rows), then the same
-                # point-lookup translation as translate_topk: isin over
-                # the ordinal-ordered doc_map files gets parquet min/max
-                # row-group skipping instead of a corpus-sized map scan
+                # point-read translation as translate_topk, handed back
+                # as a driver-local relation
                 rows = topk.collect()
-                if rows:
-                    ords = sorted({int(r.doc_ord) for r in rows})
-                    id_map = {
-                        int(m.doc_ord): m.doc_id
-                        for m in self._doc_map()
-                        .filter(F.col("doc_ord").isin(ords))
-                        .collect()
-                    }
-                    parts.append(
-                        self.spark.createDataFrame(
-                            [
-                                (
-                                    r.query_id,
-                                    id_map[int(r.doc_ord)],
-                                    float(r.score),
-                                )
-                                for r in rows
-                            ],
-                            out_schema,
-                        )
+                id_map = self._doc_ids([int(r.doc_ord) for r in rows])
+                parts.append(
+                    local_frame(
+                        self.spark,
+                        [
+                            (r.query_id, id_map[int(r.doc_ord)], float(r.score))
+                            for r in rows
+                        ],
+                        out_schema,
                     )
+                )
         for qid in sorted(fallback):
             parts.append(
                 self.search_bm25_df(fallback[qid], k, k1, b).select(
@@ -2584,7 +2600,7 @@ class SearchEngine:
                 )
             )
         if not parts:
-            return self.spark.createDataFrame([], out_schema)
+            return local_frame(self.spark, [], out_schema)
         out = parts[0]
         for extra in parts[1:]:
             out = out.unionByName(extra)
@@ -2677,22 +2693,24 @@ class SearchEngine:
     def _assemble(
         self, top, snippet_words: list[str], with_snippets: bool
     ) -> list[dict]:
-        """Metadata join + snippet pick for <=k collected (doc_id, score)
-        rows — driver-side on k rows only (R9/P8)."""
-        ids = [r.doc_id for r in top]
+        """Metadata + snippet pick for <=k collected (doc_id, score)
+        rows — driver-side on k rows only (R9/P8). The doc_meta rows are
+        a point read (query/pointread.py): doc_meta files are sorted by
+        doc_id, so pyarrow opens only the row groups whose footer
+        doc_id range holds a result, and no Spark job runs."""
         meta = {}
-        # a streamed index has no doc_meta: fall back to url = doc_id
-        if (
-            ids
-            and self.doc_meta_path is not None
-            and os.path.isdir(self.doc_meta_path)
-        ):
-            meta_rows = (
-                self._read(self.doc_meta_path)
-                .filter(F.col("doc_id").isin(ids))
-                .collect()
-            )
-            meta = {r.doc_id: r for r in meta_rows}
+        # a streamed index has no doc_meta: the point read finds no
+        # rows and url falls back to doc_id
+        if top and self.doc_meta_path is not None:
+            meta = {
+                m["doc_id"]: m
+                for m in self._point_read(
+                    self.doc_meta_path,
+                    "doc_id",
+                    [r.doc_id for r in top],
+                    ["doc_id", "url", "title", "ps"],
+                )
+            }
         out = []
         for r in top:
             m = meta.get(r.doc_id)
@@ -2701,16 +2719,16 @@ class SearchEngine:
                 # the stored URL (doc_meta carries url_expr overrides —
                 # reference RankedDocument.java:3-14 returns the document's
                 # URL); doc_id is only the fallback when no metadata exists
-                "url": m.url if m else r.doc_id,
+                "url": m["url"] if m else r.doc_id,
                 "score": r.score,
-                "title": m.title if m else None,
+                "title": m["title"] if m else None,
             }
             if with_snippets:
                 d["snippet"] = generate_snippet(
-                    list(m.ps) if m and m.ps is not None else [], snippet_words
+                    (m["ps"] or []) if m else [], snippet_words
                 )
             out.append(d)
         return out
 
     def _empty_results(self) -> DataFrame:
-        return self.spark.createDataFrame([], "doc_id string, score double")
+        return local_frame(self.spark, [], RESULT_SCHEMA)

@@ -25,13 +25,15 @@ independently:
      determinism contract, SURVEY.md 7.4);
   4. the per-partition top-k survivors reduce to the global top-k via
      orderBy(score desc).limit(k) — Spark's TakeOrderedAndProject — and
-     the <=k surviving ordinals are translated to doc_ids by a POINT
-     LOOKUP: collect the k (ord, score) pairs, filter doc_map with
-     isin(ords) (parquet min/max row-group skipping on the
-     ordinal-ordered doc_map files) and stamp scores from a literal map.
-     At 10^12 docs the map is corpus-sized — the earlier join-based
-     translation broadcast the k rows but still SCANNED the map side
-     (VERDICT r3 'what's wrong' #3).
+     that collect is the query's only Spark action. The <=k surviving
+     ordinals are translated to doc_ids by a driver-side POINT READ of
+     doc_map (query/pointread.py: pyarrow opens only the row groups
+     whose footer doc_ord range holds a survivor — the map is
+     ordinal-ordered, so that is a handful of row groups even at 10^12
+     docs), and the (doc_id, score) rows go back as a driver-local
+     VALUES relation (LocalTableScan), so the caller's collect runs no
+     further job. A join-based translation would SCAN the corpus-sized
+     map (VERDICT r3 'what's wrong' #3).
 
 Pruning never changes results: a skipped slice's upper bound is below the
 partition's current kth score, so none of its docs can reach the partition
@@ -42,6 +44,7 @@ Parity with the exact path is asserted in tests/test_wand.py.
 from __future__ import annotations
 
 import heapq
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -49,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from apt_search_engine_spark.config import idf_numerator
 from apt_search_engine_spark.indexing import codec
+from apt_search_engine_spark.query.pointread import local_frame
 
 # Ordinal width of one scoring slice. 8192 ords = up to 64 full blocks per
 # term; large enough that boundary-spanning blocks are rare, small enough
@@ -56,6 +60,7 @@ from apt_search_engine_spark.indexing import codec
 SLICE_ORDS = 8192
 
 _OUT_SCHEMA = "doc_ord long, score double"
+RESULT_SCHEMA = "doc_id string, score double"
 
 
 def _live_mask(ords: np.ndarray, deleted: np.ndarray) -> np.ndarray:
@@ -69,34 +74,29 @@ def _live_mask(ords: np.ndarray, deleted: np.ndarray) -> np.ndarray:
     return deleted[pos_c] != ords
 
 
-def translate_topk(spark, topk_ords: DataFrame, doc_map: DataFrame, k: int) -> DataFrame:
-    """ord -> doc_id for a top-k result: MATERIALIZE the <=k (doc_ord,
-    score) rows (driver-side, bounded by k), then point-look-up doc_map
-    with isin — the ordinal-ordered doc_map files give parquet min/max
-    row-group skipping, so this reads a handful of row groups instead of
-    scanning the corpus-sized map (a join keyed by 10 ordinals still
-    scans the map side in full). Scores ride back as a literal map, so
-    the returned plan is join-free. Final order re-keys the tiebreak on
-    doc_id — identical to ord order (doc_map assigns ordinals in global
-    doc_id order) but explicit for readers of the plan."""
+def translate_topk(
+    spark, topk_ords: DataFrame, doc_ids: Callable, k: int
+) -> DataFrame:
+    """ord -> doc_id for a top-k result. Collects the <=k (doc_ord,
+    score) rows (the scoring plan's one Spark action), maps their
+    ordinals through `doc_ids` (a driver-side point read of doc_map:
+    list of ordinals -> {ord: doc_id}, SearchEngine._doc_ids), and
+    returns the rows as a driver-local VALUES relation in final
+    (score desc, doc_id asc) order: the returned plan is a
+    LocalTableScan with no doc_map scan and no join, and collecting it
+    runs no job. The cut at k breaks ties on ordinal, the result orders
+    them by doc_id: ordinals follow doc_id order within one build, but
+    a streamed or merged index appends later docs above every earlier
+    ordinal."""
     rows = topk_ords.orderBy(F.desc("score"), F.asc("doc_ord")).limit(k).collect()
-    if not rows:
-        return spark.createDataFrame([], "doc_id string, score double")
-    smap = F.create_map(
-        *[
-            x
-            for r in rows
-            for x in (
-                F.lit(int(r.doc_ord)).cast("bigint"),
-                F.lit(float(r.score)),
-            )
-        ]
-    )
-    return (
-        doc_map.filter(F.col("doc_ord").isin([int(r.doc_ord) for r in rows]))
-        .select("doc_id", smap[F.col("doc_ord")].alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+    ids = doc_ids([int(r.doc_ord) for r in rows])
+    out = [
+        (ids[int(r.doc_ord)], float(r.score))
+        for r in rows
+        if int(r.doc_ord) in ids
+    ]
+    out.sort(key=lambda r: (-r[1], r[0]))
+    return local_frame(spark, out, RESULT_SCHEMA)
 
 
 def _score_partition_factory(
@@ -260,7 +260,7 @@ def _score_partition_factory(
 def wand_topk(
     spark: SparkSession,
     blocks: DataFrame,
-    doc_map: DataFrame,
+    doc_ids: Callable,
     term_mult: dict[str, int],
     term_dfs: dict[str, int],
     n_docs: int,
@@ -301,7 +301,7 @@ def wand_topk(
         if t in term_dfs
     }
     if not weights:
-        return spark.createDataFrame([], "doc_id string, score double")
+        return local_frame(spark, [], RESULT_SCHEMA)
 
     sliced = blocks.filter(F.col("term").isin(list(weights))).select(
         "term",
@@ -355,7 +355,7 @@ def wand_topk(
         ),
         _OUT_SCHEMA,
     )
-    return translate_topk(spark, survivors, doc_map, k)
+    return translate_topk(spark, survivors, doc_ids, k)
 
 
 # -------------------------------------------------------------- BM25 mode
@@ -494,7 +494,7 @@ def _score_partition_bm25_factory(
 def wand_bm25_topk(
     spark: SparkSession,
     blocks: DataFrame,
-    doc_map: DataFrame,
+    doc_ids: Callable,
     idfs: dict[str, float],
     k1p1: float,
     c0: float,
@@ -509,7 +509,7 @@ def wand_bm25_topk(
     doubles (engine.search_bm25_wand_df — identical to the exact plan's
     literals, so scores match bit-for-bit)."""
     if not idfs:
-        return spark.createDataFrame([], "doc_id string, score double")
+        return local_frame(spark, [], RESULT_SCHEMA)
     sliced = blocks.filter(F.col("term").isin(list(idfs))).select(
         "term",
         "block_max_occ",
@@ -542,4 +542,4 @@ def wand_bm25_topk(
         ),
         _OUT_SCHEMA,
     )
-    return translate_topk(spark, survivors, doc_map, k)
+    return translate_topk(spark, survivors, doc_ids, k)

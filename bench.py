@@ -47,6 +47,39 @@ def _time(fn, repeat: int = 1, setup=None) -> float:
     return statistics.median(runs)
 
 
+def ladder_artifacts(repo: str, host_cpus: int) -> tuple[dict, dict]:
+    """The newest committed scaling ladder per cpu pair, labelled with
+    its round, its cpus and `host_cpus`, split into (ladders this host
+    could run, ladders that need more cpus than it has). The second
+    kind cannot have been measured on this host, so the bench reports
+    it apart from its own numbers, under `committed_artifacts`."""
+    scaling: dict[str, object] = {}
+    committed: dict[str, object] = {}
+    for pair in ("1v4", "2v8", "8v32"):
+        for rnd in ("r5", "r4", "r3", "r2"):
+            p = os.path.join(repo, f"ladder_{rnd}_{pair}.json")
+            if os.path.exists(p):
+                with open(p) as f:
+                    lad = json.load(f)
+                entry = {
+                    "round": rnd,
+                    "low_cpus": lad["low"]["cpus"],
+                    "high_cpus": lad["high"]["cpus"],
+                    "host_cpus": host_cpus,
+                    "low_turns_per_sec": lad["low"]["turns_per_sec_median"],
+                    "high_turns_per_sec": lad["high"]["turns_per_sec_median"],
+                    "efficiency": lad["scaling_efficiency"],
+                    "repeats": lad.get("repeats", 1),
+                    "artifact": os.path.basename(p),
+                }
+                if entry["high_cpus"] > host_cpus:
+                    committed[pair] = entry
+                else:
+                    scaling[pair] = entry
+                break
+    return scaling, committed
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = _sf_from_dir(sf_dir)
@@ -266,26 +299,14 @@ def main() -> None:
         # inside every bench would multiply its wall time ~20x, so this
         # block REPORTS the committed artifacts of the most recent ladder
         # run rather than re-measuring.
-        repo = os.path.dirname(os.path.abspath(__file__))
-        scaling: dict[str, object] = {}
-        for pair in ("1v4", "2v8", "8v32"):
-            for rnd in ("r5", "r4", "r3", "r2"):
-                p = os.path.join(repo, f"ladder_{rnd}_{pair}.json")
-                if os.path.exists(p):
-                    with open(p) as f:
-                        lad = json.load(f)
-                    scaling[pair] = {
-                        "low_cpus": lad["low"]["cpus"],
-                        "high_cpus": lad["high"]["cpus"],
-                        "low_turns_per_sec": lad["low"]["turns_per_sec_median"],
-                        "high_turns_per_sec": lad["high"]["turns_per_sec_median"],
-                        "efficiency": lad["scaling_efficiency"],
-                        "repeats": lad.get("repeats", 1),
-                        "artifact": os.path.basename(p),
-                    }
-                    break
+        scaling, committed = ladder_artifacts(
+            os.path.dirname(os.path.abspath(__file__)),
+            len(os.sched_getaffinity(0)),
+        )
         if scaling:
             extra["scaling"] = scaling
+        if committed:
+            extra["committed_artifacts"] = committed
 
         total = round(sum(queries.values()), 3)
         print(

@@ -14,9 +14,17 @@ should make once).
 The tests inspect the RETRIEVAL subtrees (`_phrase_filtered`,
 `_boolean_filtered`, `_exploded`) rather than `search_df`'s return value:
 the final <=k rows go through `translate_topk`, which executes the
-scoring plan to collect the surviving ordinals and returns a fresh
-doc_map point-lookup plan — by design the postings subtree is not in the
-returned frame at all (VERDICT r3 'what's wrong' #3)."""
+scoring plan to collect the surviving ordinals, translates them with a
+driver-side point read of doc_map (query/pointread.py) and returns the
+rows as a local relation — by design neither postings nor doc_map is in
+the returned frame at all (VERDICT r3 'what's wrong' #3).
+
+The same shape bounds the Spark jobs a query runs: the scoring plan's
+top-k collect is the only action (its AQE query stages run as separate
+jobs), the lexicon df, ord -> doc_id and doc_meta lookups are point
+reads, and collecting a returned frame runs no job. The job-count test
+pins those bounds per query family, and the fused-UDF test pins one
+Arrow evaluation per fused positions UDF."""
 
 from __future__ import annotations
 
@@ -128,18 +136,97 @@ def test_olap_ops_plan_shapes(spark):
 
 
 def test_translated_topk_is_a_point_lookup(engine):
-    """The frame search_df returns contains NO postings scan (the scoring
-    plan already ran) and exactly one doc_map scan with an ordinal
-    pushdown filter — the point lookup instead of a corpus-sized join."""
+    """The frame search_df returns contains NO file scan: the scoring
+    plan already ran, and the doc_map point read happened in the driver,
+    so the frame is the local relation of the k translated rows instead
+    of a corpus-sized join or a doc_map scan."""
     df = engine.search_df('"travel guide"', k=10)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    scans = [
-        ln for ln in plan.splitlines() if "FileScan parquet" in ln
+    assert "FileScan" not in plan, plan
+    assert plan.strip().startswith("LocalTableScan"), plan
+
+
+def _arrow_evals(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count(
+        "ArrowEvalPython"
+    )
+
+
+def test_fused_udfs_evaluate_once(engine):
+    """Each fused positions UDF runs as exactly ONE Arrow pass. The
+    boolean fold projects its per-segment flags and then filters on
+    them; a deterministic UDF is copied into the pushed-down filter and
+    evaluated twice over the same rows."""
+    from apt_search_engine_spark.query.engine import (
+        _near_match_udf,
+        _sloppy_match_udf,
+    )
+
+    for q in (
+        '"travel guide" AND file',
+        '"travel guide" OR "europe tips"',
+        '"travel guide" NOT europe',
+    ):
+        assert _arrow_evals(engine._boolean_filtered(parser.parse(q))) == 1, q
+    words = _phrase_words(engine, "travel guide")
+    assert _arrow_evals(engine._phrase_filtered(words)) == 1
+    assert _arrow_evals(
+        engine._proximity_filtered(words, _near_match_udf(*words, 2))
+    ) == 1
+    assert _arrow_evals(
+        engine._proximity_filtered(words, _sloppy_match_udf(words, 2))
+    ) == 1
+
+
+def _jobs(spark, label, fn):
+    """(result, number of Spark jobs `fn` ran) via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(label, label, False)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None, False)
+    return out, len(sc.statusTracker().getJobIdsForGroup(label))
+
+
+def test_query_job_counts(spark, engine):
+    """Per-query Spark job ceilings. The only action of a query is its
+    scoring top-k collect; the lexicon df, ord -> doc_id and doc_meta
+    lookups are driver-side point reads, and the returned frames are
+    local relations. The counts are the collect's AQE query stages
+    (each runs as a job): bag-of-words and BM25 plans have one
+    shuffle, prefix adds the expansion's lexicon scan, phrase and
+    boolean plans add the positions aggregate, the Q12 df window and
+    the rare-term probe broadcasts. An all-AND boolean query broadcasts
+    one more probe (the globally rarest term) than OR/NOT. Readers
+    and footers are warmed first: a long-lived engine pays that once."""
+    from apt_search_engine_spark.query.engine import SearchEngine
+
+    eng = SearchEngine(spark, index_dir=engine.index_dir)
+    eng.search("europe tips", k=10)
+    eng.search_bm25_wand_df("europe tips", k=10).collect()
+    eng.search_prefix("eur", k=10)
+    cases = [
+        ("bow", lambda: eng.search("travel guide", k=10), 2),
+        ("bm25", lambda: eng.search_bm25_df("spark query", k=10), 2),
+        ("wand", lambda: eng.search_bm25_wand_df("index query", k=10), 2),
+        ("wand_ref", lambda: eng.search_df_wand("guide tips", k=10), 2),
+        ("prefix", lambda: eng.search_prefix("tra", k=10), 3),
+        ("phrase", lambda: eng.search('"travel guide"', k=10), 6),
+        ("bool_or", lambda: eng.search('"europe tips" OR spark', k=10), 5),
+        ("bool_not", lambda: eng.search('"travel guide" NOT europe', k=10), 5),
+        ("bool_and", lambda: eng.search('"travel guide" AND file', k=10), 6),
     ]
-    assert not any("/postings" in ln for ln in scans), plan
-    dm = [ln for ln in scans if "/doc_map" in ln]
-    assert len(dm) == 1, plan
-    assert "In(doc_ord" in dm[0] or "doc_ord" in dm[0], dm[0]
+    for name, call, most in cases:
+        out, n = _jobs(spark, f"q-{name}", call)
+        assert out, name
+        assert 1 <= n <= most, (name, n)
+        if hasattr(out, "collect"):
+            rows, n = _jobs(spark, f"c-{name}", out.collect)
+            assert rows and n == 0, (name, n)
+    # an empty result is a local relation too: no job to collect it
+    empty = eng.search_bm25_df("zzzunknownzzz", k=10)
+    assert _jobs(spark, "c-empty", empty.collect) == ([], 0)
 
 
 def test_multiterm_plans_stay_jvm_side(engine):

@@ -125,13 +125,12 @@ def test_prior_wand_small_slices_pruning(spark, index_dir, prior_engine):
         .filter(F.col("term_bucket").isin(buckets))
         .filter(F.col("term").isin(list(term_mult)))
     )
-    doc_map = spark.read.parquet(os.path.join(index_dir, "doc_map"))
     wand = [
         (r.doc_id, round(r.score, 9))
         for r in wand_topk(
             spark,
             blocks,
-            doc_map,
+            prior_engine._doc_ids,
             term_mult,
             prior_engine.term_dfs(list(term_mult)),
             prior_engine.n_docs,

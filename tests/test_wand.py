@@ -49,13 +49,12 @@ def test_wand_small_slices_and_spanning_blocks(spark, engine, index_dir):
         .filter(F.col("term_bucket").isin(buckets))
         .filter(F.col("term").isin(list(term_mult)))
     )
-    doc_map = spark.read.parquet(os.path.join(index_dir, "doc_map"))
     wand = [
         (r.doc_id, r.score)
         for r in wand_topk(
             spark,
             blocks,
-            doc_map,
+            engine._doc_ids,
             term_mult,
             engine.term_dfs(list(term_mult)),
             engine.n_docs,
@@ -101,19 +100,22 @@ def test_wand_plan_has_no_row_python(engine):
     assert "BatchEvalPython" not in plan  # Arrow-batched mapInPandas only
 
 
+def _assert_local_result(df):
+    """The returned top-k frame is the driver-local relation of the <=k
+    translated rows: no doc_map (or any other) scan, no join."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    assert "FileScan" not in plan and "doc_map" not in plan, plan
+    assert "Join" not in plan, plan
+
+
 def test_wand_doc_map_translation_is_point_lookup(engine):
     """VERDICT r3 'what's wrong' #3: the final ord->doc_id translation
     must not JOIN against the corpus-sized doc_map (the k-row side
-    broadcasts but the map side scans). The returned plan must be a
-    filtered doc_map read (isin -> parquet In pushdown on the
-    ordinal-ordered files) with scores stamped from a literal map — no
-    join node at all."""
-    df = engine.search_df_wand("travel guide", 10)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "doc_map" in plan
-    assert "Join" not in plan
-    # the ordinal filter reaches the parquet scan
-    assert "PushedFilters: [In(doc_ord" in plan, plan
+    broadcasts but the map side scans). The ordinals are point-read in
+    the driver (footer row-group pruning, query/pointread.py) and the
+    returned plan is the local relation of the k translated rows."""
+    _assert_local_result(engine.search_df_wand("travel guide", 10))
 
 
 def test_exact_path_translation_is_point_lookup(engine):
@@ -123,12 +125,82 @@ def test_exact_path_translation_is_point_lookup(engine):
         engine.search_df("travel guide", 10),
         engine.search_bm25_df("travel guide", 10),
     ):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "doc_map" in plan
-        assert "Join" not in plan
-        assert "PushedFilters: [In(doc_ord" in plan, plan
+        _assert_local_result(df)
 
 
+def test_point_read_opens_only_row_groups_holding_a_key(
+    tmp_path, monkeypatch
+):
+    """On an ordinal-ordered doc_map written with several row groups per
+    file, the point read opens exactly the row groups whose footer
+    doc_ord range holds a requested ordinal, and reads footers once
+    per memo."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from apt_search_engine_spark.query import pointread
+
+    d = tmp_path / "doc_map"
+    d.mkdir()
+    for f in range(2):  # two files x 4 row groups of 25 ordinals
+        ords = list(range(f * 100, f * 100 + 100))
+        pq.write_table(
+            pa.table({"doc_ord": ords, "doc_id": [f"d{o:04d}" for o in ords]}),
+            d / f"part-{f:05d}.parquet",
+            row_group_size=25,
+        )
+    (d / "_SUCCESS").write_text("")
+    opened, footer_reads = [], []
+    real_file, real_meta = pq.ParquetFile, pq.read_metadata
+
+    class SpyFile(real_file):
+        def __init__(self, source, *a, **kw):
+            super().__init__(source, *a, **kw)
+            self.spy_name = os.path.basename(source)
+
+        def read_row_groups(self, row_groups, *a, **kw):
+            opened.append((self.spy_name, sorted(row_groups)))
+            return super().read_row_groups(row_groups, *a, **kw)
+
+    def spy_meta(path, *a, **kw):
+        footer_reads.append(os.path.basename(path))
+        return real_meta(path, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", SpyFile)
+    monkeypatch.setattr(pq, "read_metadata", spy_meta)
+    footers: dict = {}
+    rows = pointread.read_rows(
+        str(d), "doc_ord", [3, 160, 199, 400], ["doc_ord", "doc_id"], footers
+    )
+    assert sorted((r["doc_ord"], r["doc_id"]) for r in rows) == [
+        (3, "d0003"), (160, "d0160"), (199, "d0199"),
+    ]
+    # ord 3 -> file 0 group 0; 160 -> file 1 group 2; 199 -> file 1
+    # group 3; 400 is past every range and opens nothing
+    assert sorted(opened) == [
+        ("part-00000.parquet", [0]), ("part-00001.parquet", [2, 3]),
+    ]
+    assert sorted(footer_reads) == ["part-00000.parquet", "part-00001.parquet"]
+    pointread.read_rows(str(d), "doc_ord", [50], ["doc_ord"], footers)
+    assert len(footer_reads) == 2  # memoized: no second footer read
+    assert opened[-1] == ("part-00000.parquet", [2])
+
+
+def test_translated_doc_id_round_trips_quote_and_backslash(spark):
+    """doc_ids reach Spark through the local relation's SQL text; a
+    quote, a backslash and a `${...}` must come back unchanged, in
+    (score desc, doc_id asc) order, with scores bit-identical."""
+    from apt_search_engine_spark.query.wand import translate_topk
+
+    ids = {3: "conv'7#\\01", 5: 'a"b\\', 9: "x${y}"}
+    ords = spark.createDataFrame(
+        [(3, 0.1 + 0.2), (5, 2.5), (9, 0.1 + 0.2), (11, 1e-300)],
+        "doc_ord long, score double",
+    )
+    got = translate_topk(spark, ords, lambda o: {i: ids[i] for i in o if i in ids}, 3)
+    assert [(r.doc_id, r.score) for r in got.collect()] == [
+        ('a"b\\', 2.5), ("conv'7#\\01", 0.1 + 0.2), ("x${y}", 0.1 + 0.2),
+    ]
 def test_phrase_semi_join_precedes_positions_aggregate(engine):
     """VERDICT r3 'what's wrong' #2: the phrase candidate aggregate must
     only see docs containing the RAREST term — i.e. the optimized plan
