@@ -61,6 +61,18 @@ N_TERM_BUCKETS = int(os.environ.get("APTSE_TERM_BUCKETS", "32"))
 # unbounded row (a head term at 10^12 turns is ~10^11 postings).
 MAX_POSTINGS_PER_ROW = int(os.environ.get("APTSE_MAX_POSTINGS_PER_ROW", "32768"))
 
+# Candidate bound of the phrase / boolean positions aggregate
+# (query/engine.py SearchEngine._bounded). Before the per-doc aggregate,
+# a segment's postings may be semi-joined against the docs of its rarest
+# term. The lexicon dfs the driver already holds decide: no bound when
+# the bound is sure to cut fewer than BOUND_MIN_CUT_ROWS posting rows net
+# of its probe (sum over the other terms of df(t) - df(rarest), minus
+# df(rarest)), since a head-term phrase keeps nearly every row and the
+# probe scan and its broadcast job would be pure cost; the semi-join
+# otherwise. Set by measurement at local[4] on the 101k-doc index of
+# gen_corpus_spark(spark, 4000, seed=1) (CHANGES.md).
+BOUND_MIN_CUT_ROWS = 30_000
+
 # Docs per compressed posting block (block-max WAND granularity).
 POSTING_BLOCK_SIZE = 128
 

@@ -53,6 +53,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from apt_search_engine_spark.query.pointread import sql_in
+
 TOMBSTONES_DIRNAME = "tombstones"
 TOMBSTONES_MARKER = "tombstones.json"
 
@@ -232,8 +234,9 @@ def purge_deleted(
         if not os.path.isdir(live_dir):
             return None
         new_dir = os.path.join(index_dir, f"{name}__new_{uuid.uuid4().hex[:6]}")
-        spark.read.parquet(live_dir).filter(
-            ~F.col(col).isin(dead)
+        # one SQL NOT IN text: Column.isin pays a py4j call per id
+        spark.read.parquet(live_dir).where(
+            f"NOT ({sql_in(col, dead)})"
         ).write.mode("overwrite").parquet(new_dir)
         return new_dir
 

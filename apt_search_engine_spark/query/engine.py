@@ -11,8 +11,14 @@ driver parses the query (pure Python, tiny) and builds ONE DataFrame plan:
   -> score expression (R1-R4)               tf * floor(6000/df) * sum(tag
                                             weights) summed per doc in
                                             ascending term order
-  -> TakeOrderedAndProject (R5)             orderBy(score desc, doc_id).limit(k)
-  -> metadata join + snippets on k rows (S9/R9)
+  -> TakeOrderedAndProject (R5)             one orderBy(score desc,
+                                            doc_ord).limit(k) collect
+                                            (wand.translate_topk)
+  -> metadata point read + snippets on k rows (S9/R9)
+
+Each plan is built from a few `where`/`selectExpr` steps over SQL-text
+expressions (literals via query/pointread._sql_lit), not chains of
+withColumn over Column trees: the JVM parses each step in one call.
 
 Faithful reference semantics, verified against tests/oracle.py:
   - df used in scoring is the size of the term's doc-map AT RANKING TIME
@@ -20,7 +26,8 @@ Faithful reference semantics, verified against tests/oracle.py:
     candidate count for phrase/boolean queries (quirk Q12). Implemented as
     count() over Window.partitionBy(term) on the final filtered postings.
   - phrase ranking iterates docs of the FIRST scoring word only (quirk Q7,
-    Ranker.java:303) — a semi join against that term's filtered docs.
+    Ranker.java:303) — a max(term = gate) flag computed in the scorer's
+    per-doc aggregate and filtered after it.
   - boolean structure affects the candidate set, not the scoring word list
     (quirk Q8, Ranker.java:409-424); duplicate scoring words contribute
     once per occurrence (Ranker.java:311).
@@ -40,6 +47,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from apt_search_engine_spark import config
 from apt_search_engine_spark.config import (
     DEFAULT_MAX_EXPANSIONS,
     DEFAULT_MLT_MAX_TERMS,
@@ -48,7 +56,12 @@ from apt_search_engine_spark.config import (
     idf_numerator,
 )
 from apt_search_engine_spark.query import parser
-from apt_search_engine_spark.query.pointread import local_frame, read_rows
+from apt_search_engine_spark.query.pointread import (
+    _sql_lit,
+    local_frame,
+    read_rows,
+    sql_in,
+)
 from apt_search_engine_spark.query.wand import RESULT_SCHEMA
 from apt_search_engine_spark.query.snippets import generate_snippet
 
@@ -58,10 +71,6 @@ from apt_search_engine_spark.query.snippets import generate_snippet
 # to the reference's left fold (exact binary fractions; build.py _WTF_EXPR).
 # The reference's empty-tags -> one 0.5 weight branch is unreachable (every
 # kept posting has >= 1 position, quirk Q6) and therefore not stored.
-
-
-def _esc(term: str) -> str:
-    return term.replace("\\", "\\\\").replace("'", "\\'")
 
 
 def _phrase_match_udf(terms: list[str]):
@@ -555,29 +564,36 @@ class SearchEngine:
         (term, <key>, wtf[, positions_vb][, occ, dl][, df]) rows — <key>
         per self._key(). Only what the caller's plan consumes is zipped
         and exploded, so parquet column pruning reaches the scan: the
-        normal scoring path reads (term, key, wtf) and nothing else.
-        `with_df` carries the build-time document frequency stamped on
-        every segment row — for the normal path this replaces a
-        query-time Exchange+Sort+Window recount (same value: the
-        filtered-df quirk Q12 only diverges on phrase/boolean paths,
+        normal scoring path reads (term, key, wtf inputs) and nothing
+        else. `with_df` carries the build-time document frequency as a
+        literal map over the lexicon dfs — for the normal path this
+        replaces a query-time Exchange+Sort+Window recount (same value:
+        the filtered-df quirk Q12 only diverges on phrase/boolean paths,
         which recount). `with_occ_dl` adds the stored per-posting raw
         occurrence count and analyzer-stamped doc length (the BM25
         inputs, read straight off the pruned segments — NO doc_len
         join). `with_positions` adds the varbyte-encoded positions_vb
-        (the phrase path decodes it after candidate bounding)."""
+        (the phrase path decodes it after candidate bounding).
+
+        Plan shape: one `where` (term_bucket and term predicates, pushed
+        to the scan) and one `selectExpr` whose `inline(arrays_zip(...))`
+        explodes and names every output column at once; tombstones add
+        one more `where`. Literals are SQL text (query/pointread.py
+        _sql_lit), so building the plan costs a few JVM calls whatever
+        the number of terms."""
         distinct = sorted(set(terms))
         if not distinct:
             return self._empty_postings(
                 with_positions=with_positions, with_occ_dl=with_occ_dl
             )
         if self._postings_df is not None:
-            src = self._postings_df
+            src = self._postings_df.where(sql_in("term", distinct))
         else:
             buckets = sorted({self._bucket(t) for t in distinct})
-            src = self._read(self.postings_path).filter(
-                F.col("term_bucket").isin(buckets)
+            src = self._read(self.postings_path).where(
+                f"{sql_in('term_bucket', buckets)} AND "
+                f"{sql_in('term', distinct)}"
             )
-        src = src.filter(F.col("term").isin(distinct))
         # wtf is derived, not stored (layout v10): one JVM transform over
         # the zipped small-int arrays of the pruned segments — identical
         # float64 arithmetic to the analyzer (build.WTFS_FROM_SEGMENT_EXPR
@@ -586,48 +602,39 @@ class SearchEngine:
             WTFS_FROM_SEGMENT_EXPR,
         )
 
-        src = src.withColumn("wtfs", F.expr(WTFS_FROM_SEGMENT_EXPR))
         key = self._key()
-        key_plural = "doc_ids" if key == "doc_id" else "doc_ords"
-        zip_cols = [key_plural, "wtfs"]
-        out_cols = [
-            F.col(f"p.{key_plural}").alias(key),
-            F.col("p.wtfs").alias("wtf"),
-        ]
+        zips = {
+            key: "doc_ids" if key == "doc_id" else "doc_ords",
+            "wtf": WTFS_FROM_SEGMENT_EXPR,
+        }
         if with_positions:
-            zip_cols.append("positions_vb")
-            out_cols.append(F.col("p.positions_vb").alias("positions_vb"))
+            zips["positions_vb"] = "positions_vb"
         if with_occ_dl:
-            zip_cols += ["occs", "dls"]
-            out_cols += [
-                F.col("p.occs").alias("occ"),
-                F.col("p.dls").alias("dl"),
-            ]
+            zips["occ"] = "occs"
+            zips["dl"] = "dls"
         if with_field is not None:
-            fcol = self._FIELD_COLS[with_field]
-            zip_cols.append(fcol)
-            out_cols.append(F.col(f"p.{fcol}").alias("n_field"))
+            zips["n_field"] = self._FIELD_COLS[with_field]
         if with_all_fields:
             for name, fcol in self._FIELD_COLS.items():
-                zip_cols.append(fcol)
-                out_cols.append(F.col(f"p.{fcol}").alias(f"n_{name}"))
-        df = src.select(
-            "term", F.explode(F.arrays_zip(*zip_cols)).alias("p")
-        ).select("term", *out_cols)
-        df = self._filter_deleted(df, key)
+                zips[f"n_{name}"] = fcol
+        cols = ["term"]
         if with_df:
             # lexicon lookup is a driver-side read of a few pruned rows;
-            # stamping df as a literal CASE map keeps the distributed plan
+            # stamping df as a literal map keeps the distributed plan
             # join-free (every indexed term is in the lexicon by
             # construction, so the map is total over matched rows)
             dfs = self.term_dfs(distinct)
             if not dfs:
                 return self._empty_postings()
-            mapping = F.create_map(
-                *[F.lit(x) for t, d in sorted(dfs.items()) for x in (t, d)]
+            pairs = ", ".join(
+                f"{_sql_lit(t)}, {_sql_lit(d)}" for t, d in sorted(dfs.items())
             )
-            df = df.withColumn("df", mapping[F.col("term")])
-        return df
+            cols.append(f"map({pairs})[term] AS df")
+        cols.append(
+            f"inline(arrays_zip({', '.join(zips.values())}))"
+            f" AS ({', '.join(zips)})"
+        )
+        return self._filter_deleted(src.selectExpr(*cols), key)
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         """Document frequency per term from the lexicon: a driver-side
@@ -809,11 +816,14 @@ class SearchEngine:
 
     def _filter_deleted(self, df: DataFrame, col: str) -> DataFrame:
         """Drop rows whose `col` is a deleted doc key — applied to the
-        candidate sources (_exploded, _term_doc_set) so every exact plan
-        (normal/phrase/boolean, reference and BM25 scorers, batch mode)
-        excludes tombstoned docs before scoring. Stats intentionally stay
-        stale (module semantics, indexing/deletes.py). Small sets inline
-        as an isin literal (no join, stays in codegen); driver-sized
+        candidate source (_exploded) so every exact plan (normal/phrase/
+        boolean, reference and BM25 scorers, batch mode) excludes
+        tombstoned docs before scoring; the bound probe (_term_doc_set)
+        relies on the side it bounds being filtered already. Stats
+        intentionally stay stale (module semantics, indexing/deletes.py).
+        Small sets inline
+        as one SQL NOT IN literal list (no join, stays in codegen, one
+        JVM parse however many ids); driver-sized
         sets become a broadcast anti-join; past DELETED_COLLECT_MAX the
         tombstones never leave the cluster — a plain anti-join against
         the tombstone table (AQE picks the join strategy)."""
@@ -827,7 +837,7 @@ class SearchEngine:
             )
         items = [k.item() if hasattr(k, "item") else k for k in keys]
         if len(items) <= 1024:
-            return df.filter(~F.col(col).isin(items))
+            return df.where(f"NOT ({sql_in(col, items)})")
         schema = (
             f"{col} string" if isinstance(items[0], str) else f"{col} long"
         )
@@ -859,46 +869,57 @@ class SearchEngine:
     def _term_doc_set(self, term: str) -> DataFrame:
         """Narrow doc-key set of ONE term: reads only (term, doc ords)
         off the pruned segments — no wtf derivation, no positions — so
-        the rare-doc probe side of the phrase semi-join costs a two-
-        column parquet read instead of the full posting payload."""
+        the semi-join side of a candidate bound (_bounded) costs a two-
+        column parquet read instead of the full posting payload. It
+        only bounds: the bounded side already dropped tombstoned docs."""
         key = self._key()
         plural = "doc_ids" if key == "doc_id" else "doc_ords"
         if self._postings_df is not None:
-            src = self._postings_df
+            src = self._postings_df.where(f"term = {_sql_lit(term)}")
         else:
-            src = self._read(self.postings_path).filter(
-                F.col("term_bucket") == self._bucket(term)
+            src = self._read(self.postings_path).where(
+                f"term_bucket = {self._bucket(term)} AND "
+                f"term = {_sql_lit(term)}"
             )
-        return self._filter_deleted(
-            src.filter(F.col("term") == term).select(
-                F.explode(F.col(plural)).alias(key)
-            ),
-            key,
-        )
+        return src.selectExpr(f"explode({plural}) AS {key}")
+
+    def _bounded(
+        self, ex: DataFrame, terms: list[str], dfs: dict[str, int],
+        rare: str | None = None,
+    ) -> DataFrame:
+        """Restrict the exploded postings `ex` of `terms` to docs holding
+        `rare` (default: the rarest of `terms`) before the per-doc
+        positions aggregate, when the lexicon dfs say the bound pays
+        (config.BOUND_MIN_CUT_ROWS): a broadcast semi-join against
+        `rare`'s narrow doc set (_term_doc_set). No bound when it is sure
+        to cut fewer than BOUND_MIN_CUT_ROWS rows net of its probe: the
+        sum over the other terms of df(t) - df(rare) (rows of docs that
+        cannot hold `rare`), minus df(rare) (the rows the probe reads).
+        A head-term phrase keeps nearly every row, and a bound would only
+        add a probe scan and its broadcast job.
+
+        The bound only drops rows of docs that lack `rare` and so cannot
+        match, so results never depend on the choice."""
+        if rare is None:
+            rare = min(terms, key=lambda t: (dfs[t], t))
+        # rows the bound is sure to remove, net of the rows its probe reads
+        cut = sum(
+            max(dfs[t] - dfs[rare], 0) for t in terms if t != rare
+        ) - dfs[rare]
+        if cut < config.BOUND_MIN_CUT_ROWS:
+            return ex
+        return ex.join(self._term_doc_set(rare), self._key(), "left_semi")
 
     # -------------------------------------------------------------- P4+P5
     def _phrase_filtered(
         self, terms: list[str], with_occ_dl: bool = False
     ) -> DataFrame:
         """handlePhrase (QueryProcessor.java:130-173): returns the exploded
-        postings of `terms` restricted to docs containing the exact phrase.
-
-        Scale shape (VERDICT r3 'what's wrong' #2 + the r4 single-scan
-        restructure): the positions aggregate only sees docs that contain
-        the RAREST phrase term — the lexicon dfs (a driver-side pruned
-        read the scorer needs anyway) pick it, and every term's postings
-        are semi-joined against its NARROW doc set (_term_doc_set: a
-        two-column read) BEFORE the groupBy, so a head term's full
-        posting list never crosses the aggregate shuffle just because it
-        appears in a phrase with a rare term. The fat pruned scan
-        (positions + wtf inputs) appears in the plan exactly ONCE: all
-        payload columns ride THROUGH the per-doc aggregate as collected
-        structs, the P4/P5 filters run on the aggregated rows, and the
-        survivors re-explode — the previous shape referenced the scan
-        subtree three times (rare-doc probe, adjacency aggregate, final
-        semi-join) and Spark recomputed it each time. A term absent
-        from the lexicon empties the intersection outright (P4 semantics:
-        no doc can contain all terms)."""
+        postings of `terms` restricted to docs containing the exact phrase
+        (the shared _proximity_filtered shape with the fused adjacency
+        predicate). A term absent from the lexicon empties the
+        intersection outright (P4 semantics: no doc can contain all
+        terms)."""
         return self._proximity_filtered(
             terms, _phrase_match_udf(terms), with_occ_dl=with_occ_dl
         )
@@ -906,10 +927,24 @@ class SearchEngine:
     def _proximity_filtered(
         self, terms: list[str], match_udf, with_occ_dl: bool = False
     ) -> DataFrame:
-        """Shared P4+positions machinery: candidate-bounded single-scan
-        aggregate of `terms`' postings, filtered by `match_udf` (the
-        fused Arrow positions predicate — exact adjacency for phrases,
-        window proximity for NEAR), survivors re-exploded."""
+        """Shared P4+positions machinery: the candidate-bounded single
+        scan of `terms`' postings, aggregated per doc, filtered by
+        `match_udf` (the fused Arrow positions predicate — exact
+        adjacency for phrases, window proximity for NEAR, in-order
+        chains for sloppy phrases), survivors re-exploded.
+
+        Plan shape (r4 single-scan restructure): the fat pruned scan
+        (positions + wtf inputs) appears in the plan exactly ONCE. All
+        payload columns ride THROUGH the per-doc aggregate as collected
+        structs, the P4 intersection and the positions predicate run on
+        the aggregated rows, and the survivors re-explode. P4 is
+        `size(array_distinct(terms of the doc)) = n` on the collected
+        list, not a countDistinct, which Spark plans as a two-level
+        aggregate with its own exchange. When the lexicon dfs say a
+        bound pays (_bounded), the rows are cut to the rarest term's
+        docs BELOW the aggregate, so a head term's full posting list
+        never crosses the aggregate shuffle just because it shares a
+        phrase with a rare term."""
         distinct = sorted(set(terms))
         if not terms:
             return self._empty_postings(with_occ_dl=with_occ_dl)
@@ -921,21 +956,10 @@ class SearchEngine:
             distinct, with_occ_dl=with_occ_dl, with_positions=True
         )
         if len(distinct) > 1:
-            rarest = min(distinct, key=lambda t: (dfs[t], t))
-            ex = ex.join(self._term_doc_set(rarest), key, "left_semi")
-        payload = ["term", "positions_vb", "wtf"] + (
-            ["occ", "dl"] if with_occ_dl else []
-        )
-        per_doc = (
-            ex.groupBy(key)
-            .agg(
-                F.collect_list(F.struct(*payload)).alias("ps"),
-                F.countDistinct("term").alias("nt"),
-            )
-            .filter(F.col("nt") == len(distinct))  # P4 intersection
-        )
-        # P5 adjacency as ONE Arrow pass over the aggregated rows
-        # (decode + index-shifted intersection fused): positions stay
+            ex = self._bounded(ex, distinct, dfs)
+        extra = ", occ, dl" if with_occ_dl else ""
+        # P5 as ONE Arrow pass over the aggregated rows (decode +
+        # index-shifted intersection fused): positions stay
         # delta+varbyte binary through the shuffle (smaller than decoded
         # array<int>), the whole batch decodes in one vectorized codec
         # call, and the per-offset intersection is a sorted searchsorted
@@ -943,24 +967,27 @@ class SearchEngine:
         # separate pre-shuffle decode stage, no Catalyst
         # map_from_entries/array_intersect fold (that chain cost ~2x
         # this shape's wall on head-term phrases at bench scale).
-        matched = per_doc.filter(
-            match_udf(
-                F.expr("transform(ps, x -> x.term)"),
-                F.expr("transform(ps, x -> x.positions_vb)"),
+        matched = (
+            ex.groupBy(key)
+            .agg(F.expr(
+                f"collect_list(struct(term, positions_vb, wtf{extra})) AS ps"
+            ))
+            .where(
+                F.expr(
+                    "size(array_distinct(transform(ps, x -> x.term))) = "
+                    f"{len(distinct)}"
+                )
+                & match_udf(
+                    F.expr("transform(ps, x -> x.term)"),
+                    F.expr("transform(ps, x -> x.positions_vb)"),
+                )
             )
         )
-        out_cols = [
-            F.col("p.term").alias("term"),
-            F.col(key),
-            F.col("p.wtf").alias("wtf"),
-        ]
-        if with_occ_dl:
-            out_cols += [
-                F.col("p.occ").alias("occ"),
-                F.col("p.dl").alias("dl"),
-            ]
-        return matched.select(key, F.explode("ps").alias("p")).select(
-            *out_cols
+        out = "x.term AS term, x.wtf AS wtf" + (
+            ", x.occ AS occ, x.dl AS dl" if with_occ_dl else ""
+        )
+        return matched.selectExpr(
+            key, f"inline(transform(ps, x -> struct({out})))"
         )
 
     # ----------------------------------------------------------------- P7
@@ -970,136 +997,115 @@ class SearchEngine:
         """handlePhraseWithBoolean (QueryProcessor.java:202-281): evaluate
         segments, fold doc-id sets left-to-right, filter each segment's
         postings to the merged set. Later segments overwrite same-term
-        entries (reference map-put order)."""
+        entries (reference map-put order).
+
+        Plan shape: each segment is ONE pruned scan of its exploded
+        postings (phrase segments carry positions; bare segments a null
+        positions field), candidate-bounded where the lexicon dfs say a
+        bound pays (_bounded): a phrase segment by its own rarest term,
+        and under an all-AND query every segment by the globally rarest
+        query term — one bound per segment, never two. The segments
+        union into ONE per-doc aggregate, ONE fused Arrow UDF evaluates
+        every segment's match, and the left-fold set algebra plus the
+        owner-segment restriction are SQL expressions over its flags."""
         key = self._key()
         segments = [p for p in parsed.segments if not parser.is_operator(p)]
         operators = parser.extract_operators(parsed.segments)
 
-        # Each segment becomes its BOUNDED exploded postings (phrase
-        # segments carry positions and are semi-joined by their own
-        # rarest term, exactly _proximity_filtered's pre-aggregate
-        # shape; bare segments carry a null positions column) — the
-        # per-segment aggregates and Arrow filter stages of the r4 path
-        # are FUSED into the one fold aggregate + one fold UDF below.
-        seg_postings: list[DataFrame] = []
         seg_terms: list[list[str]] = []   # sorted distinct, owner calc
         seg_specs: list[list[str]] = []   # ordered w/ repeats, fold UDF
-        null_pos = F.lit(None).cast("binary").alias("positions_vb")
+        seg_phrase: list[bool] = []
         for part in segments:
             if part.startswith('"') and part.endswith('"'):
                 toks = [parser.stem(w) for w in parser.tokenize(part[1:-1])]
-                distinct = sorted(set(toks))
-                dfs = self.term_dfs(distinct)
-                if not toks or any(t not in dfs for t in distinct):
-                    # P4: a phrase with an unindexed term matches nothing
-                    ex = self._empty_postings(
-                        with_positions=True, with_occ_dl=with_occ_dl
-                    )
-                else:
-                    ex = self._exploded(
-                        distinct,
-                        with_occ_dl=with_occ_dl,
-                        with_positions=True,
-                    )
-                    if len(distinct) > 1:
-                        rare = min(distinct, key=lambda t: (dfs[t], t))
-                        ex = ex.join(
-                            self._term_doc_set(rare), key, "left_semi"
-                        )
-                seg_postings.append(ex)
-                seg_terms.append(distinct)
-                seg_specs.append(toks)
+                seg_phrase.append(True)
             else:
-                term = parser.stem(part)
-                ex = self._exploded([term], with_occ_dl=with_occ_dl)
-                seg_postings.append(ex.withColumn("positions_vb", null_pos))
-                seg_terms.append([term])
-                seg_specs.append([term])
-
-        if not seg_postings:
+                toks = [parser.stem(part)]
+                seg_phrase.append(False)
+            seg_terms.append(sorted(set(toks)))
+            seg_specs.append(toks)
+        if not segments:
             return self._empty_postings(with_occ_dl=with_occ_dl)
+        all_terms = sorted({t for ts in seg_terms for t in ts})
+        dfs = self.term_dfs(all_terms)
 
         # All-AND candidate bound (r5): when every operator is AND, the
         # merged set can only contain docs holding the GLOBALLY rarest
-        # query term, so every segment not containing it is semi-joined
-        # against that term's narrow doc set BEFORE the fold — a bare
-        # head-term segment ("rare phrase" AND the) otherwise ships its
-        # full posting list through the fold exchange at corpus scale.
-        # Presence flags over bounded segments decide the same kept set:
-        # a doc lacking the rarest term lacks its segment, so the AND
-        # fold drops it regardless; postings of kept docs are untouched
-        # (the semi join filters docs, never rows within a doc).
-        all_terms = sorted({t for ts in seg_terms for t in ts})
-        if (
-            len(seg_postings) > 1
-            and all_terms  # stopword-only segments contribute no terms
-            and operators
-            and all(op == "AND" for op in operators[: len(seg_postings) - 1])
-        ):
-            dfs = self.term_dfs(all_terms)
+        # query term, so every segment is bounded by that term (for a
+        # phrase segment it is at least as rare as its own rarest). A
+        # doc lacking it fails the AND fold regardless, and the bound
+        # filters docs, never rows within a doc, so kept docs score the
+        # same postings.
+        all_and = (
+            len(segments) > 1
+            and bool(all_terms)  # stopword-only segments add no terms
+            and bool(operators)
+            and all(op == "AND" for op in operators[: len(segments) - 1])
+        )
+        rare = None
+        if all_and:
             if not all(t in dfs for t in all_terms):
                 # some AND-required term is unindexed: intersection empty
                 return self._empty_postings(with_occ_dl=with_occ_dl)
-            rarest = min(all_terms, key=lambda t: (dfs[t], t))
-            probe = self._term_doc_set(rarest)
-            for i, terms in enumerate(seg_terms):
-                if rarest not in terms:
-                    seg_postings[i] = seg_postings[i].join(
-                        probe, key, "left_semi"
-                    )
+            rare = min(all_terms, key=lambda t: (dfs[t], t))
 
-        # Single-exchange, single-Arrow-pass fold (r5): union the
-        # segments' tagged postings and aggregate ONCE by doc key; ONE
-        # fused UDF (_boolean_fold_udf) then evaluates every segment's
-        # match — presence for bare segments, the positions
-        # shift-intersection for phrase segments — and the reference's
-        # left-fold set algebra (AND=&&, OR=||, NOT=&&!) in the same
-        # batch. The r4 shape paid one aggregate exchange + one Arrow
-        # filter stage PER phrase segment plus a fold exchange; this
-        # pays one exchange and one Python stage for the whole query
-        # (handlePhraseWithBoolean, QueryProcessor.java:202-281).
-        payload = ["term", "wtf", "positions_vb"] + (
-            ["occ", "dl"] if with_occ_dl else []
-        )
-        tagged = [
-            sp.select(
-                F.col(key),
-                F.lit(i).alias("seg"),
-                F.struct(*payload).alias("p"),
+        extra = ", occ, dl" if with_occ_dl else ""
+        tagged = []
+        for i, (toks, terms, phrase) in enumerate(
+            zip(seg_specs, seg_terms, seg_phrase)
+        ):
+            if phrase and (not toks or any(t not in dfs for t in terms)):
+                # P4: a phrase with an unindexed term matches nothing
+                ex = self._empty_postings(
+                    with_positions=True, with_occ_dl=with_occ_dl
+                )
+            else:
+                ex = self._exploded(
+                    terms, with_occ_dl=with_occ_dl, with_positions=phrase
+                )
+                if rare is not None:
+                    ex = self._bounded(ex, terms, dfs, rare)
+                elif phrase and len(terms) > 1:
+                    ex = self._bounded(ex, terms, dfs)
+            pos = "positions_vb" if phrase else (
+                "CAST(NULL AS BINARY) AS positions_vb"
             )
-            for i, sp in enumerate(seg_postings)
-        ]
+            tagged.append(ex.selectExpr(
+                key, f"{i} AS seg", f"struct(term, wtf, {pos}{extra}) AS p"
+            ))
         union = tagged[0]
         for t in tagged[1:]:
             union = union.unionByName(t)
-        per_doc = union.groupBy(key).agg(
-            F.collect_list(F.struct("seg", "p")).alias("ps")
-        )
+
+        # Single-exchange, single-Arrow-pass fold (r5): ONE fused UDF
+        # (_boolean_fold_udf) evaluates every segment's match — presence
+        # for bare segments, the positions shift-intersection for phrase
+        # segments — over the one per-doc aggregate of all segments
         fold = _boolean_fold_udf(seg_specs)
-        per_doc = per_doc.withColumn(
-            "segm",
+        per_doc = union.groupBy(key).agg(
+            F.expr("collect_list(struct(seg, p)) AS ps")
+        )
+        per_doc = per_doc.select(
+            key,
+            "ps",
             fold(
                 F.expr("transform(ps, x -> x.seg)"),
                 F.expr("transform(ps, x -> x.p.term)"),
                 F.expr("transform(ps, x -> x.p.positions_vb)"),
-            ),
+            ).alias("segm"),
         )
         # P7: the reference's left-fold set algebra over the per-segment
         # match flags decides membership (AND=&&, OR=||, NOT=&&!)
-        pres = [
-            F.element_at(F.col("segm"), i + 1)
-            for i in range(len(seg_postings))
-        ]
-        keep = pres[0]
-        for i in range(1, len(seg_postings)):
+        keep = "element_at(segm, 1)"
+        for i in range(1, len(segments)):
             op = operators[i - 1] if i - 1 < len(operators) else None
+            flag = f"element_at(segm, {i + 1})"
             if op == "AND":
-                keep = keep & pres[i]
+                keep = f"({keep} AND {flag})"
             elif op == "OR":
-                keep = keep | pres[i]
+                keep = f"({keep} OR {flag})"
             elif op == "NOT":
-                keep = keep & ~pres[i]
-        per_doc = per_doc.filter(keep)
+                keep = f"({keep} AND NOT {flag})"
 
         # later segments overwrite same-term entries (reference map-put
         # order): keep each term's rows only from its owning segment,
@@ -1115,30 +1121,20 @@ class SearchEngine:
         for i, terms in enumerate(seg_terms):
             mine = sorted(t for t in terms if owner[t] == i)
             if mine:
-                in_list = ", ".join(f"'{_esc(t)}'" for t in mine)
                 conds.append(
                     f"(x.seg = {i} AND element_at(segm, {i + 1})"
-                    f" AND x.p.term IN ({in_list}))"
+                    f" AND {sql_in('x.p.term', mine)})"
                 )
         if not conds:
             return self._empty_postings(with_occ_dl=with_occ_dl)
-        combined = (
-            "transform(filter(ps, x -> " + " OR ".join(conds) + "), "
-            "x -> x.p)"
+        out = "x.p.term AS term, x.p.wtf AS wtf" + (
+            ", x.p.occ AS occ, x.p.dl AS dl" if with_occ_dl else ""
         )
-        out_cols = [
-            F.col("p.term").alias("term"),
-            F.col(key),
-            F.col("p.wtf").alias("wtf"),
-        ]
-        if with_occ_dl:
-            out_cols += [
-                F.col("p.occ").alias("occ"),
-                F.col("p.dl").alias("dl"),
-            ]
-        return per_doc.select(
-            key, F.explode(F.expr(combined)).alias("p")
-        ).select(*out_cols)
+        return per_doc.where(keep).selectExpr(
+            key,
+            f"inline(transform(filter(ps, x -> {' OR '.join(conds)}), "
+            f"x -> struct({out})))",
+        )
 
     # ------------------------------------------------------------- R3/S10
     def _apply_prior(self, raw_df: DataFrame, key: str) -> DataFrame:
@@ -1153,7 +1149,9 @@ class SearchEngine:
         to a shuffle join when the prior side is corpus-sized. The prior is
         applied BEFORE top-k because it reorders results."""
         if self.doc_prior is None:
-            return raw_df.withColumn("score", F.col("raw") * F.lit(self.prior))
+            return raw_df.selectExpr(
+                "*", f"(raw * {_sql_lit(self.prior)}) AS score"
+            )
         pri = self.doc_prior.select(
             "url", F.col("prior").cast("double").alias("prior")
         )
@@ -1192,45 +1190,49 @@ class SearchEngine:
         count_only: bool = False,
     ) -> DataFrame:
         """Score the final filtered postings. df per term = filtered map
-        size (quirk Q12); duplicate scoring words multiply; optional
-        first-word gate (quirk Q7). If `filtered` already carries a `df`
-        column (normal path: stored build-time df == filtered recount),
-        it is used as-is — no query-time Window."""
+        size (quirk Q12, a count window over the scoring rows); if
+        `filtered` already carries a `df` column (normal path: stored
+        build-time df == filtered recount), it is used as-is — no
+        query-time window. Duplicate scoring words multiply.
+
+        The optional first-word gate (quirk Q7) is an aggregate beside
+        `raw` in the same per-doc groupBy — max(term = gate) — filtered
+        after it, so it costs no exchange of its own. Ordinal results
+        return through translate_topk, which makes the one top-k cut;
+        the doc_id key space (in-memory engines) cuts here.
+
+        Plan shape: `where` + one `selectExpr` for contrib, the
+        groupBy, then one `where` + `selectExpr` for the prior and the
+        zero filter. Every literal is SQL text and every sub-expression
+        is parenthesized, so the association — and the float result —
+        is the Column tree's."""
         key = self._key()
         present = sorted(set(scoring_words))
-        sp = filtered.filter(F.col("term").isin(present))
-        if "df" not in sp.columns:
-            sp = sp.withColumn(
-                "df", F.count("*").over(Window.partitionBy("term"))
-            )
-
-        mult = {}
+        mult: dict[str, int] = {}
         for w in scoring_words:
             mult[w] = mult.get(w, 0) + 1
         mult_expr = "CASE term " + " ".join(
-            f"WHEN '{_esc(t)}' THEN {c}D" for t, c in mult.items()
+            f"WHEN {_sql_lit(t)} THEN {_sql_lit(float(c))}"
+            for t, c in mult.items()
         ) + " ELSE 0D END"
-
+        df_expr = (
+            "df" if "df" in filtered.columns
+            else "count(1) OVER (PARTITION BY term)"
+        )
         # contrib = tf * idf * sum(tag weights) == wtf * idf (see _WSUM
         # note above); same product order as the reference's fold-then-
         # multiply, so scores stay bit-comparable to the oracle
-        contrib = F.col("wtf") * F.floor(
-            F.lit(self.idf_numerator) / F.col("df")
-        ).cast("double")
-        sp = sp.withColumn("contrib", contrib * F.expr(mult_expr))
-
+        sp = filtered.where(sql_in("term", present)).selectExpr(
+            key,
+            "term",
+            f"((wtf * CAST(FLOOR({self.idf_numerator} / ({df_expr}))"
+            f" AS DOUBLE)) * ({mult_expr})) AS contrib",
+        )
+        gate = None
         if gate_word is not None:
-            # Q7 first-word gate: keep docs that contain gate_word. A
-            # window flag over the doc key instead of a self-semi-join —
-            # the join shape referenced the (expensive) filtered subtree
-            # twice and Spark recomputed it; the window rides the same
-            # per-key exchange the groupBy below needs anyway.
-            sp = sp.withColumn(
-                "has_gate",
-                F.max(
-                    (F.col("term") == gate_word).cast("int")
-                ).over(Window.partitionBy(key)),
-            ).filter(F.col("has_gate") == 1).drop("has_gate")
+            gate = F.expr(
+                f"max(CAST(term = {_sql_lit(gate_word)} AS INT)) AS gate"
+            )
 
         if dedup_by_url:
             # R10 (Ranker.java:201-214): scoreTracker is keyed by URL, so
@@ -1243,6 +1245,18 @@ class SearchEngine:
             # doc_map in ordinal space) — candidate-bounded left side.
             if self.doc_meta_path is None:
                 raise ValueError("dedup_by_url needs a disk index (doc_meta)")
+            if gate is not None:
+                # the Q7 gate is per DOC, the fold below per URL: gate
+                # each doc's rows before they regroup
+                sp = (
+                    sp.groupBy(key)
+                    .agg(
+                        F.expr("collect_list(struct(term, contrib)) AS cs"),
+                        gate,
+                    )
+                    .where("gate = 1")
+                    .selectExpr(key, "inline(cs)")
+                )
             urls = self._read(self.doc_meta_path).select(
                 "doc_id", "url"
             )
@@ -1263,39 +1277,38 @@ class SearchEngine:
             )
             scored = (
                 self._apply_prior(raw_by_url, key="url")
-                .filter(F.col("score") != 0.0)
+                .where("score != 0D")
                 .select("url", "score")
             )
             if count_only:
-                return scored.agg(
-                    F.count("*").cast("long").alias("n_matches")
-                )
+                return scored.selectExpr("count(1) AS n_matches")
             return scored.orderBy(F.desc("score"), F.asc("url")).limit(k)
 
-        raw_by_doc = sp.groupBy(key).agg(
-            F.expr(
-                "aggregate(array_sort(collect_list(struct(term, contrib))), "
-                "0D, (acc, x) -> acc + x.contrib)"
-            ).alias("raw")
-        )
+        aggs = [F.expr(
+            "aggregate(array_sort(collect_list(struct(term, contrib))), "
+            "0D, (acc, x) -> acc + x.contrib) AS raw"
+        )]
+        if gate is not None:
+            aggs.append(gate)
+        raw_by_doc = sp.groupBy(key).agg(*aggs)
+        if gate is not None:
+            raw_by_doc = raw_by_doc.where("gate = 1")
         scored = (
             self._apply_prior(raw_by_doc, key=key)
-            .filter(F.col("score") != 0.0)
+            .where("score != 0D")
             .select(key, "score")
         )
         if count_only:
             # the reference's totalCount (results.size()) without the
             # sort/limit or the doc_map translation
-            return scored.agg(
-                F.count("*").cast("long").alias("n_matches")
-            )
-        topk = scored.orderBy(F.desc("score"), F.asc(key)).limit(k)
+            return scored.selectExpr("count(1) AS n_matches")
         if key == "doc_id":
-            return topk
-        # ordinal results: point-look-up doc_map for the final <=k rows
+            return scored.orderBy(F.desc("score"), F.asc(key)).limit(k)
+        # ordinal results: translate_topk cuts the top k and point-looks
+        # up doc_map for those rows only
         from apt_search_engine_spark.query.wand import translate_topk
 
-        return translate_topk(self.spark, topk, self._doc_ids, k)
+        return translate_topk(self.spark, scored, self._doc_ids, k)
 
     def _prior_by_ord(self) -> DataFrame | None:
         """The url-keyed doc_prior mapped into ordinal space:
@@ -1708,10 +1721,10 @@ class SearchEngine:
         unordered). With `ordered=True` only word1-before-word2 pairs
         match: the Lucene sloppy-phrase shape, exposed as the
         `"w1 w2"~k` query syntax. Candidate bounding and scoring follow
-        the phrase path exactly: rarest-term semi-join before the
-        aggregate, fused Arrow positions predicate, filtered-df recount
-        (Q12) and first-word gate (Q7) — so NEAR results are scored
-        consistently with phrase results."""
+        the phrase path exactly: the df-chosen rarest-term bound
+        (_bounded) before the aggregate, fused Arrow positions
+        predicate, filtered-df recount (Q12) and first-word gate (Q7) —
+        so NEAR results are scored consistently with phrase results."""
         self._ensure_fresh()
         t1 = parser.stem(word1.strip().lower())
         t2 = parser.stem(word2.strip().lower())
@@ -1738,12 +1751,13 @@ class SearchEngine:
         n=2 the two APIs relate by span = slop + 1 (the legacy two-word
         `"w1 w2"~k` syntax keeps its distance-<=k semantics; this one is
         the Lucene-slop shape the r4 VERDICT asked for). Candidate
-        bounding and scoring follow the phrase path exactly: rarest-term
-        semi-join before the single fat aggregate, fused Arrow greedy
-        chain predicate, filtered-df recount (Q12) and first-word gate
-        (Q7). The reference engine has no slop at all
-        (S/processor/QueryProcessor.java:130-173 is exact adjacency) —
-        extension surface, scored consistently with phrases."""
+        bounding and scoring follow the phrase path exactly: the
+        df-chosen rarest-term bound (_bounded) before the single fat
+        aggregate, fused Arrow greedy chain predicate, filtered-df
+        recount (Q12) and first-word gate (Q7). The reference engine
+        has no slop at all (S/processor/QueryProcessor.java:130-173 is
+        exact adjacency) — extension surface, scored consistently with
+        phrases."""
         self._ensure_fresh()
         stems = [parser.stem(w.strip().lower()) for w in words]
         stems = [t for t in stems if t]
@@ -2235,9 +2249,12 @@ class SearchEngine:
         per-posting occ/dl columns exploded in place (layout v7 postings
         carry both; dl is analyzer-stamped, identical to the doc_len
         table's value for every posted doc) -> partial-aggregated per-doc
-        fold in ordinal space -> TakeOrderedAndProject -> point-lookup
-        doc_map translation of the final k rows. NO joins anywhere in
-        the plan."""
+        fold in ordinal space -> TakeOrderedAndProject and point-lookup
+        doc_map translation of the final k rows, both in translate_topk.
+        NO joins anywhere in the plan. The contrib expression is one
+        `selectExpr` over SQL text with every sub-expression
+        parenthesized, so it parses to the same association as the
+        oracle's: idf * ((occ * k1p1) / (occ + (c0 + c1 * dl)))."""
         self._ensure_fresh()
         if self.index_dir is None:
             raise ValueError("search_bm25_df needs a disk index (doc_len)")
@@ -2247,6 +2264,7 @@ class SearchEngine:
             )
         key = self._key()
         parsed = parser.parse(query)
+        filtered = None
         if parsed.qtype == "phrase":
             filtered = self._phrase_filtered(
                 parsed.query_words, with_occ_dl=True
@@ -2259,49 +2277,45 @@ class SearchEngine:
             words = sorted(
                 {w for w in parsed.query_words if w.upper() not in parser.OPERATORS}
             )
-            filtered = self._exploded(words, with_occ_dl=True)
         if not words:
             return self._empty_results()
         dfs = self.term_dfs(words)
         words = [w for w in words if dfs.get(w)]
         if not words:
             return self._empty_results()
+        if filtered is None:
+            # bag of words: the scan's own term predicate is the filter
+            sp = self._exploded(words, with_occ_dl=True)
+        else:
+            sp = filtered.where(sql_in("term", words))
         # driver-side constants (shared verbatim with the oracle SQL):
-        # K(dl) = c0 + c1*dl, tfnorm = occ*k1p1 / (occ + K)
+        # K(dl) = c0 + c1*dl, tfnorm = occ*k1p1 / (occ + K); every
+        # sub-expression parenthesized, so the text parses to the
+        # oracle's association: idf * (num / den), not (idf * num) / den
         avgdl = self.total_len / self.n_docs
-        k1p1 = k1 + 1.0
-        c0 = k1 * (1.0 - b)
-        c1 = k1 * b / avgdl
-        idf_map = F.create_map(
-            *[
-                F.lit(x)
-                for w in words
-                for x in (w, bm25_idf(dfs[w], self.n_docs))
-            ]
+        k1p1 = _sql_lit(k1 + 1.0)
+        c0 = _sql_lit(k1 * (1.0 - b))
+        c1 = _sql_lit(k1 * b / avgdl)
+        idf_map = "map(" + ", ".join(
+            f"{_sql_lit(w)}, {_sql_lit(bm25_idf(dfs[w], self.n_docs))}"
+            for w in words
+        ) + ")"
+        occ = "CAST(occ AS DOUBLE)"
+        contrib = (
+            f"({idf_map}[term] * (({occ} * {k1p1}) / "
+            f"({occ} + ({c0} + ({c1} * CAST(dl AS DOUBLE))))))"
         )
-        occ = F.col("occ").cast("double")
-        tfnorm = (occ * F.lit(k1p1)) / (
-            occ + (F.lit(c0) + F.lit(c1) * F.col("dl").cast("double"))
-        )
-        sp = filtered.filter(F.col("term").isin(words)).withColumn(
-            "contrib", idf_map[F.col("term")] * tfnorm
-        )
-        scored = sp.groupBy(key).agg(
-            F.expr(
-                "aggregate(array_sort(collect_list(struct(term, contrib))), "
-                "0D, (acc, x) -> acc + x.contrib)"
-            ).alias("score")
-        )
-        topk = (
-            scored.select(key, "score")
-            .orderBy(F.desc("score"), F.asc(key))
-            .limit(k)
-        )
+        scored = sp.selectExpr(key, "term", f"{contrib} AS contrib").groupBy(
+            key
+        ).agg(F.expr(
+            "aggregate(array_sort(collect_list(struct(term, contrib))), "
+            "0D, (acc, x) -> acc + x.contrib) AS score"
+        ))
         if key == "doc_id":
-            return topk
+            return scored.orderBy(F.desc("score"), F.asc(key)).limit(k)
         from apt_search_engine_spark.query.wand import translate_topk
 
-        return translate_topk(self.spark, topk, self._doc_ids, k)
+        return translate_topk(self.spark, scored, self._doc_ids, k)
 
     def search_bm25f_df(
         self,
@@ -2411,16 +2425,11 @@ class SearchEngine:
                 "0D, (acc, x) -> acc + x.contrib)"
             ).alias("score")
         )
-        topk = (
-            scored.select(key, "score")
-            .orderBy(F.desc("score"), F.asc(key))
-            .limit(k)
-        )
         if key == "doc_id":
-            return topk
+            return scored.orderBy(F.desc("score"), F.asc(key)).limit(k)
         from apt_search_engine_spark.query.wand import translate_topk
 
-        return translate_topk(self.spark, topk, self._doc_ids, k)
+        return translate_topk(self.spark, scored, self._doc_ids, k)
 
     def search_bm25_wand_df(
         self,
@@ -2504,12 +2513,15 @@ class SearchEngine:
         (query_id, term, idf) table fans each posting out to the queries
         that want it (JVM-side, no per-row Python) -> one aggregate keyed
         (query_id, doc) -> per-query window top-k -> point-lookup doc_map
-        translation of the <= Q*k surviving ordinals. Amortizes scan,
+        translation of the <= Q*k surviving ordinals, sorted in the
+        driver and returned as a local relation (collecting it runs no
+        job). Amortizes scan,
         scheduling and shuffle setup across the whole reference query set
         instead of paying per-query job latency Q times — at 10^12 docs
         the postings scan dominates, and this reads each pruned bucket
         once however many queries share it. Phrase/boolean queries need
-        positions and run through the exact per-query plan, unioned in.
+        positions and run through the exact per-query plan; their rows
+        join the local result.
         """
         self._ensure_fresh()
         if self.index_dir is None:
@@ -2542,69 +2554,63 @@ class SearchEngine:
             if dfs.get(w)
         ]
         key = self._key()
-        parts: list[DataFrame] = []
+        out: list[tuple] = []
         if qt_rows:
             avgdl = self.total_len / self.n_docs
-            k1p1 = k1 + 1.0
-            c0 = k1 * (1.0 - b)
-            c1 = k1 * b / avgdl
-            qt = self.spark.createDataFrame(
-                qt_rows, "query_id string, term string, idf double"
+            k1p1 = _sql_lit(k1 + 1.0)
+            c0 = _sql_lit(k1 * (1.0 - b))
+            c1 = _sql_lit(k1 * b / avgdl)
+            # a local relation: broadcasting it runs no job, where
+            # createDataFrame parallelizes
+            qt = local_frame(
+                self.spark, qt_rows, "query_id string, term string, idf double"
             )
             present = sorted({t for _, t, _ in qt_rows})
-            exploded = self._exploded(present, with_occ_dl=True)
-            occ = F.col("occ").cast("double")
-            tfnorm = (occ * F.lit(k1p1)) / (
-                occ + (F.lit(c0) + F.lit(c1) * F.col("dl").cast("double"))
-            )
-            sp = exploded.join(F.broadcast(qt), "term").withColumn(
-                "contrib", F.col("idf") * tfnorm
-            )
-            scored = sp.groupBy("query_id", key).agg(
-                F.expr(
+            occ = "CAST(occ AS DOUBLE)"
+            scored = (
+                self._exploded(present, with_occ_dl=True)
+                .join(F.broadcast(qt), "term")
+                .selectExpr(
+                    "query_id",
+                    key,
+                    "term",
+                    f"(idf * (({occ} * {k1p1}) / ({occ} + "
+                    f"({c0} + ({c1} * CAST(dl AS DOUBLE)))))) AS contrib",
+                )
+                .groupBy("query_id", key)
+                .agg(F.expr(
                     "aggregate(array_sort(collect_list("
                     "struct(term, contrib))), "
-                    "0D, (acc, x) -> acc + x.contrib)"
-                ).alias("score")
+                    "0D, (acc, x) -> acc + x.contrib) AS score"
+                ))
             )
-            w = Window.partitionBy("query_id").orderBy(
-                F.desc("score"), F.asc(key)
-            )
-            topk = (
-                scored.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= k)
-                .select("query_id", key, "score")
-            )
-            if key == "doc_id":
-                parts.append(topk)
-            else:
-                # bounded materialization (<= Q*k rows), then the same
-                # point-read translation as translate_topk, handed back
-                # as a driver-local relation
-                rows = topk.collect()
+            rows = scored.selectExpr(
+                "query_id",
+                key,
+                "score",
+                f"row_number() OVER (PARTITION BY query_id ORDER BY score DESC,"
+                f" {key} ASC) AS rn",
+            ).where(f"rn <= {int(k)}").collect()
+            # bounded materialization (<= Q*k rows), then the same
+            # point-read translation as translate_topk
+            if key == "doc_ord":
                 id_map = self._doc_ids([int(r.doc_ord) for r in rows])
-                parts.append(
-                    local_frame(
-                        self.spark,
-                        [
-                            (r.query_id, id_map[int(r.doc_ord)], float(r.score))
-                            for r in rows
-                        ],
-                        out_schema,
-                    )
-                )
+                out += [
+                    (r.query_id, id_map[int(r.doc_ord)], float(r.score))
+                    for r in rows
+                ]
+            else:
+                out += [(r.query_id, r.doc_id, float(r.score)) for r in rows]
         for qid in sorted(fallback):
-            parts.append(
-                self.search_bm25_df(fallback[qid], k, k1, b).select(
-                    F.lit(qid).alias("query_id"), "doc_id", "score"
-                )
-            )
-        if not parts:
-            return local_frame(self.spark, [], out_schema)
-        out = parts[0]
-        for extra in parts[1:]:
-            out = out.unionByName(extra)
-        return out.orderBy("query_id", F.desc("score"), F.asc("doc_id"))
+            # a local relation too: collecting it runs no job
+            out += [
+                (qid, r.doc_id, float(r.score))
+                for r in self.search_bm25_df(fallback[qid], k, k1, b).collect()
+            ]
+        # the <= Q*k rows sort in the driver: an orderBy over the local
+        # relation would plan a range exchange and run three jobs
+        out.sort(key=lambda r: (r[0], -r[2], r[1]))
+        return local_frame(self.spark, out, out_schema)
 
     def search(
         self, query: str, k: int = DEFAULT_TOP_K, with_snippets: bool = True

@@ -23,6 +23,11 @@ and every read filters on the key, so results never depend on it.
 `local_frame` hands <=k driver rows back to Spark as an inline VALUES
 table. Spark plans it as a LocalTableScan, whose collect runs no job,
 unlike spark.createDataFrame, which parallelizes its rows into an RDD.
+
+`_sql_lit` and `sql_in` write driver values into plan text: the exact
+query plans are built from a few `where`/`selectExpr` steps over SQL
+expressions, which the JVM parses in one call each, instead of Column
+trees that cost a py4j round trip per node and per literal.
 """
 
 from __future__ import annotations
@@ -111,15 +116,29 @@ def read_rows(
 
 
 def _sql_lit(v) -> str:
-    """A Spark SQL literal for one int, float or str. Strings travel as
-    hex binary literals cast back to string, so no quote, backslash or
-    `${...}` in a doc_id can reach the SQL parser; floats use their
-    shortest round-trip repr, so scores come back bit-identical."""
+    """A Spark SQL literal for one int, float or str. Ints that fit 32
+    bits are bare (the column's type wins the IN-list coercion), wider
+    ones carry `L`. Floats use their shortest round-trip repr, so a
+    double written into plan text comes back bit-identical. Strings
+    travel as hex binary literals cast back to string, so no quote,
+    backslash or `${...}` can reach the SQL parser; constant folding
+    turns them into plain literals before filter pushdown."""
     if isinstance(v, int):
-        return f"{v}L"
+        return str(v) if -(2**31) <= v < 2**31 else f"{v}L"
     if isinstance(v, float):
         return f"{v!r}D"
     return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+
+
+def sql_in(col: str, values) -> str:
+    """`col IN (...)` as SQL text for `where`/`selectExpr`: the whole
+    list is one string the JVM parses once, where Column.isin makes one
+    py4j round trip per literal (9,500 literals took 1.6-1.9 s that way,
+    3-8 ms as text). Duplicates are dropped; an empty list is `false`."""
+    vals = list(dict.fromkeys(values))
+    if not vals:
+        return "false"
+    return f"{col} IN ({', '.join(_sql_lit(v) for v in vals)})"
 
 
 def local_frame(spark, rows: list[tuple], schema: str):

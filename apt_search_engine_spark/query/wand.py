@@ -77,11 +77,14 @@ def _live_mask(ords: np.ndarray, deleted: np.ndarray) -> np.ndarray:
 def translate_topk(
     spark, topk_ords: DataFrame, doc_ids: Callable, k: int
 ) -> DataFrame:
-    """ord -> doc_id for a top-k result. Collects the <=k (doc_ord,
-    score) rows (the scoring plan's one Spark action), maps their
-    ordinals through `doc_ids` (a driver-side point read of doc_map:
-    list of ordinals -> {ord: doc_id}, SearchEngine._doc_ids), and
-    returns the rows as a driver-local VALUES relation in final
+    """ord -> doc_id for a top-k result, and the one top-k cut of every
+    ordinal-keyed plan: `topk_ords` is the scored (doc_ord, score)
+    relation, uncut — callers do not sort or limit it themselves. This
+    collects its <=k best rows by (score desc, doc_ord asc) (the
+    scoring plan's one Spark action, planned as TakeOrderedAndProject),
+    maps their ordinals through `doc_ids` (a driver-side point read of
+    doc_map: list of ordinals -> {ord: doc_id}, SearchEngine._doc_ids),
+    and returns the rows as a driver-local VALUES relation in final
     (score desc, doc_id asc) order: the returned plan is a
     LocalTableScan with no doc_map scan and no join, and collecting it
     runs no job. The cut at k breaks ties on ordinal, the result orders

@@ -78,6 +78,47 @@ def test_delete_hides_docs_and_keeps_surviving_scores(spark, corpus, built, tmp_
     assert delete_docs(spark, idx, ["no#such_doc"]) == 2
 
 
+def test_thousand_tombstones_exclude_exactly_those_docs(spark, index_dir, tmp_path):
+    """~1,000 tombstones stay on the inline path (one SQL NOT IN list on
+    every exploded scan, no join): exactly the deleted docs vanish from
+    bag-of-words, phrase and BM25 results. Bag-of-words and BM25
+    survivors keep their rank order and exact score (stale-stats
+    contract); a phrase's df is its filtered candidate count (quirk
+    Q12), so there only the doc set is compared."""
+    import hashlib
+    import shutil
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(index_dir, idx)
+    eng = SearchEngine(spark, index_dir=idx)
+    ids = sorted(
+        (r.doc_id for r in eng._doc_map().collect()),
+        key=lambda d: hashlib.md5(d.encode()).hexdigest(),
+    )
+    dead = set(ids[:1000])
+    assert len(ids) - len(dead) > 100
+    n = len(ids)
+    calls = [
+        (QUERY, eng.search_df),
+        (PHRASE, eng.search_df),
+        (QUERY, eng.search_bm25_df),
+    ]
+    before = [_rows(call(q, k=n)) for q, call in calls]
+    assert delete_docs(spark, idx, sorted(dead)) == 1000
+    eng._ensure_fresh()  # what every public query does first
+    keys = eng._deleted_keys()
+    assert keys is not None and len(keys) == 1000
+    plan = eng._exploded(["travel"])._jdf.queryExecution().executedPlan()
+    assert "Join" not in plan.toString()
+    for (q, call), rows in zip(calls, before):
+        assert any(d in dead for d, _ in rows), q
+        want = [(d, s) for d, s in rows if d not in dead]
+        got = _rows(call(q, k=n))
+        if q == PHRASE:
+            got, want = sorted(d for d, _ in got), sorted(d for d, _ in want)
+        assert got == want, q
+
+
 def test_purge_equals_fresh_build_over_survivors(spark, corpus, built, tmp_path):
     import json
     import shutil

@@ -1,15 +1,20 @@
-"""Plan-shape regression tests for the r4 single-pass query restructure.
+"""Plan-shape regression tests for the exact query plans.
 
 Spark re-executes an uncached subtree once per reference, so the number of
 postings FileScans in a query plan IS the number of times the index is
-read. The phrase retrieval plan must read postings exactly twice (the fat
-positions-bearing scan once, plus the rarest-term narrow doc-set probe),
-and a two-segment boolean query exactly twice that — the pre-r4 shapes
-referenced the fat subtree 3x (phrase) / 2x per segment (boolean) and
-Spark recomputed it each time (reference semantics:
-S/queryprocessor/QueryProcessor.java handlePhrase/handleBoolean — pure
-set algebra, so evaluation count is an implementation choice the plan
-should make once).
+read. The fat positions-bearing scan of a phrase, NEAR or boolean segment
+appears exactly once (the pre-r4 shapes referenced it 3x (phrase) / 2x per
+segment (boolean) and Spark recomputed it each time; reference semantics:
+S/queryprocessor/QueryProcessor.java handlePhrase/handleBoolean — pure set
+algebra, so evaluation count is an implementation choice the plan should
+make once).
+
+Before the per-doc positions aggregate, a segment's rows may be bounded to
+the docs of its rarest term when the lexicon dfs say the bound pays
+(SearchEngine._bounded, config.BOUND_MIN_CUT_ROWS): no bound (head terms:
+one scan, no join) or a broadcast semi-join (a second, narrow scan without
+positions, and the LeftSemi below the aggregate). The tests force each
+shape through the constant; the shape never changes the rows.
 
 The tests inspect the RETRIEVAL subtrees (`_phrase_filtered`,
 `_boolean_filtered`, `_exploded`) rather than `search_df`'s return value:
@@ -28,6 +33,10 @@ Arrow evaluation per fused positions UDF."""
 
 from __future__ import annotations
 
+
+import pytest
+
+from apt_search_engine_spark import config
 from apt_search_engine_spark.query import parser
 
 
@@ -45,32 +54,58 @@ def _phrase_words(engine, q):
     return [parser.stem(w) for w in parser.tokenize(q)]
 
 
-def test_phrase_plan_reads_postings_twice(engine):
-    scans = _postings_scans(
-        engine._phrase_filtered(_phrase_words(engine, "travel guide"))
-    )
+@pytest.fixture
+def semi_join_bound(monkeypatch):
+    """Force the semi-join shape of every candidate bound."""
+    monkeypatch.setattr(config, "BOUND_MIN_CUT_ROWS", -(10**18))
+
+
+def _semi_join_below_aggregate(df) -> bool:
+    """The optimized plan has a LeftSemi join below the positions
+    aggregate (the aggregate is the parent, so it prints first)."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    i_agg = plan.find("Aggregate")
+    return i_agg != -1 and "LeftSemi" in plan[i_agg:]
+
+
+def test_phrase_plan_reads_postings_twice(engine, semi_join_bound):
+    """Under the semi-join bound the phrase plan reads postings twice:
+    the fat positions scan once, plus the rarest term's narrow probe."""
+    df = engine._phrase_filtered(_phrase_words(engine, "travel guide"))
+    scans = _postings_scans(df)
     assert len(scans) == 2, "\n".join(scans)
-    # exactly one of the two is the fat positions-bearing scan; the other
-    # is the narrow rare-doc probe (no positions in its ReadSchema)
     fat = [ln for ln in scans if "positions_vb" in ln]
     assert len(fat) == 1, "\n".join(scans)
+    assert _semi_join_below_aggregate(df)
 
 
-def test_boolean_plan_reads_each_segment_once(engine):
-    # two phrase segments -> 2 scans each (fat + narrow), nothing
-    # doubled, plus ONE narrow global rarest-term probe bounding the
-    # segment that lacks the rarest query term (r5 all-AND bound)
+def test_boolean_plan_reads_each_segment_once(engine, semi_join_bound):
+    """Each segment's fat scan appears once. Under the default rule the
+    fixture's head terms take no bound, so the plan has no join at all;
+    forced to the semi-join, an all-AND query bounds each segment ONCE
+    by the globally rarest term (the r5 shape bounded a phrase segment
+    twice, by its own rarest term and by the global one)."""
     parsed = parser.parse('"travel guide" AND "europe tips"')
     df = engine._boolean_filtered(parsed)
     scans = _postings_scans(df)
-    assert len(scans) == 5, "\n".join(scans)
     assert len([ln for ln in scans if "positions_vb" in ln]) == 2
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("LeftSemi") == 2, plan
     # r5 single-exchange fold: the segments union into ONE aggregate —
-    # the r4 shape's N-1 full-outer segment joins must be gone (the only
-    # joins left are the phrase subtrees' rare-doc semi-joins)
+    # the r4 shape's N-1 full-outer segment joins must be gone
+    eplan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FullOuter" not in eplan, eplan
+    assert "Union" in eplan, eplan
+
+
+def test_boolean_plan_default_bound_is_join_free(engine):
+    parsed = parser.parse('"travel guide" AND "europe tips"')
+    df = engine._boolean_filtered(parsed)
+    scans = _postings_scans(df)
+    assert len(scans) == 2, "\n".join(scans)
+    assert all("positions_vb" in ln for ln in scans)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FullOuter" not in plan, plan
-    assert "Union" in plan, plan
+    assert "Join" not in plan and "Union" in plan, plan
 
 
 def test_normal_plan_reads_postings_once(engine):
@@ -83,17 +118,100 @@ def test_normal_plan_reads_postings_once(engine):
     assert "positions_vb" not in scans[0]
 
 
-def test_long_phrase_plan_still_two_scans(engine):
+def test_long_phrase_plan_still_two_scans(engine, semi_join_bound):
     """Scan count is independent of phrase length, and the Q7 first-word
-    gate (active on every phrase ranking) is a window flag riding the
-    scorer's own per-key exchange — not a self-semi-join that would
-    re-reference (and re-execute) the filtered postings subtree."""
+    gate (active on every phrase ranking) is an aggregate in the
+    scorer's own per-doc groupBy — no window, no self-semi-join that
+    would re-reference (and re-execute) the filtered postings subtree."""
     scans = _postings_scans(
         engine._phrase_filtered(
             _phrase_words(engine, "travel guide europe tips")
         )
     )
     assert len(scans) == 2, "\n".join(scans)
+
+
+def test_phrase_plan_has_no_dead_exchanges(engine):
+    """The phrase scoring plan shuffles only where it must: the per-doc
+    positions aggregate, the Q12 df window (by term) and the per-doc
+    score aggregate. P4 is a size(array_distinct(...)) filter, not a
+    countDistinct (its own two-level aggregate and exchange), and the
+    Q7 gate folds into the score aggregate (no window by doc key)."""
+    words = _phrase_words(engine, "travel guide")
+    scored = engine._phrase_filtered(words)
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "count(distinct" not in plan.lower(), plan
+    sp = engine._score(scored, words, words[0], k=10, count_only=True)
+    plan = sp._jdf.queryExecution().executedPlan().toString()
+    # the positions aggregate, the df window and the score aggregate
+    # (the count's gather is a SinglePartition exchange)
+    assert plan.count("Exchange hashpartitioning") == 3, plan
+    assert plan.count("Window ") == 1, plan
+
+
+@pytest.mark.parametrize("shape", ["none", "semi_join"])
+def test_candidate_bound_shape(engine, monkeypatch, shape):
+    """Each bound shape, forced through the config constant, gives
+    its plan — and the same rows as the others, for the phrase,
+    boolean and NEAR plans under both scorers."""
+    from apt_search_engine_spark.query.engine import _near_match_udf
+
+    queries = [
+        '"travel guide"',
+        '"travel guide europe tips"',
+        '"travel guide" AND "europe tips"',
+        '"travel guide" AND file',
+        '"europe tips" OR spark',
+    ]
+    base = {}
+    monkeypatch.setattr(config, "BOUND_MIN_CUT_ROWS", 10**18)
+    for q in queries:
+        base[q] = (
+            engine.search_df(q, k=20).collect(),
+            engine.search_bm25_df(q, k=20).collect(),
+        )
+    base_near = engine.search_near_df("travel", "guide", 2, k=20).collect()
+    if shape == "semi_join":
+        monkeypatch.setattr(config, "BOUND_MIN_CUT_ROWS", -(10**18))
+    words = _phrase_words(engine, "travel guide")
+    df = engine._proximity_filtered(words, _near_match_udf(*words, 2))
+    scans = _postings_scans(df)
+    assert len([ln for ln in scans if "positions_vb" in ln]) == 1
+    assert len(scans) == (2 if shape == "semi_join" else 1), scans
+    assert _semi_join_below_aggregate(df) == (shape == "semi_join")
+    for q in queries:
+        got = (
+            engine.search_df(q, k=20).collect(),
+            engine.search_bm25_df(q, k=20).collect(),
+        )
+        assert got == base[q] and got[0] and got[1], q
+    assert engine.search_near_df("travel", "guide", 2, k=20).collect() == (
+        base_near
+    )
+
+
+def test_bound_rule_picks_shape_from_dfs(engine):
+    """With the shipped constant the lexicon dfs alone pick the shape:
+    a cut below BOUND_MIN_CUT_ROWS takes no bound, a larger one the
+    semi-join. The dfs are stated, so the rule is tested at corpus
+    sizes the fixture does not have."""
+    ex = engine._exploded(["guid", "travel"], with_positions=True)
+    cut = config.BOUND_MIN_CUT_ROWS
+
+    def shape(dfs):
+        df = engine._bounded(ex, ["guid", "travel"], dfs)
+        if df is ex:
+            return "none"
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LeftSemi" in plan, plan
+        return "semi_join"
+
+    # the cut is net of the probe: df(travel) - df(guid) - df(guid)
+    assert shape({"guid": 9_000, "travel": 9_500}) == "none"
+    assert shape({"guid": 10, "travel": 20 + cut - 1}) == "none"
+    assert shape({"guid": 10, "travel": 20 + cut}) == "semi_join"
+    assert shape({"guid": 5_000, "travel": 10_000 + cut}) == "semi_join"
 
 
 def test_olap_ops_plan_shapes(spark):
@@ -196,10 +314,11 @@ def test_query_job_counts(spark, engine):
     local relations. The counts are the collect's AQE query stages
     (each runs as a job): bag-of-words and BM25 plans have one
     shuffle, prefix adds the expansion's lexicon scan, phrase and
-    boolean plans add the positions aggregate, the Q12 df window and
-    the rare-term probe broadcasts. An all-AND boolean query broadcasts
-    one more probe (the globally rarest term) than OR/NOT. Readers
-    and footers are warmed first: a long-lived engine pays that once."""
+    boolean plans add the positions aggregate and the Q12 df window.
+    The fixture's head terms take no candidate bound, so no probe
+    broadcast runs. A batch of BM25 queries returns a local relation
+    too. Readers and footers are warmed first: a long-lived engine pays
+    that once."""
     from apt_search_engine_spark.query.engine import SearchEngine
 
     eng = SearchEngine(spark, index_dir=engine.index_dir)
@@ -212,10 +331,18 @@ def test_query_job_counts(spark, engine):
         ("wand", lambda: eng.search_bm25_wand_df("index query", k=10), 2),
         ("wand_ref", lambda: eng.search_df_wand("guide tips", k=10), 2),
         ("prefix", lambda: eng.search_prefix("tra", k=10), 3),
-        ("phrase", lambda: eng.search('"travel guide"', k=10), 6),
-        ("bool_or", lambda: eng.search('"europe tips" OR spark', k=10), 5),
-        ("bool_not", lambda: eng.search('"travel guide" NOT europe', k=10), 5),
-        ("bool_and", lambda: eng.search('"travel guide" AND file', k=10), 6),
+        ("phrase", lambda: eng.search('"travel guide"', k=10), 4),
+        ("bool_or", lambda: eng.search('"europe tips" OR spark', k=10), 4),
+        ("bool_not", lambda: eng.search('"travel guide" NOT europe', k=10), 4),
+        ("bool_and", lambda: eng.search('"travel guide" AND file', k=10), 4),
+        (
+            "batch",
+            lambda: eng.search_bm25_batch_df(
+                {"a": "travel guide", "b": "spark query", "c": '"europe tips"'},
+                k=10,
+            ),
+            7,
+        ),
     ]
     for name, call, most in cases:
         out, n = _jobs(spark, f"q-{name}", call)
@@ -258,18 +385,19 @@ def test_multiterm_plans_stay_jvm_side(engine):
     assert "StringStartsWith(term,tra)" in splan, splan
 
 
-def test_near_plan_reads_postings_twice(engine):
-    """NEAR shares the phrase retrieval shape: the fat positions scan
-    once plus the rarest-term narrow probe, nothing re-referenced."""
+def test_near_plan_reads_postings_twice(engine, semi_join_bound):
+    """NEAR shares the phrase retrieval shape: under the semi-join bound
+    the fat positions scan once plus the rarest-term narrow probe,
+    nothing re-referenced, the probe below the aggregate."""
     from apt_search_engine_spark.query.engine import _near_match_udf
 
-    scans = _postings_scans(
-        engine._proximity_filtered(
-            ["travel", "guid"], _near_match_udf("travel", "guid", 2)
-        )
+    df = engine._proximity_filtered(
+        ["travel", "guid"], _near_match_udf("travel", "guid", 2)
     )
+    scans = _postings_scans(df)
     assert len(scans) == 2, "\n".join(scans)
     assert len([ln for ln in scans if "positions_vb" in ln]) == 1
+    assert _semi_join_below_aggregate(df)
 
 
 def test_wildcard_spell_synonym_plans_stay_jvm_side(engine, spark):

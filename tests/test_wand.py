@@ -201,11 +201,16 @@ def test_translated_doc_id_round_trips_quote_and_backslash(spark):
     assert [(r.doc_id, r.score) for r in got.collect()] == [
         ('a"b\\', 2.5), ("conv'7#\\01", 0.1 + 0.2), ("x${y}", 0.1 + 0.2),
     ]
-def test_phrase_semi_join_precedes_positions_aggregate(engine):
-    """VERDICT r3 'what's wrong' #2: the phrase candidate aggregate must
-    only see docs containing the RAREST term — i.e. the optimized plan
-    has a left-semi join BELOW the map_from_entries aggregate, so a head
-    term's full postings never cross the aggregate shuffle."""
+def test_phrase_semi_join_precedes_positions_aggregate(engine, monkeypatch):
+    """VERDICT r3 'what's wrong' #2: when the candidate bound applies,
+    the phrase candidate aggregate only sees docs containing the RAREST
+    term — the optimized plan has the bound BELOW the aggregate that
+    feeds the fused Arrow filter, so a head term's full postings never
+    cross the aggregate shuffle. The semi-join shape is forced through
+    the config constant."""
+    from apt_search_engine_spark import config
+
+    monkeypatch.setattr(config, "BOUND_MIN_CUT_ROWS", -(10**18))
     fd = engine._phrase_filtered(["travel", "guid"])
     plan = fd._jdf.queryExecution().optimizedPlan().toString()
     # the adjacency check is the fused Arrow filter over aggregated rows
@@ -214,6 +219,54 @@ def test_phrase_semi_join_precedes_positions_aggregate(engine):
     i_agg = plan.find("Aggregate", i_adj)
     assert i_agg != -1, plan
     assert "LeftSemi" in plan[i_agg:], plan
+
+
+def test_sql_text_literals_round_trip(spark):
+    """Driver values written into plan text come back exactly: doubles
+    bit-identical (subnormals, 0.1 + 0.2 = 0.30000000000000004, BM25's
+    default c0 = k1 * (1 - b)),
+    ints of both widths, and terms with quotes, backslashes or `${...}`
+    match in IN lists and map(...) lookups."""
+    import struct
+
+    from apt_search_engine_spark.query.pointread import (
+        _sql_lit,
+        local_frame,
+        sql_in,
+    )
+
+    from apt_search_engine_spark.query.engine import BM25_B, BM25_K1
+
+    c0 = BM25_K1 * (1.0 - BM25_B)
+    doubles = [1e-300, 5e-324, 0.1 + 0.2, 0.30000000000000004, c0, -2.5,
+               1e300, 1 / 3, 0.0]
+    row = spark.sql(
+        "SELECT " + ", ".join(
+            f"{_sql_lit(v)} AS c{i}" for i, v in enumerate(doubles)
+        )
+    ).collect()[0]
+    assert [struct.pack("<d", x) for x in row] == [
+        struct.pack("<d", v) for v in doubles
+    ]
+    ints = [0, -7, 2**31 - 1, 2**31, -(2**31) - 1, 2**62]
+    row = spark.sql(
+        "SELECT " + ", ".join(f"{_sql_lit(v)} AS c{i}" for i, v in enumerate(ints))
+    ).collect()[0]
+    assert list(row) == ints
+
+    terms = ["a'b", "c\\d", "x${y}", "plain", "\u00e9t\u00e9", "q'\\'"]
+    frame = local_frame(
+        spark, [(t,) for t in terms + ["other", "a"]], "term string"
+    )
+    got = {r.term for r in frame.where(sql_in("term", terms)).collect()}
+    assert got == set(terms)
+    pairs = ", ".join(f"{_sql_lit(t)}, {_sql_lit(i)}" for i, t in enumerate(terms))
+    got = {
+        r.term: r.v
+        for r in frame.selectExpr("term", f"map({pairs})[term] AS v").collect()
+    }
+    assert got == {**{t: i for i, t in enumerate(terms)}, "other": None, "a": None}
+    assert frame.where(sql_in("term", [])).collect() == []
 
 
 def test_wtfs_decode_matches_reference_kernel(spark, index_dir):
