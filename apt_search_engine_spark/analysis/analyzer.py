@@ -50,7 +50,7 @@ HEADING_CHANNELS = ("title", "h1", "h2", "h3", "h456")
 
 # Canonical pack order of the per-posting small ints inside the layout-v11
 # `meta_vb` varbyte blob (one blob per posting row; encoder below, decoder
-# indexing.build._expand_meta_*). Keep encoder and decoder on THIS tuple.
+# indexing.build._decode_meta_np). Keep encoder and decoder on THIS tuple.
 META_VB_COLS = ("occ", "dl", "xtra") + tuple(
     f"n_{c}" for c in HEADING_CHANNELS
 )

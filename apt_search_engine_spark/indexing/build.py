@@ -79,8 +79,8 @@ _N_COLS = ("n_title", "n_h1", "n_h2", "n_h3", "n_h456")
 # 8 bytes of fixed slot per field, so 8 int fields were ~64 bytes/posting
 # of pure row structure through the merge exchange and its sort buffers
 # (the measured memcpy-bound stage) against ~8-10 varbyte bytes. The
-# assembler expands meta_vb back to the v10 plural arrays in one
-# vectorized codec pass (_expand_meta_*); the STORED postings layout and
+# merge's ungroup pass expands meta_vb back to the v10 columns in one
+# vectorized codec pass (_ungroup_runs); the STORED postings layout and
 # every query path are unchanged. Plain occ/dl stay on the analyzed rows
 # for the narrow side-table scans (doc_len, BM25 totals) — parquet RLE
 # makes them nearly free at rest and they are never selected into the
@@ -225,14 +225,7 @@ def analyze_transcripts(
     )
 
 
-# with doc_ord attached (disk builds): +doc_ords/wtfs so the block-max
-# companion derives from postings with NO further shuffle
 _N_PLURALS = tuple(f"{c}s" for c in _N_COLS)
-_ASSEMBLED_SCHEMA = (
-    "term string, doc_ids array<string>, positions_vb array<binary>, "
-    + ", ".join(f"{c} array<int>" for c in _N_PLURALS)
-    + ", occs array<int>, dls array<int>, xtras array<int>"
-)
 # Layout v8: disk postings store ONLY integer ordinals — no doc_id string
 # arrays. String keys live exactly once, in doc_map; consumers translate
 # ord -> doc_id on pruned reads (query engine) or the final top-k rows
@@ -285,13 +278,17 @@ WTFS_FROM_SEGMENT_EXPR = (
     "CAST(x.dls + x.xtras AS DOUBLE)))"
 )
 
-_COLS = ("doc_id", "positions_vb") + _N_COLS + ("occ", "dl", "xtra")
-# disk (ord-stamped) builds: the ordinal REPLACES the string doc_id (the
-# sort orders agree — write_doc_map assigns ordinals in global doc_id
-# order); occ/dl are also the BM25 inputs
+# per-posting columns of the assembler/flatten passes: the ordinal is the
+# only doc key (its order == global doc_id order — write_doc_map assigns
+# ordinals in doc_id order); occ/dl are also the BM25 inputs
 _COLS_ORD = (
     ("doc_ord", "positions_vb") + _N_COLS + ("occ", "dl", "xtra")
 )
+# singular posting column -> the segment row's plural array column
+_PLURAL = {
+    "doc_ord": "doc_ords", "positions_vb": "positions_vb",
+    "occ": "occs", "dl": "dls", "xtra": "xtras",
+} | dict(zip(_N_COLS, _N_PLURALS))
 
 
 def _decode_meta_np(n_rows: int, region: bytes) -> dict[str, np.ndarray]:
@@ -308,46 +305,6 @@ def _decode_meta_np(n_rows: int, region: bytes) -> dict[str, np.ndarray]:
     return {
         c: vals[:, j].astype(np.int32) for j, c in enumerate(META_VB_COLS)
     }
-
-
-def _expand_meta_arrow(col: dict) -> dict:
-    """If the incoming Arrow batch carries the packed `meta_vb` column
-    (layout v11 exchange format), expand it IN PLACE into the singular
-    int columns the assembler emits as plural arrays. Rows from the
-    recompaction flatten pass arrive already expanded and skip this."""
-    import pyarrow as pa
-
-    arr = col.pop("meta_vb", None)
-    if arr is None:
-        return col
-    n = len(arr)
-    if n:
-        # value-buffer slice of the (possibly sliced) BinaryArray: the
-        # offsets buffer is shared, so index it at the array's offset
-        off_t = (
-            np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-        )
-        offs = np.frombuffer(arr.buffers()[1], dtype=off_t)[
-            arr.offset : arr.offset + n + 1
-        ]
-        data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
-        region = data[offs[0] : offs[-1]].tobytes()
-    else:
-        region = b""
-    for name, vals in _decode_meta_np(n, region).items():
-        col[name] = pa.array(vals, type=pa.int32())
-    return col
-
-
-def _expand_meta_pandas(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Pandas-path equivalent of _expand_meta_arrow."""
-    if "meta_vb" not in pdf.columns:
-        return pdf
-    region = b"".join(bytes(b) for b in pdf["meta_vb"])
-    pdf = pdf.drop(columns=["meta_vb"])
-    for name, vals in _decode_meta_np(len(pdf), region).items():
-        pdf[name] = vals
-    return pdf
 
 
 # -- layout v12: grouped-run merge exchange --------------------------------
@@ -806,12 +763,12 @@ def _ungroup_runs(batches):
             yield out
 
 
-def _assemble_grouped_arrow_factory(cap: int, cols: tuple[str, ...]):
+def _assemble_grouped_arrow_factory(cap: int):
     """Grouped-exchange assembler: ungroup the (term, stripe) runs back
     to sorted per-posting batches and feed the standard Arrow assembler —
     same segments, same bytes (modulo boundary placement, which is
     partitioner-dependent in every layout)."""
-    inner = _assemble_arrow_factory(cap, cols)
+    inner = _assemble_arrow_factory(cap)
 
     def assemble(batches):
         return inner(_ungroup_runs(batches))
@@ -819,95 +776,21 @@ def _assemble_grouped_arrow_factory(cap: int, cols: tuple[str, ...]):
     return assemble
 
 
-def _assemble_factory(cap: int, cols: tuple[str, ...]):
-    """mapInPandas pass over (term, doc_id)-sorted partitions: emit one
-    output row per run of <= cap postings of one term. Bounded memory: at
-    most cap postings are ever buffered. Buffers hold numpy SLICES and are
-    only concatenated at emit time — no per-element Python."""
-    _plural = {
-        "doc_id": "doc_ids", "positions_vb": "positions_vb",
-        "doc_ord": "doc_ords", "occ": "occs", "dl": "dls", "xtra": "xtras",
-    } | {c: p for c, p in zip(_N_COLS, _N_PLURALS)}
-    out_cols = ["term"] + [_plural[c] for c in cols]
-
-    def assemble(batches):
-        cur_term = None
-        parts: dict[str, list[np.ndarray]] = {c: [] for c in cols}
-        buffered = 0
-        rows: list[tuple] = []
-
-        def emit(final: bool):
-            nonlocal parts, buffered
-            if buffered == 0 or (not final and buffered < cap):
-                return
-            merged = {
-                c: (np.concatenate(v) if len(v) > 1 else v[0])
-                for c, v in parts.items()
-            }
-            n = buffered
-            i = 0
-            while n - i >= cap or (final and i < n):
-                j = min(i + cap, n)
-                rows.append((cur_term, *(merged[c][i:j] for c in cols)))
-                i = j
-            if i < n:
-                parts = {c: [merged[c][i:]] for c in cols}
-                buffered = n - i
-            else:
-                parts = {c: [] for c in cols}
-                buffered = 0
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = _expand_meta_pandas(pdf)
-            terms = pdf["term"].to_numpy()
-            col_arrs = {c: pdf[c].to_numpy() for c in cols}
-            bnd = np.flatnonzero(
-                np.concatenate(([True], terms[1:] != terms[:-1]))
-            )
-            ends = np.append(bnd[1:], len(terms))
-            for s, e in zip(bnd.tolist(), ends.tolist()):
-                t = terms[s]
-                if cur_term is not None and t != cur_term:
-                    emit(final=True)
-                cur_term = t
-                for c in cols:
-                    parts[c].append(col_arrs[c][s:e])
-                buffered += e - s
-                emit(final=False)
-            if rows:
-                yield pd.DataFrame(rows, columns=out_cols)
-                rows = []
-        if cur_term is not None:
-            emit(final=True)
-        if rows:
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    return assemble
-
-
-def _assemble_arrow_factory(cap: int, cols: tuple[str, ...]):
-    """mapInArrow equivalent of _assemble_factory — same segments, same
-    bytes (pinned by the arrow==pandas equivalence test in
-    tests/test_build.py), no pandas materialization: input rows are
-    (term, doc_id)-sorted, so every output segment's list columns are
-    CONTIGUOUS RUNS of the input columns. Output ListArrays are built as
-    (absolute chunk offsets, the untouched input column) pairs — zero
+def _assemble_arrow_factory(cap: int):
+    """mapInArrow pass over (term, doc_ord)-sorted per-posting rows
+    (columns term + _COLS_ORD): emit one segment row per run of <= cap
+    postings of one term (pinned against a plain-Python reference in
+    tests/test_build.py). Every output segment's list columns are
+    CONTIGUOUS RUNS of the input columns, so output ListArrays are built
+    as (absolute chunk offsets, the untouched input column) pairs — zero
     copies for everything emitted from the current batch; the only copies
     are the per-term carry buffer between batches (< cap rows) and
-    Arrow's own output serialization. The pandas version round-trips
-    every positions array through a python object and every output row
-    through a python tuple — the dominant memory traffic of the merge
-    stage on this bandwidth-bound box (BASELINE.md round 3)."""
+    Arrow's own output serialization."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    _plural = {
-        "doc_id": "doc_ids", "positions_vb": "positions_vb",
-        "doc_ord": "doc_ords", "occ": "occs", "dl": "dls", "xtra": "xtras",
-    } | {c: p for c, p in zip(_N_COLS, _N_PLURALS)}
-    out_names = ["term"] + [_plural[c] for c in cols]
+    cols = _COLS_ORD
+    out_names = ["term"] + [_PLURAL[c] for c in cols]
 
     def _mk_batch(term_arr, vals: dict, offs: np.ndarray):
         """offs are ABSOLUTE posting indices into vals' columns (monotone,
@@ -1004,12 +887,10 @@ def _assemble_arrow_factory(cap: int, cols: tuple[str, ...]):
             n = batch.num_rows
             if not n:
                 continue
-            col = _expand_meta_arrow(
-                {
-                    name: batch.column(i)
-                    for i, name in enumerate(batch.schema.names)
-                }
-            )
+            col = {
+                name: batch.column(i)
+                for i, name in enumerate(batch.schema.names)
+            }
             terms = col["term"]
             term_type[0] = terms.type
             if n > 1:
@@ -1083,23 +964,19 @@ def _assemble_arrow_factory(cap: int, cols: tuple[str, ...]):
     return assemble
 
 
-def _flatten_segments_arrow_factory(cols: tuple[str, ...]):
+def _flatten_segments_arrow_factory():
     """mapInArrow pass that explodes SEGMENT rows (plural array columns)
     back to flat posting rows (singular columns) with zero-copy child
     buffers: each list column's values are taken via ListArray.flatten()
     (offset-aware, no per-element Python) and the term column is repeated
     with one vectorized take. Composes with _assemble_arrow_factory to
-    re-chunk segments at a new cap — the LSM recompaction hot path
-    (streaming/ingest.recompact): input segments sorted by
-    (term, first ordinal) yield flat rows sorted by (term, doc_ord),
-    exactly the assembler's input contract."""
+    re-chunk segments at a new cap (rechunk_segments): input segments
+    sorted by (term, first ordinal) yield flat rows sorted by
+    (term, doc_ord), exactly the assembler's input contract."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    _plural = {
-        "doc_id": "doc_ids", "positions_vb": "positions_vb",
-        "doc_ord": "doc_ords", "occ": "occs", "dl": "dls", "xtra": "xtras",
-    } | {c: p for c, p in zip(_N_COLS, _N_PLURALS)}
+    cols = _COLS_ORD
 
     def flatten(batches):
         for batch in batches:
@@ -1111,14 +988,14 @@ def _flatten_segments_arrow_factory(cols: tuple[str, ...]):
                 for i, name in enumerate(batch.schema.names)
             }
             lens = (
-                pc.list_value_length(col[_plural[cols[0]]])
+                pc.list_value_length(col[_PLURAL[cols[0]]])
                 .to_numpy()
                 .astype(np.int64)
             )
             idx = pa.array(np.repeat(np.arange(n), lens))
             arrays = [pc.take(col["term"], idx)]
             for c in cols:
-                arrays.append(col[_plural[c]].flatten())
+                arrays.append(col[_PLURAL[c]].flatten())
             yield pa.RecordBatch.from_arrays(
                 arrays, names=["term", *cols]
             )
@@ -1130,98 +1007,56 @@ def merge_postings(
     flat: DataFrame,
     max_per_row: int = MAX_POSTINGS_PER_ROW,
     doc_map: DataFrame | None = None,
-    use_arrow: bool = True,
-    grouped: bool | None = None,
     n_docs_hint: int | None = None,
     _stripe_width: int | None = None,
 ) -> DataFrame:
     """Stage 2: sort-based segment assembly -> one row per (term, segment
-    of <= max_per_row docs), postings sorted by doc_id within and across a
-    term's segments, scalar doc-range columns (so lineage stats never
-    re-read the nested postings column). df deliberately does NOT live
-    here — see build_lexicon / schema.py LEXICON for why (head-term
-    colocation is a straggler at 10^12 turns).
+    of <= max_per_row docs), postings sorted by doc ordinal within and
+    across a term's segments, scalar ordinal-range columns (so lineage
+    stats never re-read the nested postings column). df deliberately does
+    NOT live here — see build_lexicon / schema.py LEXICON for why
+    (head-term colocation is a straggler at 10^12 turns).
 
-    With doc ordinals the rows also carry parallel doc_ords / wtfs arrays,
-    from which the block-max WAND companion is derived narrowly
-    (indexing/blocks.py) — no further shuffle of the index. Ordinals come
-    from either:
-      - a `doc_ord` column already stamped on `flat` (the batch build
-        assigns the docID space once at analyze/ingest time — VERDICT r2
-        'what's wrong' #5: re-joining the full flat frame against a
-        corpus-sized doc_map here was a second full shuffle of the
-        biggest intermediate), or
-      - an explicit `doc_map` (doc_id -> doc_ord) frame, joined here —
-        kept for incremental compaction deltas (delta-sized join) and
-        stream-analyzed batches that cannot know ordinals at arrival.
-    With neither (ad-hoc in-memory corpora) the ord/wtf-array columns
-    are omitted and no blocks companion can be derived."""
-    if "stripe" in flat.columns:
-        # layout v13: the analyze checkpoint is ALREADY grouped
-        # (GROUPED_BATCH_SCHEMA, batch builds) — drop the doc rows and
-        # the batch id, range-partition the runs, assemble. No grouping
-        # hop, no doc_map join (ordinals were stamped before grouping).
-        if doc_map is not None:
-            raise ValueError("pre-grouped frames carry final ordinals")
-        if not use_arrow:
-            raise ValueError("grouped checkpoints need the Arrow path")
-        n_parts = max(
-            flat.sparkSession.sparkContext.defaultParallelism * 2,
-            int(
-                flat.sparkSession.conf.get(
-                    "spark.sql.shuffle.partitions", "32"
-                )
-            ),
-        )
-        runs = flat.filter(F.col("stripe") >= 0).select(
-            "term", "stripe", "n",
-            "doc_ords_vb", "positions_vb", "meta_vb",
-        )
-        assembled = bucket_ranged(runs, n_parts, "stripe").mapInArrow(
-            _assemble_grouped_arrow_factory(max_per_row, _COLS_ORD),
-            _ASSEMBLED_SCHEMA_ORD,
-        )
-        return _finish_segments(assembled, with_ord=True)
-    with_ord = doc_map is not None or "doc_ord" in flat.columns
-    if doc_map is not None:
-        # an explicit map always wins: compaction deltas re-assign above
-        # the existing ordinal space, so any stamped value is stale here
-        if "doc_ord" in flat.columns:
-            flat = flat.drop("doc_ord")
-        flat = flat.join(doc_map, "doc_id")
-    cols = _COLS_ORD if with_ord else _COLS
-    schema = _ASSEMBLED_SCHEMA_ORD if with_ord else _ASSEMBLED_SCHEMA
-    # shuffle ONLY what the assembler consumes: carried-through input
-    # columns (the batch partition id, the occ/dl side-table scalars)
-    # would otherwise ride the biggest exchange of the build for nothing.
-    # Layout-v11 flat rows keep the eight per-posting ints packed in
-    # meta_vb across the exchange (4 UnsafeRow fields instead of 11);
-    # the assembler expands them. Pre-v11 flat frames (recompaction
-    # flatten output, tests building flat rows directly) still ship the
-    # expanded columns.
+    Two input shapes, ONE exchange: (term, stripe) runs range-partitioned
+    by bucket_ranged(runs, n_parts, "stripe") into the grouped Arrow
+    assembler (GROUPED_SCHEMA rationale above).
+      - pre-grouped runs (layout v13 analyze checkpoint, the batch
+        build): the doc rows and the batch id drop, the runs go straight
+        to the exchange — ordinals were stamped before grouping;
+      - per-posting analyzed rows (stream-analyzed batches: the compact
+        bootstrap and increments), grouped here by
+        _group_runs_arrow_factory. Their ordinals come from a `doc_ord`
+        column on `flat`, or from an explicit `doc_map` (doc_id ->
+        doc_ord) frame joined here — compaction deltas (a delta-sized
+        join) and stream batches cannot know ordinals at arrival.
+    A frame with neither ordinals nor a doc_map is refused."""
     # explicit partition count: the stage downstream of this exchange is
-    # Arrow->pandas assembly, so size it by cores (2 waves), not by the
+    # the Arrow assembly, so size it by cores (2 waves), not by the
     # 64MB-per-partition heuristic AQE would coalesce to
     n_parts = max(
         flat.sparkSession.sparkContext.defaultParallelism * 2,
         int(flat.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")),
     )
-    if grouped is None:
-        # operational escape hatch + A/B lever (tools/ab_build_bytes.py)
-        grouped = (
-            use_arrow
-            and with_ord
-            and "meta_vb" in flat.columns
-            and os.environ.get("APTSE_GROUPED_MERGE", "1") != "0"
+    if "stripe" in flat.columns:
+        if doc_map is not None:
+            raise ValueError("pre-grouped frames carry final ordinals")
+        runs = flat.filter(F.col("stripe") >= 0).select(
+            "term", "stripe", "n",
+            "doc_ords_vb", "positions_vb", "meta_vb",
         )
-    if grouped and not (use_arrow and with_ord and "meta_vb" in flat.columns):
-        raise ValueError(
-            "grouped merge needs the Arrow path, doc ordinals and "
-            "layout-v11+ analyzed rows (meta_vb)"
-        )
-    if grouped:
-        # layout v12: the exchange carries one row per (term, stripe)
-        # run, not one per posting — see GROUPED_SCHEMA rationale above
+    else:
+        if doc_map is not None:
+            # an explicit map always wins: compaction deltas re-assign
+            # above the existing ordinal space, so any stamped value is
+            # stale here
+            if "doc_ord" in flat.columns:
+                flat = flat.drop("doc_ord")
+            flat = flat.join(doc_map, "doc_id")
+        elif "doc_ord" not in flat.columns:
+            raise ValueError(
+                "merge_postings needs doc ordinals: a doc_ord column on "
+                "the analyzed rows or a doc_map to join"
+            )
         if _stripe_width is not None:
             width = _stripe_width  # tests: force multi-stripe splitting
         else:
@@ -1235,33 +1070,52 @@ def merge_postings(
         runs = flat.select(
             "term", "doc_ord", "positions_vb", "meta_vb"
         ).mapInArrow(_group_runs_arrow_factory(width), GROUPED_SCHEMA)
-        assembled = bucket_ranged(runs, n_parts, "stripe").mapInArrow(
-            _assemble_grouped_arrow_factory(max_per_row, cols), schema
-        )
-    else:
-        if "meta_vb" in flat.columns:
-            shuffle_cols = [
-                c for c in cols if c not in META_VB_COLS
-            ] + ["meta_vb"]
-        else:
-            shuffle_cols = list(cols)
-        flat = flat.select("term", *shuffle_cols)
-        # ord builds range/sort on the ordinal (same order as doc_id, 8
-        # bytes vs a string in every shuffle row + sort comparison)
-        sub_key = "doc_ord" if with_ord else "doc_id"
-        ranged = bucket_ranged(flat, n_parts, sub_key)
-        # Arrow-native assembly (zero-copy slicing of the sorted
-        # columns); the pandas path survives for the bit-equality
-        # regression test and as an operational fallback
-        if use_arrow:
-            assembled = ranged.mapInArrow(
-                _assemble_arrow_factory(max_per_row, cols), schema
-            )
-        else:
-            assembled = ranged.mapInPandas(
-                _assemble_factory(max_per_row, cols), schema
-            )
-    return _finish_segments(assembled, with_ord)
+    assembled = bucket_ranged(runs, n_parts, "stripe").mapInArrow(
+        _assemble_grouped_arrow_factory(max_per_row), _ASSEMBLED_SCHEMA_ORD
+    )
+    return _finish_segments(assembled)
+
+
+def rechunk_segments(
+    src: DataFrame,
+    n_parts: int,
+    cap: int = MAX_POSTINGS_PER_ROW,
+    posting_filter=None,
+) -> DataFrame:
+    """Re-chunk stored segment rows at `cap` — the one rewrite pass of
+    every maintenance job that moves postings without re-analyzing them
+    (streaming/ingest.recompact, indexing/deletes.purge_deleted,
+    indexing/merge.merge_indexes). All of a term's segments colocate in
+    one task, sorted by their first ordinal (segment ordinal ranges are
+    disjoint, so concatenation keeps doc_ords ascending), flatten back
+    to posting rows zero-copy and re-assemble through the build's Arrow
+    assembler. `posting_filter`, when given, maps the flattened
+    per-posting Arrow batches (columns term + _COLS_ORD) before assembly
+    — purge drops tombstoned ordinals there.
+
+    The exchange ranges by (term_bucket, term) only, never by segment: a
+    partition boundary between two segments of one term would leave one
+    per side (guaranteed under the stripe-grouped merge, which emits one
+    segment per (term, stripe-range) partition), so the fold could not
+    reach full segments. The cost is one serial task per head term,
+    during maintenance only; memory stays bounded because the assembler
+    streams segment rows and emits every `cap` postings."""
+    ranged = bucket_ranged(
+        src.withColumn("seg_lo", F.expr("doc_ords[0]")),
+        n_parts, "seg_lo", split_terms=False,
+    )
+    flatten = _flatten_segments_arrow_factory()
+    assemble = _assemble_arrow_factory(cap)
+
+    def rechunk(batches):
+        flat = flatten(batches)
+        if posting_filter is not None:
+            flat = posting_filter(flat)
+        return assemble(flat)
+
+    return _finish_segments(
+        ranged.mapInArrow(rechunk, _ASSEMBLED_SCHEMA_ORD)
+    )
 
 
 def term_bucket_col():
@@ -1293,43 +1147,39 @@ def bucket_ranged(
     ).sortWithinPartitions(*keys)
 
 
-def _finish_segments(assembled: DataFrame, with_ord: bool) -> DataFrame:
-    """Shared merge tail: term bucket + scalar doc-range columns.
-    Storage stays columnar-in-row (parallel arrays, tag prefix counts):
-    materializing array<struct> + per-position tag strings here costs an
-    unvectorized codegen loop per 32k-element row and multiplies index
-    bytes — consumers reconstruct lazily via with_postings_struct on
-    term-pruned reads (schema.py POSTINGS rationale)."""
-    merged = assembled.withColumn("term_bucket", term_bucket_col())
-    if with_ord:
-        # scalar ordinal range per segment (lineage stats / range pruning
-        # without touching the nested arrays); doc_id strings appear
-        # nowhere — doc_map translates where a consumer needs them
-        merged = merged.withColumn(
-            "ord_lo", F.expr("doc_ords[0]")
-        ).withColumn("ord_hi", F.expr("element_at(doc_ords, -1)"))
-        keep = ["term", "doc_ords", "positions_vb", *_N_PLURALS,
-                "ord_lo", "ord_hi", "term_bucket", "occs", "dls", "xtras"]
-    else:
-        merged = merged.withColumn(
-            "doc_lo", F.expr("doc_ids[0]")
-        ).withColumn("doc_hi", F.expr("element_at(doc_ids, -1)"))
-        keep = ["term", "doc_ids", "positions_vb", *_N_PLURALS,
-                "doc_lo", "doc_hi", "term_bucket", "occs", "dls", "xtras"]
-    return merged.select(*keep)
+def _finish_segments(assembled: DataFrame) -> DataFrame:
+    """Shared tail of every segment writer (merge_postings,
+    rechunk_segments): term bucket + scalar ordinal-range columns, in the
+    one stored column order. Storage stays columnar-in-row (parallel
+    arrays, tag prefix counts): materializing array<struct> +
+    per-position tag strings here costs an unvectorized codegen loop per
+    32k-element row and multiplies index bytes — consumers reconstruct
+    lazily via with_postings_struct on term-pruned reads (schema.py
+    POSTINGS rationale)."""
+    # scalar ordinal range per segment (lineage stats / range pruning
+    # without touching the nested arrays); doc_id strings appear nowhere
+    # — doc_map translates where a consumer needs them
+    return (
+        assembled.withColumn("term_bucket", term_bucket_col())
+        .withColumn("ord_lo", F.expr("doc_ords[0]"))
+        .withColumn("ord_hi", F.expr("element_at(doc_ords, -1)"))
+        .select(
+            "term", "doc_ords", "positions_vb", *_N_PLURALS,
+            "ord_lo", "ord_hi", "term_bucket", "occs", "dls", "xtras",
+        )
+    )
 
 
 def build_lexicon(postings: DataFrame) -> DataFrame:
     """Lexicon (term -> df) from segment rows. A partial-aggregated
-    groupBy over (term, size(doc_ids)) scalars: map-side combine collapses
+    groupBy over (term, size(doc_ords)) scalars: map-side combine collapses
     each partition to its distinct terms, so a head term contributes at
     most one row per partition to the shuffle — no colocation of its
     posting data, no skew (schema.py LEXICON rationale). df = sum of
     segment sizes = the term's true document frequency (what the reference
     reads as postings-map size, Ranker.java:194)."""
-    seg_col = "doc_ords" if "doc_ords" in postings.columns else "doc_ids"
     return postings.groupBy("term_bucket", "term").agg(
-        F.sum(F.size(seg_col)).cast("int").alias("df")
+        F.sum(F.size("doc_ords")).cast("int").alias("df")
     ).select("term", "df", "term_bucket")
 
 
@@ -1361,9 +1211,6 @@ def build_doc_len_from_flat(flat: DataFrame) -> DataFrame:
     positions arrays are never touched. Docs with zero admitted tokens
     carry no postings and so never appear here; query paths coalesce a
     missing dl to 0 (they can only see docs that DO have postings).
-    Falls back to size(positions) for pre-v6 analyzed frames that lack
-    the occ column (equal by construction; analyzer emits occ ==
-    len(positions)).
 
     Grouped (v13) checkpoints carry DOC ROWS (stripe == DOC_ROW_STRIPE,
     term = doc_id, n = dl): the table is a columnar FILTER of the
@@ -1379,9 +1226,8 @@ def build_doc_len_from_flat(flat: DataFrame) -> DataFrame:
             )
             .dropDuplicates(["doc_id"])
         )
-    occ = F.col("occ") if "occ" in flat.columns else F.size("positions")
     return flat.groupBy("doc_id").agg(
-        F.sum(occ).cast("long").alias("dl")
+        F.sum("occ").cast("long").alias("dl")
     )
 
 
@@ -1420,17 +1266,16 @@ def decode_positions_list_udf():
     return _d
 
 
-def with_postings_struct(
-    df: DataFrame, doc_map: DataFrame | None = None
-) -> DataFrame:
+def with_postings_struct(df: DataFrame, doc_map: DataFrame) -> DataFrame:
     """Compatibility/API view: adds the `postings
     array<struct<doc_id,tf,positions,tags>>` column reconstructed from the
     compact parallel arrays (varbyte positions decoded). Use on
     term-pruned reads (tests, exports) — NOT on the build hot path.
 
-    Ord-layout segments (v8: no doc_id strings on disk) need the index's
-    `doc_map` to translate: the arrays are exploded, joined, and regrouped
-    per segment — fine for pruned/test reads, never for the build path."""
+    Segments store ordinals only (layout v8: no doc_id strings on disk),
+    so the index's `doc_map` translates: the arrays are exploded, joined,
+    and regrouped per segment — fine for pruned/test reads, never for the
+    build path."""
     if "positions_vb" in df.columns and "positions" not in df.columns:
         df = df.withColumn(
             "positions", decode_positions_list_udf()(F.col("positions_vb"))
@@ -1441,38 +1286,33 @@ def with_postings_struct(
     tf = (
         "(CAST(x.occs + 1 AS DOUBLE) / CAST(x.dls + x.xtras AS DOUBLE))"
     )
-    if "doc_ids" not in df.columns:
-        if doc_map is None:
-            raise ValueError(
-                "ord-layout postings need doc_map to reconstruct doc_ids"
-            )
-        # Content-derived segment key: segments partition each term's
-        # ordinal space, so (term, first ordinal) is unique — unlike
-        # monotonically_increasing_id(), it is stable when the two
-        # branches of this fork-join recompute the scan independently
-        # (m.i.id is partition-layout-dependent and silently zipped
-        # wrong doc_ids onto segments when task placement differed).
-        seg = df.withColumn(
-            "_seg",
-            F.concat_ws(
-                "\x00",
-                F.col("term"),
-                F.element_at("doc_ords", 1).cast("string"),
-            ),
-        )
-        ex = seg.select(
-            "_seg",
-            F.explode(F.col("doc_ords")).alias("doc_ord"),
-        ).join(doc_map, "doc_ord")
-        rebuilt = ex.groupBy("_seg").agg(
-            F.array_sort(
-                F.collect_list(F.struct("doc_ord", "doc_id"))
-            ).alias("_entries")
-        ).select(
-            "_seg",
-            F.expr("transform(_entries, x -> x.doc_id)").alias("doc_ids"),
-        )
-        df = seg.join(rebuilt, "_seg").drop("_seg")
+    # Content-derived segment key: segments partition each term's
+    # ordinal space, so (term, first ordinal) is unique — unlike
+    # monotonically_increasing_id(), it is stable when the two branches
+    # of this fork-join recompute the scan independently (m.i.id is
+    # partition-layout-dependent and silently zipped wrong doc_ids onto
+    # segments when task placement differed).
+    seg = df.withColumn(
+        "_seg",
+        F.concat_ws(
+            "\x00",
+            F.col("term"),
+            F.element_at("doc_ords", 1).cast("string"),
+        ),
+    )
+    ex = seg.select(
+        "_seg",
+        F.explode(F.col("doc_ords")).alias("doc_ord"),
+    ).join(doc_map, "doc_ord")
+    rebuilt = ex.groupBy("_seg").agg(
+        F.array_sort(
+            F.collect_list(F.struct("doc_ord", "doc_id"))
+        ).alias("_entries")
+    ).select(
+        "_seg",
+        F.expr("transform(_entries, x -> x.doc_id)").alias("doc_ids"),
+    )
+    df = seg.join(rebuilt, "_seg").drop("_seg")
     zipped = (
         "arrays_zip(doc_ids, positions, occs, dls, xtras, "
         + ", ".join(_N_PLURALS)
@@ -1872,15 +1712,6 @@ class IndexBuilder:
                 # layout v13: the checkpoint is already grouped runs —
                 # the merge is exactly one exchange + assembly
                 postings = merge_postings(flat, self.max_per_row)
-            elif "doc_ord" in flat.columns:
-                # per-posting rows carrying doc_ord (pre-v13 checkpoints,
-                # direct callers) — group at merge time. n_docs for the
-                # stripe width comes from the doc_map footers
-                # (metadata-only count).
-                n_docs = self.spark.read.parquet(self.doc_map_dir).count()
-                postings = merge_postings(
-                    flat, self.max_per_row, n_docs_hint=n_docs
-                )
             else:
                 # stream-analyzed rows (compact bootstrap) can't know
                 # ordinals at arrival: assign now and join. The doc space

@@ -15,12 +15,12 @@ follows the standard LSM/Lucene semantics:
      delete (pinned in tests/test_deletes.py).
 
   2. `purge_deleted` is the maintenance pass: it rewrites the postings
-     without the tombstoned ordinals (reusing the merge stage's
-     zero-copy flatten/assemble machinery, the same path recompact
-     rides), rebuilds lexicon/blocks from the rewritten segments,
-     filters the doc tables, recomputes meta stats from the REWRITTEN
-     tables (idempotent — a crashed purge can simply run again), and
-     clears the tombstones last. After a purge the index is
+     without the tombstoned ordinals (build.rechunk_segments, the one
+     re-chunk pass recompact and merge_indexes also ride), rebuilds
+     lexicon/blocks from the rewritten segments, filters the doc
+     tables, recomputes meta stats from the REWRITTEN tables
+     (idempotent — a crashed purge can simply run again), and clears
+     the tombstones last. After a purge the index is
      statistically identical to a fresh build over the surviving corpus
      (doc ordinals keep their values — holes are fine, ordinal order
      still equals doc_id order — and every score matches the fresh
@@ -131,7 +131,9 @@ def purge_deleted(
     """Physically remove tombstoned docs from every index table and fold
     their counts out of the corpus statistics. Returns the number of
     docs purged (0 = no tombstones, nothing touched). Idempotent: stats
-    are recomputed from the rewritten tables, never decremented.
+    are recomputed from the rewritten tables, never decremented. The
+    postings rewrite is build.rechunk_segments with a per-batch filter
+    that drops the tombstoned ordinals from the flattened posting rows.
 
     `fail_at` injects a crash for recovery tests (tests/test_deletes.py):
     'staged' = everything staged, nothing swapped; 'half_swapped' =
@@ -141,19 +143,11 @@ def purge_deleted(
     ordinals is a no-op) and a purge re-run heals the index."""
     import numpy as np
 
-    from apt_search_engine_spark.config import (
-        MAX_POSTINGS_PER_ROW,
-        N_TERM_BUCKETS,
-    )
+    from apt_search_engine_spark.config import N_TERM_BUCKETS
     from apt_search_engine_spark.indexing.blocks import write_blocks
     from apt_search_engine_spark.indexing.build import (
-        _ASSEMBLED_SCHEMA_ORD,
-        _COLS_ORD,
-        _assemble_arrow_factory,
-        _flatten_segments_arrow_factory,
-        bucket_ranged,
         build_lexicon,
-        term_bucket_col,
+        rechunk_segments,
     )
 
     # single-writer maintenance (the compact() contract): stale staged or
@@ -178,23 +172,13 @@ def purge_deleted(
     with_blocks = os.path.isdir(blocks_dir)
 
     # ---- postings: flatten -> drop dead ords -> re-assemble ------------
-    # same bucket-aligned, streaming-rechunk shape as recompact: all of a
-    # term's segments colocate (sorted by first ordinal), flatten to
-    # posting rows zero-copy, mask, re-chunk at the standard cap
-    src = spark.read.parquet(postings_dir).withColumn(
-        "seg_lo", F.expr("doc_ords[0]")
-    )
-    n_parts = max(spark.sparkContext.defaultParallelism, N_TERM_BUCKETS)
-    ranged = bucket_ranged(src, n_parts, "seg_lo", split_terms=False)
-    flatten = _flatten_segments_arrow_factory(_COLS_ORD)
-    assemble = _assemble_arrow_factory(MAX_POSTINGS_PER_ROW, _COLS_ORD)
-    ord_idx = 1 + _COLS_ORD.index("doc_ord")  # after the leading term col
-
+    # the shared maintenance re-chunk (build.rechunk_segments) with the
+    # tombstone mask applied to the flattened posting rows
     def _drop_dead(batches):
         import pyarrow as pa
 
         for b in batches:
-            ords = b.column(ord_idx).to_numpy()
+            ords = b.column("doc_ord").to_numpy()
             pos = np.searchsorted(dead_ords, ords)
             pos_c = np.minimum(pos, dead_ords.size - 1)
             live = dead_ords[pos_c] != ords
@@ -203,14 +187,10 @@ def purge_deleted(
             elif live.any():
                 yield b.filter(pa.array(live))
 
-    def _rewrite(batches):
-        return assemble(_drop_dead(flatten(batches)))
-
-    body = ranged.mapInArrow(_rewrite, _ASSEMBLED_SCHEMA_ORD)
-    rewritten = (
-        body.withColumn("term_bucket", term_bucket_col())
-        .withColumn("ord_lo", F.expr("doc_ords[0]"))
-        .withColumn("ord_hi", F.expr("element_at(doc_ords, -1)"))
+    rewritten = rechunk_segments(
+        spark.read.parquet(postings_dir),
+        max(spark.sparkContext.defaultParallelism, N_TERM_BUCKETS),
+        posting_filter=_drop_dead,
     )
     staging = os.path.join(index_dir, "_staging", f"purge_{uuid.uuid4().hex[:8]}")
     rewritten.write.mode("overwrite").partitionBy("term_bucket").parquet(staging)

@@ -17,9 +17,10 @@ Merge semantics (Lucene docBase concatenation):
     ordinals, rewritten ordinal-ordered for row-group point-lookup
     skipping); the lexicon is recounted from the merged postings
     (shards are doc-disjoint, so dfs add); blocks are re-derived.
-  - postings segments are re-chunked at the standard cap with the same
-    zero-copy Arrow flatten -> assemble pass purge/recompact use, so a
-    K-shard merge does not leave K-way per-term segment fragmentation.
+  - postings segments are re-chunked at the standard cap by
+    build.rechunk_segments, the zero-copy Arrow flatten -> assemble pass
+    purge/recompact use too, so a K-shard merge does not leave K-way
+    per-term segment fragmentation.
 
 Scores are unaffected by the ordinal renumbering: per-doc contributions
 fold in ascending TERM order (engine._score), tf/wtf/df/dl are
@@ -47,10 +48,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from apt_search_engine_spark.config import (
-    MAX_POSTINGS_PER_ROW,
-    N_TERM_BUCKETS,
-)
+from apt_search_engine_spark.config import N_TERM_BUCKETS
 
 
 def _read_meta(src: str) -> dict:
@@ -68,19 +66,17 @@ def merge_indexes(
     """Merge the indexes at `src_dirs` (>= 2, doc-disjoint, same layout)
     into a fresh index at `out_dir`. Returns the merged meta dict.
 
+    Postings of all shards, ordinals shifted by each shard's docBase,
+    re-chunk in one build.rechunk_segments pass.
+
     Refuses shards with pending tombstones (purge first: tombstoned
     ordinals are shard-local and must not survive the renumbering) and
     overlapping doc_ids (the same doc indexed twice would double-count
     df and score)."""
     from apt_search_engine_spark.indexing.blocks import write_blocks
     from apt_search_engine_spark.indexing.build import (
-        _ASSEMBLED_SCHEMA_ORD,
-        _COLS_ORD,
-        _assemble_arrow_factory,
-        _flatten_segments_arrow_factory,
-        bucket_ranged,
         build_lexicon,
-        term_bucket_col,
+        rechunk_segments,
     )
     from apt_search_engine_spark.indexing.deletes import tombstones_df
 
@@ -171,22 +167,7 @@ def merge_indexes(
             "doc_ords", F.expr(f"transform(doc_ords, x -> x + {off}L)")
         )
         src = p if src is None else src.unionByName(p)
-    ranged = bucket_ranged(
-        src.withColumn("seg_lo", F.expr("doc_ords[0]")),
-        n_parts, "seg_lo", split_terms=False,
-    )
-    flatten = _flatten_segments_arrow_factory(_COLS_ORD)
-    assemble = _assemble_arrow_factory(MAX_POSTINGS_PER_ROW, _COLS_ORD)
-
-    def _rechunk(batches):
-        return assemble(flatten(batches))
-
-    body = ranged.mapInArrow(_rechunk, _ASSEMBLED_SCHEMA_ORD)
-    rewritten = (
-        body.withColumn("term_bucket", term_bucket_col())
-        .withColumn("ord_lo", F.expr("doc_ords[0]"))
-        .withColumn("ord_hi", F.expr("element_at(doc_ords, -1)"))
-    )
+    rewritten = rechunk_segments(src, n_parts)
     postings_dir = os.path.join(out_dir, "postings")
     rewritten.write.mode("overwrite").partitionBy("term_bucket").parquet(
         postings_dir

@@ -91,13 +91,6 @@ def make_handler(engine, synonyms_df=None, cache_size: int = 256):
     lru: OrderedDict = OrderedDict()
     lru_lock = threading.Lock()
 
-    def _cache_key(path: str):
-        try:
-            tok = engine._state_token()
-        except Exception:
-            return None  # in-memory engines have no commit marker
-        return (tuple(tok) if isinstance(tok, list) else tok, syn_tok, path)
-
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, *a):  # quiet
             pass
@@ -233,9 +226,9 @@ def make_handler(engine, synonyms_df=None, cache_size: int = 256):
         def _cache_get(self):
             if cache_size <= 0:
                 return None, None
-            key = _cache_key(self.path)
-            if key is None:
-                return None, None
+            # a commit publishes a new index state: entries of the old
+            # state can no longer hit
+            key = (engine._state_token(), syn_tok, self.path)
             t0 = time.time()
             with lru_lock:
                 obj = lru.get(key)

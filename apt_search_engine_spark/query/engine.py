@@ -405,13 +405,12 @@ def bm25_idf(df: int, n_docs: int) -> float:
 
 
 class SearchEngine:
-    def __init__(self, spark: SparkSession, index_dir: str | None = None,
-                 postings_df: DataFrame | None = None, n_docs: int | None = None,
+    def __init__(self, spark: SparkSession, index_dir: str,
                  doc_prior: DataFrame | None = None,
                  deleted_ids: list[str] | None = None):
-        """Disk-backed when `index_dir` is given (bucket-pruned scans);
-        in-memory when a grouped `postings_df` (+ n_docs) is given —
-        used for ad-hoc corpora without a persisted index.
+        """Query engine over the disk index at `index_dir`: bucket-pruned
+        scans in ordinal space (layout v8 — doc_id strings live once, in
+        doc_map, and translate back only on the final top-k rows).
 
         `doc_prior` is an optional (url, prior) DataFrame — the reference's
         per-URL pagerank multiplier (Ranker.java:196,328; typically fed by
@@ -428,8 +427,6 @@ class SearchEngine:
         rewrites the index."""
         self.spark = spark
         self.index_dir = index_dir
-        self._postings_df = postings_df
-        self._lexicon_df = None
         self.doc_prior = doc_prior
         self.deleted_ids = sorted(set(deleted_ids)) if deleted_ids else None
         self._deleted_cache: dict[str, object] = {}
@@ -438,24 +435,12 @@ class SearchEngine:
         # parquet footer key ranges per (table dir, key column) for the
         # driver-side point reads (query/pointread.py)
         self._footer_cache: dict[tuple[str, str], list] = {}
-        if index_dir is not None:
-            self.postings_path = os.path.join(index_dir, "postings")
-            self.lexicon_path = os.path.join(index_dir, "lexicon")
-            self.doc_meta_path = os.path.join(index_dir, "doc_meta")
-            self.doc_len_path = os.path.join(index_dir, "doc_len")
-            self._load_meta()
-            self._index_state = self._state_token()
-        else:
-            if postings_df is None or n_docs is None:
-                raise ValueError("need index_dir or (postings_df, n_docs)")
-            self.doc_meta_path = None
-            self.doc_len_path = None
-            self.total_len = 0
-            self.n_docs = n_docs
-            from apt_search_engine_spark.indexing.build import build_lexicon
-
-            self._lexicon_df = build_lexicon(postings_df).cache()
-            self._derive_corpus_stats()
+        self.postings_path = os.path.join(index_dir, "postings")
+        self.lexicon_path = os.path.join(index_dir, "lexicon")
+        self.doc_meta_path = os.path.join(index_dir, "doc_meta")
+        self.doc_len_path = os.path.join(index_dir, "doc_len")
+        self._load_meta()
+        self._index_state = self._state_token()
 
     def _load_meta(self) -> None:
         with open(os.path.join(self.index_dir, "meta.json")) as f:
@@ -464,9 +449,6 @@ class SearchEngine:
         # BM25 corpus statistic (layout v6); 0 on older indexes —
         # search_bm25_df refuses rather than misscore
         self.total_len = int(meta.get("total_len") or 0)
-        self._derive_corpus_stats()
-
-    def _derive_corpus_stats(self) -> None:
         # uniform doc prior: transcripts have no link graph; the reference's
         # absent-URL default is 1/|pageRanks| (Ranker.java:196) — kept as a
         # multiplied constant so scores match the oracle bit-for-bit.
@@ -501,46 +483,16 @@ class SearchEngine:
         # the MLT term-selection memo pins the same index state (dfs and
         # the seed's stored text both feed it)
         getattr(self, "_mlt_cache", {}).clear()
-        if self.index_dir is not None:
-            self._load_meta()
-            self._index_state = self._state_token()
+        self._load_meta()
+        self._index_state = self._state_token()
 
     def _ensure_fresh(self) -> None:
         """The df/reader memos pin one index state; compaction publishes a
         new one (atomic meta/merge_state replace). Re-checking the commit
         markers on each public query keeps long-lived engines (jobs/serve
         over a streamed index) correct across compactions."""
-        if self.index_dir is not None and self._state_token() != self._index_state:
+        if self._state_token() != self._index_state:
             self.refresh()
-
-    @classmethod
-    def over_transcripts(cls, spark: SparkSession, transcripts: DataFrame,
-                         n_docs: int | None = None) -> "SearchEngine":
-        """Ad-hoc engine: analyze+merge the corpus into an in-memory
-        postings DataFrame (cached) — the no-persisted-index path."""
-        from apt_search_engine_spark.indexing.build import (
-            analyze_transcripts,
-            merge_postings,
-        )
-
-        if n_docs is None:
-            n_docs = transcripts.count()
-        postings = merge_postings(analyze_transcripts(transcripts)).cache()
-        return cls(spark, postings_df=postings, n_docs=n_docs)
-
-    def _key(self) -> str:
-        """Per-doc grouping/join key of the exploded postings: the string
-        doc_id for ad-hoc in-memory corpora, the dense ORDINAL for disk
-        indexes (layout v8 — doc_id strings live exactly once, in
-        doc_map). Every retrieval/scoring stage runs on this key; ordinal
-        order == global doc_id order (write_doc_map assigns ordinals in
-        doc_id order), so tiebreaks, fold order and top-k cuts are
-        identical, and translation back to doc_id happens ONCE on the
-        final <=k rows (query/wand.translate_topk: a driver-side point
-        read of the ordinal-ordered doc_map, returned as a local
-        relation) instead of joining the corpus-sized doc_map into every
-        candidate row (VERDICT r3 'what's wrong' #3)."""
-        return "doc_id" if self._postings_df is not None else "doc_ord"
 
     # ------------------------------------------------------------------ P2
     # heading-channel -> per-posting count array of the segment layout
@@ -561,10 +513,10 @@ class SearchEngine:
         with_all_fields: bool = False,
     ) -> DataFrame:
         """Bucket-pruned scan of the distinct `terms`, exploded to
-        (term, <key>, wtf[, positions_vb][, occ, dl][, df]) rows — <key>
-        per self._key(). Only what the caller's plan consumes is zipped
-        and exploded, so parquet column pruning reaches the scan: the
-        normal scoring path reads (term, key, wtf inputs) and nothing
+        (term, doc_ord, wtf[, positions_vb][, occ, dl][, df]) rows. Only
+        what the caller's plan consumes is zipped and exploded, so parquet
+        column pruning reaches the scan: the normal scoring path reads
+        (term, doc_ord, wtf inputs) and nothing
         else. `with_df` carries the build-time document frequency as a
         literal map over the lexicon dfs — for the normal path this
         replaces a query-time Exchange+Sort+Window recount (same value:
@@ -586,14 +538,11 @@ class SearchEngine:
             return self._empty_postings(
                 with_positions=with_positions, with_occ_dl=with_occ_dl
             )
-        if self._postings_df is not None:
-            src = self._postings_df.where(sql_in("term", distinct))
-        else:
-            buckets = sorted({self._bucket(t) for t in distinct})
-            src = self._read(self.postings_path).where(
-                f"{sql_in('term_bucket', buckets)} AND "
-                f"{sql_in('term', distinct)}"
-            )
+        buckets = sorted({self._bucket(t) for t in distinct})
+        src = self._read(self.postings_path).where(
+            f"{sql_in('term_bucket', buckets)} AND "
+            f"{sql_in('term', distinct)}"
+        )
         # wtf is derived, not stored (layout v10): one JVM transform over
         # the zipped small-int arrays of the pruned segments — identical
         # float64 arithmetic to the analyzer (build.WTFS_FROM_SEGMENT_EXPR
@@ -602,11 +551,7 @@ class SearchEngine:
             WTFS_FROM_SEGMENT_EXPR,
         )
 
-        key = self._key()
-        zips = {
-            key: "doc_ids" if key == "doc_id" else "doc_ords",
-            "wtf": WTFS_FROM_SEGMENT_EXPR,
-        }
+        zips = {"doc_ord": "doc_ords", "wtf": WTFS_FROM_SEGMENT_EXPR}
         if with_positions:
             zips["positions_vb"] = "positions_vb"
         if with_occ_dl:
@@ -634,15 +579,14 @@ class SearchEngine:
             f"inline(arrays_zip({', '.join(zips.values())}))"
             f" AS ({', '.join(zips)})"
         )
-        return self._filter_deleted(src.selectExpr(*cols), key)
+        return self._filter_deleted(src.selectExpr(*cols))
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         """Document frequency per term from the lexicon: a driver-side
         point read of the query terms' `lexicon/term_bucket=*`
         directories (query/pointread.py — pyarrow opens only the row
         groups whose footer term range holds a query term; the lexicon
-        is term-sorted within each bucket, so no Spark job runs), or a
-        filter over the in-memory lexicon frame.
+        is term-sorted within each bucket, so no Spark job runs).
 
         Memoized per engine instance (absent terms cached as absent
         too): one query touches the lexicon for the same words from
@@ -655,24 +599,18 @@ class SearchEngine:
             return {}
         missing = [t for t in distinct if t not in self._df_cache]
         if missing:
-            if self._lexicon_df is not None:
-                rows = self._lexicon_df.filter(
-                    F.col("term").isin(missing)
-                ).select("term", "df").collect()
-                got = {r.term: int(r.df) for r in rows}
-            else:
-                by_bucket: dict[int, list[str]] = {}
-                for t in missing:
-                    by_bucket.setdefault(self._bucket(t), []).append(t)
-                got = {}
-                for b, ts in sorted(by_bucket.items()):
-                    for r in self._point_read(
-                        os.path.join(self.lexicon_path, f"term_bucket={b}"),
-                        "term",
-                        ts,
-                        ["term", "df"],
-                    ):
-                        got[r["term"]] = int(r["df"])
+            by_bucket: dict[int, list[str]] = {}
+            for t in missing:
+                by_bucket.setdefault(self._bucket(t), []).append(t)
+            got = {}
+            for b, ts in sorted(by_bucket.items()):
+                for r in self._point_read(
+                    os.path.join(self.lexicon_path, f"term_bucket={b}"),
+                    "term",
+                    ts,
+                    ["term", "df"],
+                ):
+                    got[r["term"]] = int(r["df"])
             for t in missing:
                 self._df_cache[t] = got.get(t)  # None = absent
         return {
@@ -722,12 +660,11 @@ class SearchEngine:
         ).select("doc_ord", "doc_id")
 
     def _deleted_keys(self):
-        """The deleted-doc key set in this engine's key space, or None.
-        Disk engines: a SORTED np.int64 array of tombstoned ordinals
-        (committed tombstones ∪ the ctor's ad-hoc deleted_ids resolved
-        via doc_map) — also what the WAND scorers mask with. In-memory
-        engines: the sorted doc_id strings. Memoized per index state
-        (refresh() clears it); None costs nothing on the hot path.
+        """The deleted-doc ordinals as a SORTED np.int64 array, or None:
+        committed tombstones ∪ the ctor's ad-hoc deleted_ids resolved via
+        doc_map — also what the WAND scorers mask with. Memoized per
+        index state (refresh() clears it); None costs nothing on the hot
+        path.
 
         Past DELETED_COLLECT_MAX tombstones the set is NOT collected:
         this returns None and _deleted_df() carries the distributed
@@ -737,9 +674,7 @@ class SearchEngine:
         if "keys" in self._deleted_cache:
             return self._deleted_cache["keys"]
         keys = None
-        if self._postings_df is not None:
-            keys = self.deleted_ids  # string key space, already sorted
-        elif not self._deleted_distributed():
+        if not self._deleted_distributed():
             import numpy as np
 
             from apt_search_engine_spark.indexing.deletes import (
@@ -769,8 +704,6 @@ class SearchEngine:
         comes from the tombstone MARKER (n_deleted, stamped by
         delete_docs) plus the ad-hoc list — two os-level reads, no Spark
         job on the undeleted hot path."""
-        if self.index_dir is None:
-            return False
         n = len(self.deleted_ids or [])
         try:
             with open(
@@ -814,8 +747,8 @@ class SearchEngine:
         self._deleted_cache["df"] = out
         return out
 
-    def _filter_deleted(self, df: DataFrame, col: str) -> DataFrame:
-        """Drop rows whose `col` is a deleted doc key — applied to the
+    def _filter_deleted(self, df: DataFrame) -> DataFrame:
+        """Drop rows whose doc_ord is deleted — applied to the
         candidate source (_exploded) so every exact plan (normal/phrase/
         boolean, reference and BM25 scorers, batch mode) excludes
         tombstoned docs before scoring; the bound probe (_term_doc_set)
@@ -832,17 +765,14 @@ class SearchEngine:
             dead_df = self._deleted_df()
             if dead_df is None:
                 return df
-            return df.join(
-                dead_df.withColumnRenamed("doc_ord", col), col, "left_anti"
-            )
-        items = [k.item() if hasattr(k, "item") else k for k in keys]
+            return df.join(dead_df, "doc_ord", "left_anti")
+        items = [int(k) for k in keys]
         if len(items) <= 1024:
-            return df.where(f"NOT ({sql_in(col, items)})")
-        schema = (
-            f"{col} string" if isinstance(items[0], str) else f"{col} long"
+            return df.where(f"NOT ({sql_in('doc_ord', items)})")
+        dead = self.spark.createDataFrame(
+            [(i,) for i in items], "doc_ord long"
         )
-        dead = self.spark.createDataFrame([(i,) for i in items], schema)
-        return df.join(F.broadcast(dead), col, "left_anti")
+        return df.join(F.broadcast(dead), "doc_ord", "left_anti")
 
     def _bucket(self, term: str) -> int:
         # must match F.pmod(F.xxhash64(term), N) used at build time; the
@@ -855,15 +785,11 @@ class SearchEngine:
     def _empty_postings(
         self, with_positions: bool = False, with_occ_dl: bool = False
     ) -> DataFrame:
-        key = (
-            "doc_id string"
-            if self._postings_df is not None
-            else "doc_ord long"
-        )
         pos = ", positions_vb binary" if with_positions else ""
         occ_dl = ", occ int, dl int" if with_occ_dl else ""
         return local_frame(
-            self.spark, [], f"term string, {key}, wtf double{pos}{occ_dl}"
+            self.spark, [],
+            f"term string, doc_ord long, wtf double{pos}{occ_dl}",
         )
 
     def _term_doc_set(self, term: str) -> DataFrame:
@@ -872,16 +798,10 @@ class SearchEngine:
         the semi-join side of a candidate bound (_bounded) costs a two-
         column parquet read instead of the full posting payload. It
         only bounds: the bounded side already dropped tombstoned docs."""
-        key = self._key()
-        plural = "doc_ids" if key == "doc_id" else "doc_ords"
-        if self._postings_df is not None:
-            src = self._postings_df.where(f"term = {_sql_lit(term)}")
-        else:
-            src = self._read(self.postings_path).where(
-                f"term_bucket = {self._bucket(term)} AND "
-                f"term = {_sql_lit(term)}"
-            )
-        return src.selectExpr(f"explode({plural}) AS {key}")
+        return self._read(self.postings_path).where(
+            f"term_bucket = {self._bucket(term)} AND "
+            f"term = {_sql_lit(term)}"
+        ).selectExpr("explode(doc_ords) AS doc_ord")
 
     def _bounded(
         self, ex: DataFrame, terms: list[str], dfs: dict[str, int],
@@ -908,7 +828,7 @@ class SearchEngine:
         ) - dfs[rare]
         if cut < config.BOUND_MIN_CUT_ROWS:
             return ex
-        return ex.join(self._term_doc_set(rare), self._key(), "left_semi")
+        return ex.join(self._term_doc_set(rare), "doc_ord", "left_semi")
 
     # -------------------------------------------------------------- P4+P5
     def _phrase_filtered(
@@ -948,7 +868,6 @@ class SearchEngine:
         distinct = sorted(set(terms))
         if not terms:
             return self._empty_postings(with_occ_dl=with_occ_dl)
-        key = self._key()
         dfs = self.term_dfs(distinct)
         if any(t not in dfs for t in distinct):
             return self._empty_postings(with_occ_dl=with_occ_dl)
@@ -968,7 +887,7 @@ class SearchEngine:
         # map_from_entries/array_intersect fold (that chain cost ~2x
         # this shape's wall on head-term phrases at bench scale).
         matched = (
-            ex.groupBy(key)
+            ex.groupBy("doc_ord")
             .agg(F.expr(
                 f"collect_list(struct(term, positions_vb, wtf{extra})) AS ps"
             ))
@@ -987,7 +906,7 @@ class SearchEngine:
             ", x.occ AS occ, x.dl AS dl" if with_occ_dl else ""
         )
         return matched.selectExpr(
-            key, f"inline(transform(ps, x -> struct({out})))"
+            "doc_ord", f"inline(transform(ps, x -> struct({out})))"
         )
 
     # ----------------------------------------------------------------- P7
@@ -1008,7 +927,6 @@ class SearchEngine:
         union into ONE per-doc aggregate, ONE fused Arrow UDF evaluates
         every segment's match, and the left-fold set algebra plus the
         owner-segment restriction are SQL expressions over its flags."""
-        key = self._key()
         segments = [p for p in parsed.segments if not parser.is_operator(p)]
         operators = parser.extract_operators(parsed.segments)
 
@@ -1071,7 +989,9 @@ class SearchEngine:
                 "CAST(NULL AS BINARY) AS positions_vb"
             )
             tagged.append(ex.selectExpr(
-                key, f"{i} AS seg", f"struct(term, wtf, {pos}{extra}) AS p"
+                "doc_ord",
+                f"{i} AS seg",
+                f"struct(term, wtf, {pos}{extra}) AS p",
             ))
         union = tagged[0]
         for t in tagged[1:]:
@@ -1082,11 +1002,11 @@ class SearchEngine:
         # for bare segments, the positions shift-intersection for phrase
         # segments — over the one per-doc aggregate of all segments
         fold = _boolean_fold_udf(seg_specs)
-        per_doc = union.groupBy(key).agg(
+        per_doc = union.groupBy("doc_ord").agg(
             F.expr("collect_list(struct(seg, p)) AS ps")
         )
         per_doc = per_doc.select(
-            key,
+            "doc_ord",
             "ps",
             fold(
                 F.expr("transform(ps, x -> x.seg)"),
@@ -1131,7 +1051,7 @@ class SearchEngine:
             ", x.p.occ AS occ, x.p.dl AS dl" if with_occ_dl else ""
         )
         return per_doc.where(keep).selectExpr(
-            key,
+            "doc_ord",
             f"inline(transform(filter(ps, x -> {' OR '.join(conds)}), "
             f"x -> struct({out})))",
         )
@@ -1160,19 +1080,6 @@ class SearchEngine:
             # through doc_meta + doc_map ON THE PRIOR SIDE (metadata-table
             # joins, never the postings), so candidate rows join once
             pri = self._prior_by_ord()
-        elif key == "doc_id":
-            # priors are keyed by URL (reference pageRanks map); map them
-            # into doc space through doc_meta when it exists, else urls
-            # default to doc_ids (write_doc_meta default) and join directly
-            if self.doc_meta_path is not None and os.path.isdir(
-                self.doc_meta_path
-            ):
-                urls = self._read(self.doc_meta_path).select(
-                    "doc_id", "url"
-                )
-                pri = urls.join(pri, "url").select("doc_id", "prior")
-            else:
-                pri = pri.withColumnRenamed("url", "doc_id")
         joined = raw_df.join(pri, key, "left")
         return joined.withColumn(
             "score",
@@ -1197,16 +1104,14 @@ class SearchEngine:
 
         The optional first-word gate (quirk Q7) is an aggregate beside
         `raw` in the same per-doc groupBy — max(term = gate) — filtered
-        after it, so it costs no exchange of its own. Ordinal results
-        return through translate_topk, which makes the one top-k cut;
-        the doc_id key space (in-memory engines) cuts here.
+        after it, so it costs no exchange of its own. Results return
+        through translate_topk, which makes the one top-k cut.
 
         Plan shape: `where` + one `selectExpr` for contrib, the
         groupBy, then one `where` + `selectExpr` for the prior and the
         zero filter. Every literal is SQL text and every sub-expression
         is parenthesized, so the association — and the float result —
         is the Column tree's."""
-        key = self._key()
         present = sorted(set(scoring_words))
         mult: dict[str, int] = {}
         for w in scoring_words:
@@ -1223,7 +1128,7 @@ class SearchEngine:
         # note above); same product order as the reference's fold-then-
         # multiply, so scores stay bit-comparable to the oracle
         sp = filtered.where(sql_in("term", present)).selectExpr(
-            key,
+            "doc_ord",
             "term",
             f"((wtf * CAST(FLOOR({self.idf_numerator} / ({df_expr}))"
             f" AS DOUBLE)) * ({mult_expr})) AS contrib",
@@ -1243,34 +1148,31 @@ class SearchEngine:
             # doc_id order). URLs for every candidate are a semantic
             # requirement here, so the candidate rows join doc_meta (via
             # doc_map in ordinal space) — candidate-bounded left side.
-            if self.doc_meta_path is None:
-                raise ValueError("dedup_by_url needs a disk index (doc_meta)")
             if gate is not None:
                 # the Q7 gate is per DOC, the fold below per URL: gate
                 # each doc's rows before they regroup
                 sp = (
-                    sp.groupBy(key)
+                    sp.groupBy("doc_ord")
                     .agg(
                         F.expr("collect_list(struct(term, contrib)) AS cs"),
                         gate,
                     )
                     .where("gate = 1")
-                    .selectExpr(key, "inline(cs)")
+                    .selectExpr("doc_ord", "inline(cs)")
                 )
-            urls = self._read(self.doc_meta_path).select(
-                "doc_id", "url"
+            urls = (
+                self._read(self.doc_meta_path)
+                .select("doc_id", "url")
+                .join(self._doc_map(), "doc_id")
+                .select("doc_ord", "url")
             )
-            if key == "doc_ord":
-                urls = urls.join(self._doc_map(), "doc_id").select(
-                    "doc_ord", "url"
-                )
             raw_by_url = (
-                sp.join(urls, key)
+                sp.join(urls, "doc_ord")
                 .groupBy("url")
                 .agg(
                     F.expr(
                         "aggregate(array_sort(collect_list("
-                        f"struct(term, {key}, contrib))), "
+                        "struct(term, doc_ord, contrib))), "
                         "0D, (acc, x) -> acc + x.contrib)"
                     ).alias("raw")
                 )
@@ -1290,22 +1192,20 @@ class SearchEngine:
         )]
         if gate is not None:
             aggs.append(gate)
-        raw_by_doc = sp.groupBy(key).agg(*aggs)
+        raw_by_doc = sp.groupBy("doc_ord").agg(*aggs)
         if gate is not None:
             raw_by_doc = raw_by_doc.where("gate = 1")
         scored = (
-            self._apply_prior(raw_by_doc, key=key)
+            self._apply_prior(raw_by_doc, key="doc_ord")
             .where("score != 0D")
-            .select(key, "score")
+            .select("doc_ord", "score")
         )
         if count_only:
             # the reference's totalCount (results.size()) without the
             # sort/limit or the doc_map translation
             return scored.selectExpr("count(1) AS n_matches")
-        if key == "doc_id":
-            return scored.orderBy(F.desc("score"), F.asc(key)).limit(k)
-        # ordinal results: translate_topk cuts the top k and point-looks
-        # up doc_map for those rows only
+        # translate_topk cuts the top k and point-looks up doc_map for
+        # those rows only
         from apt_search_engine_spark.query.wand import translate_topk
 
         return translate_topk(self.spark, scored, self._doc_ids, k)
@@ -1319,9 +1219,7 @@ class SearchEngine:
         pri = self.doc_prior.select(
             "url", F.col("prior").cast("double").alias("prior")
         )
-        if self.doc_meta_path is not None and os.path.isdir(
-            self.doc_meta_path
-        ):
+        if os.path.isdir(self.doc_meta_path):
             urls = self._read(self.doc_meta_path).select(
                 "doc_id", "url"
             )
@@ -1355,7 +1253,7 @@ class SearchEngine:
         return self._wand_topk_for_terms(words, k)
 
     def _has_blocks(self) -> bool:
-        return self.index_dir is not None and os.path.isdir(
+        return os.path.isdir(
             os.path.join(self.index_dir, "blocks")
         )
 
@@ -1471,19 +1369,15 @@ class SearchEngine:
         }
         if not words:
             return out
-        key = self._key()
-        if key == "doc_id":
-            keyval = doc_id
-        else:
-            hit = self._point_read(
-                os.path.join(self.index_dir, "doc_map"),
-                "doc_id",
-                [doc_id],
-                ["doc_id", "doc_ord"],
-            )
-            if not hit:
-                return out
-            keyval = int(hit[0]["doc_ord"])
+        hit = self._point_read(
+            os.path.join(self.index_dir, "doc_map"),
+            "doc_id",
+            [doc_id],
+            ["doc_id", "doc_ord"],
+        )
+        if not hit:
+            return out
+        doc_ord = int(hit[0]["doc_ord"])
         present = sorted(set(words))
         sp = filtered.filter(F.col("term").isin(present))
         if "df" not in sp.columns:
@@ -1494,7 +1388,7 @@ class SearchEngine:
                 "df", F.count("*").over(Window.partitionBy("term"))
             )
         rows = (
-            sp.filter(F.col(key) == keyval)
+            sp.filter(F.col("doc_ord") == doc_ord)
             .select("term", "wtf", "df")
             .collect()
         )
@@ -1527,12 +1421,11 @@ class SearchEngine:
         prior = self.prior
         if self.doc_prior is not None:
             url = doc_id
-            if self.doc_meta_path is not None:
-                m = self._point_read(
-                    self.doc_meta_path, "doc_id", [doc_id], ["doc_id", "url"]
-                )
-                if m:
-                    url = m[0]["url"]
+            m = self._point_read(
+                self.doc_meta_path, "doc_id", [doc_id], ["doc_id", "url"]
+            )
+            if m:
+                url = m[0]["url"]
             p = (
                 self.doc_prior.filter(F.col("url") == url)
                 .select(F.col("prior").cast("double").alias("prior"))
@@ -1557,8 +1450,6 @@ class SearchEngine:
         sized: at 10^12 turns the vocabulary is O(10^7-10^8) rows, a cheap
         columnar scan. Prefix/fuzzy expansion cannot bucket-prune (buckets
         are term hashes), so it pays exactly this one scan."""
-        if self._lexicon_df is not None:
-            return self._lexicon_df
         return self._read(self.lexicon_path)
 
     def _cache_dfs(self, rows) -> list[str]:
@@ -1976,8 +1867,6 @@ class SearchEngine:
         Lucene term vector; occurrence counts are invariant under the
         sentence-split round trip because analysis splits on whitespace);
         dfs come from the driver-side pruned lexicon lookup."""
-        if self.doc_meta_path is None:
-            raise ValueError("more_like_this needs a disk index (doc_meta)")
         cache = getattr(self, "_mlt_cache", None)
         if cache is None:
             cache = self._mlt_cache = {}
@@ -2203,10 +2092,13 @@ class SearchEngine:
         )
         if not words:
             return local_frame(self.spark, [], "facet string, n_docs long")
-        key = self._key()
-        docs = self._exploded(words).select(key).distinct()
-        if key == "doc_ord":
-            docs = docs.join(self._doc_map(), "doc_ord").select("doc_id")
+        docs = (
+            self._exploded(words)
+            .select("doc_ord")
+            .distinct()
+            .join(self._doc_map(), "doc_ord")
+            .select("doc_id")
+        )
         return (
             docs.join(facets.select("doc_id", "facet"), "doc_id")
             .groupBy("facet")
@@ -2256,13 +2148,10 @@ class SearchEngine:
         parenthesized, so it parses to the same association as the
         oracle's: idf * ((occ * k1p1) / (occ + (c0 + c1 * dl)))."""
         self._ensure_fresh()
-        if self.index_dir is None:
-            raise ValueError("search_bm25_df needs a disk index (doc_len)")
         if not self.total_len:
             raise ValueError(
                 "index meta has no total_len (pre-v6 layout): rebuild"
             )
-        key = self._key()
         parsed = parser.parse(query)
         filtered = None
         if parsed.qtype == "phrase":
@@ -2305,14 +2194,12 @@ class SearchEngine:
             f"({idf_map}[term] * (({occ} * {k1p1}) / "
             f"({occ} + ({c0} + ({c1} * CAST(dl AS DOUBLE))))))"
         )
-        scored = sp.selectExpr(key, "term", f"{contrib} AS contrib").groupBy(
-            key
-        ).agg(F.expr(
+        scored = sp.selectExpr(
+            "doc_ord", "term", f"{contrib} AS contrib"
+        ).groupBy("doc_ord").agg(F.expr(
             "aggregate(array_sort(collect_list(struct(term, contrib))), "
             "0D, (acc, x) -> acc + x.contrib) AS score"
         ))
-        if key == "doc_id":
-            return scored.orderBy(F.desc("score"), F.asc(key)).limit(k)
         from apt_search_engine_spark.query.wand import translate_topk
 
         return translate_topk(self.spark, scored, self._doc_ids, k)
@@ -2347,8 +2234,6 @@ class SearchEngine:
         textual left-association shared with the generated SQL
         (extras/search_oracle.bm25f_topk_sql)."""
         self._ensure_fresh()
-        if self.index_dir is None:
-            raise ValueError("search_bm25f_df needs a disk index (doc_len)")
         if not self.total_len:
             raise ValueError(
                 "index meta has no total_len (pre-v6 layout): rebuild"
@@ -2356,7 +2241,6 @@ class SearchEngine:
         w = dict(BM25F_WEIGHTS)
         if weights:
             w.update(weights)
-        key = self._key()
         parsed = parser.parse(query)
         # retrieval (candidate set) follows the query type exactly like
         # search_bm25_df — the scorers are interchangeable per query
@@ -2388,7 +2272,7 @@ class SearchEngine:
             # the phrase/boolean set algebra decides WHICH docs match;
             # the field-weighted frame of those docs is what scores
             filtered = filtered.join(
-                cand.select(key).distinct(), key, "left_semi"
+                cand.select("doc_ord").distinct(), "doc_ord", "left_semi"
             )
         avgdl = self.total_len / self.n_docs
         k1p1 = k1 + 1.0
@@ -2419,14 +2303,12 @@ class SearchEngine:
             / (tfw + (F.lit(c0) + F.lit(c1) * F.col("dl").cast("double")))
         )
         sp = filtered.withColumn("contrib", contrib)
-        scored = sp.groupBy(key).agg(
+        scored = sp.groupBy("doc_ord").agg(
             F.expr(
                 "aggregate(array_sort(collect_list(struct(term, contrib))), "
                 "0D, (acc, x) -> acc + x.contrib)"
             ).alias("score")
         )
-        if key == "doc_id":
-            return scored.orderBy(F.desc("score"), F.asc(key)).limit(k)
         from apt_search_engine_spark.query.wand import translate_topk
 
         return translate_topk(self.spark, scored, self._doc_ids, k)
@@ -2456,7 +2338,6 @@ class SearchEngine:
         parsed = parser.parse(query)
         if (
             parsed.qtype not in ("normal", "normal+boolean")
-            or self.index_dir is None
             or not self.total_len
             or not os.path.isdir(os.path.join(self.index_dir, "blocks"))
         ):
@@ -2524,8 +2405,6 @@ class SearchEngine:
         join the local result.
         """
         self._ensure_fresh()
-        if self.index_dir is None:
-            raise ValueError("search_bm25_batch_df needs a disk index")
         if not self.total_len:
             raise ValueError(
                 "index meta has no total_len (pre-v6 layout): rebuild"
@@ -2553,7 +2432,6 @@ class SearchEngine:
             for w in ws
             if dfs.get(w)
         ]
-        key = self._key()
         out: list[tuple] = []
         if qt_rows:
             avgdl = self.total_len / self.n_docs
@@ -2572,12 +2450,12 @@ class SearchEngine:
                 .join(F.broadcast(qt), "term")
                 .selectExpr(
                     "query_id",
-                    key,
+                    "doc_ord",
                     "term",
                     f"(idf * (({occ} * {k1p1}) / ({occ} + "
                     f"({c0} + ({c1} * CAST(dl AS DOUBLE)))))) AS contrib",
                 )
-                .groupBy("query_id", key)
+                .groupBy("query_id", "doc_ord")
                 .agg(F.expr(
                     "aggregate(array_sort(collect_list("
                     "struct(term, contrib))), "
@@ -2586,21 +2464,18 @@ class SearchEngine:
             )
             rows = scored.selectExpr(
                 "query_id",
-                key,
+                "doc_ord",
                 "score",
-                f"row_number() OVER (PARTITION BY query_id ORDER BY score DESC,"
-                f" {key} ASC) AS rn",
+                "row_number() OVER (PARTITION BY query_id ORDER BY score DESC,"
+                " doc_ord ASC) AS rn",
             ).where(f"rn <= {int(k)}").collect()
             # bounded materialization (<= Q*k rows), then the same
             # point-read translation as translate_topk
-            if key == "doc_ord":
-                id_map = self._doc_ids([int(r.doc_ord) for r in rows])
-                out += [
-                    (r.query_id, id_map[int(r.doc_ord)], float(r.score))
-                    for r in rows
-                ]
-            else:
-                out += [(r.query_id, r.doc_id, float(r.score)) for r in rows]
+            id_map = self._doc_ids([int(r.doc_ord) for r in rows])
+            out += [
+                (r.query_id, id_map[int(r.doc_ord)], float(r.score))
+                for r in rows
+            ]
         for qid in sorted(fallback):
             # a local relation too: collecting it runs no job
             out += [
@@ -2707,7 +2582,7 @@ class SearchEngine:
         meta = {}
         # a streamed index has no doc_meta: the point read finds no
         # rows and url falls back to doc_id
-        if top and self.doc_meta_path is not None:
+        if top:
             meta = {
                 m["doc_id"]: m
                 for m in self._point_read(

@@ -96,11 +96,24 @@ def test_bm25_doc_len_table_and_meta(spark, engine, oracle, index_dir):
     assert meta["total_len"] == sum(dl_want.values())
 
 
-def test_bm25_requires_disk_index(spark, corpus_df):
+def test_bm25_requires_disk_index(spark, index_dir, tmp_path):
+    """An index whose meta.json lacks the BM25 corpus statistic
+    total_len (pre-v6 layout) is refused by the BM25 scorer rather than
+    misscored."""
+    import shutil
+
     from apt_search_engine_spark.query.engine import SearchEngine
 
-    eng = SearchEngine.over_transcripts(spark, corpus_df.limit(50), n_docs=50)
-    with pytest.raises(ValueError, match="disk index"):
+    d = str(tmp_path / "no_total_len")
+    shutil.copytree(index_dir, d)
+    meta_path = os.path.join(d, "meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["total_len"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    eng = SearchEngine(spark, d)
+    with pytest.raises(ValueError, match="total_len"):
         eng.search_bm25_df("travel")
 
 

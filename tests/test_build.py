@@ -201,64 +201,121 @@ def test_no_python_row_udfs_in_merge_plan(spark, index_dir):
     assert "PythonUDF" not in plan
 
 
+def _ord_stamped(corpus_df, n: int = 400):
+    """The first `n` turns with doc_ord stamped in doc_id order — what
+    write_doc_map assigns."""
+    from pyspark.sql import Window
+
+    from apt_search_engine_spark.config import doc_id_expr
+
+    return corpus_df.limit(n).withColumn(
+        "doc_ord",
+        (F.dense_rank().over(Window.orderBy(doc_id_expr())) - 1).cast("long"),
+    )
+
+
+# segment payload per posting, in the order the merged rows are compared
+_SEG_FIELDS = (
+    "n_title", "n_h1", "n_h2", "n_h3", "n_h456", "occ", "dl", "xtra",
+)
+
+
+def _reference_postings(rows, ord_of) -> dict[str, list]:
+    """Plain-Python merge of analyzed per-posting rows: group by term,
+    sort by doc ordinal, meta_vb decoded in META_VB_COLS order. `ord_of`
+    maps an analyzed row to its doc ordinal."""
+    from apt_search_engine_spark.analysis.analyzer import META_VB_COLS
+
+    out: dict[str, list] = {}
+    for r in rows:
+        meta = dict(
+            zip(META_VB_COLS, codec.varbyte_decode(bytes(r.meta_vb)).tolist())
+        )
+        out.setdefault(r.term, []).append(
+            (ord_of(r), bytes(r.positions_vb), *(meta[c] for c in _SEG_FIELDS))
+        )
+    return {t: sorted(v) for t, v in out.items()}
+
+
+def _merged_postings(df, cap: int) -> dict[str, list]:
+    """merge_postings output in the reference's shape, asserting the
+    per-segment contract on the way: <= cap postings, ordinals sorted,
+    ord_lo/ord_hi the segment's ends, and a term's segments disjoint,
+    strictly increasing ordinal ranges (the blocks/WAND invariant,
+    indexing/blocks.py). Segment BOUNDARIES are not compared:
+    repartitionByRange samples its bounds, so where a term's postings
+    split is legitimately not run-stable."""
+    out: dict[str, list] = {}
+    ranges: dict[str, list] = {}
+    for r in df.collect():
+        assert len(r.doc_ords) <= cap
+        assert list(r.doc_ords) == sorted(r.doc_ords)
+        assert (r.ord_lo, r.ord_hi) == (r.doc_ords[0], r.doc_ords[-1])
+        ranges.setdefault(r.term, []).append((r.ord_lo, r.ord_hi))
+        out.setdefault(r.term, []).extend(
+            zip(
+                r.doc_ords, (bytes(p) for p in r.positions_vb),
+                r.n_titles, r.n_h1s, r.n_h2s, r.n_h3s, r.n_h456s,
+                r.occs, r.dls, r.xtras,
+            )
+        )
+    for t, rs in ranges.items():
+        rs.sort()
+        for a, b in zip(rs, rs[1:]):
+            assert b[0] > a[1], (t, rs)  # disjoint, increasing
+    return {t: sorted(v) for t, v in out.items()}
+
+
 @pytest.mark.parametrize("cap", [3, 64, 32768])
-def test_arrow_assembler_equals_pandas(spark, corpus_df, cap):
-    """The Arrow-native segment assembler (merge hot path, zero-copy
-    slicing) emits the same per-term posting content as the pandas
-    reference implementation at every cap, including caps that force
-    carry-over between Arrow batches. Segment BOUNDARIES are compared
-    flattened: repartitionByRange samples its range bounds, so the split
-    of one term's postings across partitions (and hence across segments)
-    is legitimately not run-stable — content and per-segment invariants
-    are."""
+def test_arrow_assembler_equals_python_reference(spark, corpus_df, cap):
+    """Per-posting analyzed rows whose ordinals come from a doc_map join
+    (the stream compact shape) merge to exactly the plain-Python
+    reference's per-term postings at every cap, including caps that
+    force carry-over between Arrow batches; a frame with neither
+    ordinals nor a doc_map is refused."""
+    from apt_search_engine_spark.config import doc_id_expr
     from apt_search_engine_spark.indexing.build import (
         analyze_transcripts,
         merge_postings,
     )
 
-    flat = analyze_transcripts(corpus_df.limit(400)).cache()
-
-    def flatten(df):
-        out: dict[str, list] = {}
-        seg_ok = True
-        for r in df.collect():
-            seg_ok &= len(r.doc_ids) <= cap
-            seg_ok &= list(r.doc_ids) == sorted(r.doc_ids)
-            out.setdefault(r.term, []).extend(
-                zip(
-                    r.doc_ids, (bytes(p) for p in r.positions_vb),
-                    r.n_titles, r.n_h1s, r.n_h2s, r.n_h3s, r.n_h456s,
-                    r.occs, r.dls, r.xtras,
-                )
-            )
-        assert seg_ok
-        return {t: sorted(v) for t, v in out.items()}
-
-    a = flatten(merge_postings(flat, max_per_row=cap, use_arrow=True))
-    p = flatten(merge_postings(flat, max_per_row=cap, use_arrow=False))
+    tr = _ord_stamped(corpus_df)
+    doc_map = tr.select(doc_id_expr().alias("doc_id"), "doc_ord").cache()
+    flat = analyze_transcripts(tr.drop("doc_ord")).cache()
+    ords = {r.doc_id: r.doc_ord for r in doc_map.collect()}
+    want = _reference_postings(flat.collect(), lambda r: ords[r.doc_id])
+    got = _merged_postings(
+        merge_postings(flat, max_per_row=cap, doc_map=doc_map), cap
+    )
+    with pytest.raises(ValueError, match="doc ordinals"):
+        merge_postings(flat)
     flat.unpersist()
-    assert a == p
+    doc_map.unpersist()
+    assert got == want
 
 
-def test_h2_channel_weight_affects_ranking(spark):
+def test_h2_channel_weight_affects_ranking(spark, tmp_path):
     """End-to-end over the full heading channels: an h2-tagged query
     term must outscore the body-tagged one by exactly the reference
-    weight ratio (2.0 vs 0.5) through analyze -> merge -> rank."""
-    from apt_search_engine_spark.indexing.build import (
-        analyze_transcripts,
-        merge_postings,
-    )
+    weight ratio (2.0 vs 0.5) through a disk build (analyze -> merge ->
+    write) and the ranker."""
+    from apt_search_engine_spark.indexing.build import IndexBuilder
     from apt_search_engine_spark.query.engine import SearchEngine
 
     rows = [
-        ("c", 0, "zebra apple grape filler", "zebra"),
-        ("c", 1, "zebra apple grape filler", ""),
+        ("c", 0, "zebra apple grape filler", "zebra", ""),
+        ("c", 1, "zebra apple grape filler", "", ""),
     ]
     df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, text string, h2txt string"
+        rows,
+        "conv_id string, turn_idx int, text string, h2txt string, "
+        "tool string",
     )
-    flat = analyze_transcripts(df, channels=(("h2", "col", "h2txt"),))
-    eng = SearchEngine(spark, postings_df=merge_postings(flat), n_docs=2)
+    d = str(tmp_path / "h2_index")
+    IndexBuilder(
+        spark, d, n_batches=1, channels=(("h2", "col", "h2txt"),)
+    ).build(df, with_blocks=False)
+    eng = SearchEngine(spark, d)
     res = eng.search_df("zebra", k=2).collect()
     assert [r.doc_id for r in res] == ["c#000000", "c#000001"]
     # tf = (1+1)/8; df = 2 -> idf floor(6000/2) = 3000; prior = 1/2
@@ -309,56 +366,29 @@ def test_r10_url_dedup_merges_scores(spark, tmp_path):
 
 def test_grouped_merge_equivalence_and_disjoint_segments(spark, corpus_df):
     """Layout v12: the grouped-run merge exchange (one shuffle row per
-    (term, ordinal stripe) run) emits the same per-term posting CONTENT
-    as the pandas per-posting reference path — forced here with a tiny
-    cap AND a tiny stripe width so head terms split across many runs,
-    runs split across segments, and groups span Arrow batch boundaries.
-    Per-term segments must stay disjoint strictly-increasing ordinal
-    ranges (the blocks/WAND invariant, indexing/blocks.py:16-18) even
+    (term, ordinal stripe) run) over rows carrying a doc_ord column emits
+    the same per-term posting CONTENT as the plain-Python reference —
+    forced here with a tiny cap AND a tiny stripe width so head terms
+    split across many runs, runs split across segments, and groups span
+    Arrow batch boundaries. Per-term segments must stay disjoint
+    strictly-increasing ordinal ranges (the blocks/WAND invariant) even
     though runs from different analyze partitions interleave in ordinal
     space."""
-    from pyspark.sql import Window
     from apt_search_engine_spark.indexing.build import (
         analyze_transcripts,
-        doc_id_expr,
         merge_postings,
     )
 
-    tr = corpus_df.limit(400).withColumn(
-        "doc_ord",
-        (F.dense_rank().over(Window.orderBy(doc_id_expr())) - 1).cast("long"),
-    )
     flat = analyze_transcripts(
-        tr.repartition(5), extra_cols=("doc_ord",)
+        _ord_stamped(corpus_df).repartition(5), extra_cols=("doc_ord",)
     ).cache()
     cap = 7
-
-    def flatten(df):
-        out: dict[str, list] = {}
-        ranges: dict[str, list] = {}
-        for r in df.collect():
-            assert len(r.doc_ords) <= cap
-            assert list(r.doc_ords) == sorted(r.doc_ords)
-            ranges.setdefault(r.term, []).append((r.ord_lo, r.ord_hi))
-            out.setdefault(r.term, []).extend(
-                zip(
-                    r.doc_ords, (bytes(p) for p in r.positions_vb),
-                    r.n_titles, r.n_h1s, r.n_h2s, r.n_h3s, r.n_h456s,
-                    r.occs, r.dls, r.xtras,
-                )
-            )
-        for t, rs in ranges.items():
-            rs.sort()
-            for a, b in zip(rs, rs[1:]):
-                assert b[0] > a[1], (t, rs)  # disjoint, increasing
-        return {t: sorted(v) for t, v in out.items()}
-
-    g = flatten(merge_postings(flat, max_per_row=cap, _stripe_width=16))
-    p = flatten(
-        merge_postings(flat, max_per_row=cap, use_arrow=False, grouped=False)
+    want = _reference_postings(flat.collect(), lambda r: r.doc_ord)
+    got = _merged_postings(
+        merge_postings(flat, max_per_row=cap, _stripe_width=16), cap
     )
     flat.unpersist()
-    assert g == p
+    assert got == want
 
 
 def test_read_transcripts_formats_roundtrip(spark, tmp_path):

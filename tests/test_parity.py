@@ -113,7 +113,7 @@ def test_invariant_text_equality(spark, corpus_df, corpus_pdf):
         assert r.text == want.at[i, "text"], (r.conv_id, r.turn_idx)
 
 
-def test_scores_not_degenerate_beyond_reference_corpus_cap(spark):
+def test_scores_not_degenerate_beyond_reference_corpus_cap(spark, tmp_path):
     """Regression: the reference's literal 6000 IDF numerator zeroes every
     score once df > 6000 (floor(6000/df) = 0) — a regime the Java can
     never reach (MAX_PAGES caps its corpus) but a 10^12-turn corpus lives
@@ -121,12 +121,15 @@ def test_scores_not_degenerate_beyond_reference_corpus_cap(spark):
     floor-division semantics on the generalized numerator max(6000, N)."""
     from apt_search_engine_spark.config import idf_numerator
     from apt_search_engine_spark.corpus import gen_corpus_pandas
+    from apt_search_engine_spark.indexing.build import IndexBuilder
     from apt_search_engine_spark.query.engine import SearchEngine
     from apt_search_engine_spark.schema import TRANSCRIPTS
 
     pdf = gen_corpus_pandas(300)  # ~8k turns > 6000 docs
     tr = spark.createDataFrame(pdf, TRANSCRIPTS)
-    eng = SearchEngine.over_transcripts(spark, tr)
+    d = str(tmp_path / "beyond_cap")
+    IndexBuilder(spark, d, n_batches=1).build(tr, with_blocks=False)
+    eng = SearchEngine(spark, d)
     assert eng.n_docs > 6000
     assert eng.idf_numerator == eng.n_docs == idf_numerator(eng.n_docs)
 
@@ -136,10 +139,12 @@ def test_scores_not_degenerate_beyond_reference_corpus_cap(spark):
     # spot-check the kernel on the top doc: score = prior * sum over terms
     # of wtf * floor(N / df)
     dfs = eng.term_dfs(["travel", "guid"])
+    ex_rows = eng._exploded(["travel", "guid"]).collect()
+    doc_ids = eng._doc_ids(sorted({r.doc_ord for r in ex_rows}))
     ex = {
-        (r.term, r.doc_id): r.wtf
-        for r in eng._exploded(["travel", "guid"]).collect()
-        if r.doc_id == rows[0].doc_id
+        (r.term, doc_ids[r.doc_ord]): r.wtf
+        for r in ex_rows
+        if doc_ids[r.doc_ord] == rows[0].doc_id
     }
     want = sum(
         wtf * (eng.idf_numerator // dfs[t]) for (t, _), wtf in ex.items()
