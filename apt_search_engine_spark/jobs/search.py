@@ -5,18 +5,23 @@
         [-k 10] [--exact] [--no-snippets]
 
 Extension syntax: `pre*` (prefix), `te*t` / `t?st` (wildcard), `word~1`
-(fuzzy), `w1 NEAR/3 w2` (proximity); `--mlt DOC_ID` ranks the corpus
-against a seed document's characteristic terms (more-like-this);
-`--synonyms DIR` expands plain queries through a (term, synonym) stem
-table. A zero-hit plain query returns a `didYouMean` spell-corrected
-rewrite.
+(fuzzy), `w1 NEAR/3 w2` (proximity), `"w1 w2 ..."~k` (sloppy phrase);
+`--mlt DOC_ID` ranks the corpus against a seed document's characteristic
+terms (more-like-this); `--synonyms DIR` expands plain queries through a
+(term, synonym) stem table. A zero-hit plain query returns a
+`didYouMean` spell-corrected rewrite. The query is classified by
+query/parser.parse_spec and routed by SearchEngine.run; a flag that does
+not apply to the query (extension syntax or --mlt with a non-reference
+scorer, --synonyms with a phrase) exits 2 with a JSON error on stderr.
 
-Default scorer is block-max WAND for bag-of-words queries (falls back to
-the exact plan for phrase/boolean automatically); --exact forces the
-uncompressed plan; --scorer bm25 switches to the standard Okapi BM25
-formula (engine.search_bm25_df) instead of reference-parity scoring.
-Prints one JSON object per result row plus a timing line, mirroring the
-reference's SearchResult payload
+By default results carry url, title and a snippet and run the exact
+plan; --no-snippets prints doc_id/score rows from the block-max WAND
+plan for bag-of-words and prefix/fuzzy/wildcard queries (exact plan
+otherwise); --exact prints doc_id/score rows from the exact plan;
+--scorer bm25|bm25f switches to standard Okapi BM25 / field-weighted
+BM25F (doc_id/score rows) instead of reference-parity scoring.
+Prints one JSON object with the result rows and a timing field,
+mirroring the reference's SearchResult payload
 (server/src/main/java/com/example/demo/SearchController.java:19-41).
 """
 
@@ -72,223 +77,33 @@ def parse_args(argv=None):
 def main(argv=None) -> int:
     args = parse_args(argv)
     from apt_search_engine_spark.query.engine import SearchEngine
+    from apt_search_engine_spark.query.parser import QuerySpec, parse_spec
     from apt_search_engine_spark.session import get_spark
 
     spark = get_spark("aptse-search")
     engine = SearchEngine(spark, index_dir=args.index_dir)
     t0 = time.time()
-    # conflict validation up front, mirroring serve's 400s: extension
-    # syntax and --mlt run the reference scorer only, and --synonyms
-    # applies to plain bag-of-words queries only — refuse instead of
-    # silently dropping an explicit flag
-    from apt_search_engine_spark.query.parser import (
-        MULTITERM_RE,
-        NEAR_RE,
-        SLOPPY_N_RE,
-        SLOPPY_RE,
-        WILDCARD_RE,
-    )
-
-    qtext = (args.query or "").strip()
-    ext = (
-        SLOPPY_N_RE.fullmatch(qtext)
-        or SLOPPY_RE.fullmatch(qtext)
-        or NEAR_RE.fullmatch(qtext)
-        or MULTITERM_RE.fullmatch(qtext)
-        or WILDCARD_RE.fullmatch(qtext)
-    )
-    def _refuse(msg: str) -> int:
-        print(json.dumps({"error": msg}), file=sys.stderr)
-        return 2
-
-    if args.scorer != "reference" and (ext is not None or args.mlt):
-        return _refuse(
-            "extension syntax and --mlt support only --scorer reference"
-        )
-    if args.synonyms and (ext is not None or args.mlt):
-        return _refuse(
-            "--synonyms applies to plain bag-of-words queries only"
-        )
-    if args.synonyms and '"' in (args.query or ""):
-        return _refuse(
-            "--synonyms applies to plain bag-of-words queries only "
-            "(phrase/boolean flattening would drop adjacency/NOT semantics)"
-        )
     if args.mlt is not None:
-        if args.no_snippets or args.exact:
-            df = engine.more_like_this_df(args.mlt, k=args.k)
-            results = [
-                {"doc_id": r.doc_id, "score": r.score} for r in df.collect()
-            ]
-        else:
-            results = engine.more_like_this(args.mlt, k=args.k)
-        ms = int((time.time() - t0) * 1000)
-        print(json.dumps({"results": results, "totalCount": len(results),
-                          "totalTime": ms}))
-        return 0
-    # Lucene-style multi-term syntax (query/parser.py extension grammar,
-    # shared with jobs/serve.py): `pre*` = prefix expansion, `word~1` /
-    # `word~2` = fuzzy, `w1 NEAR/3 w2` = unordered proximity, plus
-    # general wildcards `te*t` / `t?st` / `*ing` and the sloppy phrase
-    # `"w1 w2"~k`
-    spn = SLOPPY_N_RE.fullmatch(args.query.strip())
-    if spn is not None:
-        # n-term (>= 3 words) Lucene slop: in-order chains, span excess
-        # <= k (engine.search_sloppy_df; the 2-word form below keeps its
-        # legacy distance-<=k semantics)
-        words, slop = spn.group(1).lower().split(), int(spn.group(2))
-        if args.no_snippets or args.exact:
-            df = engine.search_sloppy_df(words, slop=slop, k=args.k)
-            results = [
-                {"doc_id": r.doc_id, "score": r.score} for r in df.collect()
-            ]
-        else:
-            results = engine.search_sloppy(
-                words, slop=slop, k=args.k, with_snippets=True
-            )
-        ms = int((time.time() - t0) * 1000)
-        print(json.dumps({"results": results, "totalCount": len(results),
-                          "totalTime": ms}))
-        return 0
-    sp = SLOPPY_RE.fullmatch(args.query.strip())
-    if sp is not None:
-        w1, w2, slop = sp.group(1).lower(), sp.group(2).lower(), int(sp.group(3))
-        if args.no_snippets or args.exact:
-            df = engine.search_near_df(w1, w2, slop=slop, k=args.k, ordered=True)
-            results = [
-                {"doc_id": r.doc_id, "score": r.score} for r in df.collect()
-            ]
-        else:
-            results = engine.search_near(
-                w1, w2, slop=slop, k=args.k, with_snippets=True, ordered=True
-            )
-        ms = int((time.time() - t0) * 1000)
-        print(json.dumps({"results": results, "totalCount": len(results),
-                          "totalTime": ms}))
-        return 0
-    nr = NEAR_RE.fullmatch(args.query.strip())
-    if nr is not None:
-        w1, slop, w2 = nr.group(1).lower(), int(nr.group(2)), nr.group(3).lower()
-        if args.no_snippets or args.exact:
-            df = engine.search_near_df(w1, w2, slop=slop, k=args.k)
-            results = [
-                {"doc_id": r.doc_id, "score": r.score} for r in df.collect()
-            ]
-        else:
-            results = engine.search_near(
-                w1, w2, slop=slop, k=args.k, with_snippets=True
-            )
-        ms = int((time.time() - t0) * 1000)
-        print(json.dumps({"results": results, "totalCount": len(results),
-                          "totalTime": ms}))
-        return 0
-    mt = MULTITERM_RE.fullmatch(args.query.strip())
-    if mt is not None:
-        word, wild, dist = mt.group(1).lower(), mt.group(2), mt.group(3)
-        if args.no_snippets or args.exact:
-            if wild:
-                df = (
-                    engine.search_prefix_df(word, k=args.k)
-                    if args.exact
-                    else engine.search_prefix_wand_df(word, k=args.k)
-                )
-            else:
-                df = (
-                    engine.search_fuzzy_df(word, k=args.k, max_dist=int(dist))
-                    if args.exact
-                    else engine.search_fuzzy_wand_df(
-                        word, k=args.k, max_dist=int(dist)
-                    )
-                )
-            results = [
-                {"doc_id": r.doc_id, "score": r.score} for r in df.collect()
-            ]
-        elif wild:
-            results = engine.search_prefix(word, k=args.k, with_snippets=True)
-        else:
-            results = engine.search_fuzzy(
-                word, k=args.k, max_dist=int(dist), with_snippets=True
-            )
-        ms = int((time.time() - t0) * 1000)
-        print(json.dumps({"results": results, "totalCount": len(results),
-                          "totalTime": ms}))
-        return 0
-    wc = WILDCARD_RE.fullmatch(args.query.strip())
-    if wc is not None:
-        pattern = args.query.strip().lower()
-        if args.no_snippets or args.exact:
-            df = (
-                engine.search_wildcard_df(pattern, k=args.k)
-                if args.exact
-                else engine.search_wildcard_wand_df(pattern, k=args.k)
-            )
-            results = [
-                {"doc_id": r.doc_id, "score": r.score} for r in df.collect()
-            ]
-        else:
-            results = engine.search_wildcard(
-                pattern, k=args.k, with_snippets=True
-            )
-        ms = int((time.time() - t0) * 1000)
-        print(json.dumps({"results": results, "totalCount": len(results),
-                          "totalTime": ms}))
-        return 0
-    if args.synonyms and args.scorer != "reference":
-        # mirror serve's 400: silently dropping the user's synonym table
-        # under a non-reference scorer would be worse than refusing
-        print(
-            json.dumps(
-                {"error": "--synonyms requires --scorer reference"}
-            ),
-            file=sys.stderr,
-        )
-        return 2
-    if args.synonyms:
-        syn = spark.read.parquet(args.synonyms)
-        if args.no_snippets or args.exact:
-            df = engine.search_synonym_df(args.query, syn, k=args.k)
-            results = [
-                {"doc_id": r.doc_id, "score": r.score} for r in df.collect()
-            ]
-        else:
-            results = engine.search_synonym(
-                args.query, syn, k=args.k, with_snippets=True
-            )
-        ms = int((time.time() - t0) * 1000)
-        print(json.dumps({"results": results, "totalCount": len(results),
-                          "totalTime": ms}))
-        return 0
-    if args.scorer in ("bm25", "bm25f"):
-        fn = (
-            engine.search_bm25f_df
-            if args.scorer == "bm25f"
-            else engine.search_bm25_df
-        )
-        df = fn(args.query, k=args.k)
-        results = [{"doc_id": r.doc_id, "score": r.score} for r in df.collect()]
-    elif args.no_snippets or args.exact:
-        df = (
-            engine.search_df(args.query, k=args.k)
-            if args.exact
-            else engine.search_df_wand(args.query, k=args.k)
-        )
-        results = [{"doc_id": r.doc_id, "score": r.score} for r in df.collect()]
+        spec = QuerySpec("mlt", args.mlt)
     else:
-        results = engine.search(args.query, k=args.k, with_snippets=True)
-    ms = int((time.time() - t0) * 1000)
-    out = {"results": results, "totalCount": len(results), "totalTime": ms}
-    if not results and args.scorer == "reference":
-        # zero hits: offer "did you mean" (out-of-vocab words replaced by
-        # their nearest vocabulary stem; one lexicon scan, empty path only)
-        from apt_search_engine_spark.query.parser import tokenize
-
-        fixes = engine.suggest_spelling(tokenize(args.query))
-        if fixes:
-            out["didYouMean"] = " ".join(
-                fixes.get(w, w) for w in tokenize(args.query)
-            )
-        out["totalTime"] = int((time.time() - t0) * 1000)
-    print(json.dumps(out))
+        spec = parse_spec(args.query)
+    syn = spark.read.parquet(args.synonyms) if args.synonyms else None
+    try:
+        out = engine.run(
+            spec,
+            args.k,
+            scorer=args.scorer,
+            synonyms=syn,
+            exact=args.exact or not args.no_snippets,
+            assemble=not (args.no_snippets or args.exact),
+        )
+    except ValueError as e:
+        print(json.dumps({"error": str(e)}), file=sys.stderr)
+        return 2
+    # totalTime after totalCount, then didYouMean, as the payload has it
+    body = {k: out.pop(k) for k in ("results", "totalCount")}
+    body["totalTime"] = int((time.time() - t0) * 1000)
+    print(json.dumps({**body, **out}))
     return 0
 
 

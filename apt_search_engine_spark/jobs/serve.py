@@ -38,15 +38,9 @@ import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-
-# extension query syntax lives with the parser (query/parser.py); the
-# aliases keep this module the historical import site for the jobs layer
 from apt_search_engine_spark.query.parser import (  # noqa: E402
-    MULTITERM_RE as _MULTITERM_RE,
-    NEAR_RE as _NEAR_RE,
-    SLOPPY_N_RE as _SLOPPY_N_RE,
-    SLOPPY_RE as _SLOPPY_RE,
-    WILDCARD_RE as _WILDCARD_RE,
+    QuerySpec,
+    parse_spec,
     tokenize as _tokenize,
 )
 
@@ -156,7 +150,7 @@ def make_handler(engine, synonyms_df=None, cache_size: int = 256):
         def _mlt(self, u) -> None:
             """GET /mlt?doc=...&k=...&max_terms=... — more-like-this:
             documents ranked against the seed doc's most characteristic
-            terms (engine.more_like_this), seed excluded."""
+            terms (engine.more_like_this_df), seed excluded."""
             q = parse_qs(u.query)
             doc = (q.get("doc") or [""])[0].strip()
             if not doc:
@@ -172,9 +166,9 @@ def make_handler(engine, synonyms_df=None, cache_size: int = 256):
             max_terms = min(max(1, max_terms), 100)
             t0 = time.time()
             try:
-                rows = engine.more_like_this(
-                    doc, k=k, max_terms=max_terms, with_snippets=True
-                )
+                rows = engine.run(
+                    QuerySpec("mlt", doc, max_terms=max_terms), k
+                )["results"]
             except ValueError as e:
                 # e.g. an index without doc_meta (merge of meta-less
                 # shards): a JSON 400 beats an escaped traceback
@@ -302,13 +296,9 @@ def make_handler(engine, synonyms_df=None, cache_size: int = 256):
                     400, {"error": "scorer must be reference|bm25|bm25f"}
                 )
                 return
-            # count=exact adds the reference's true totalCount (full
-            # ranked-list size) as `totalMatches` — an extra aggregate
-            # job, so opt-in per request
-            want_exact_count = (q.get("count") or [""])[0] == "exact"
             # field=title|h1|h2|h3 restricts matching to a heading
-            # channel (engine.search_field: title = tool name, h1 = turn
-            # role under the fixture adapter)
+            # channel (engine.search_field_df: title = tool name, h1 =
+            # turn role under the fixture adapter)
             field = (q.get("field") or [""])[0]
             if field and field not in ("title", "h1", "h2", "h3"):
                 self._json(
@@ -324,187 +314,43 @@ def make_handler(engine, synonyms_df=None, cache_size: int = 256):
                     {"error": "server started without --synonyms"},
                 )
                 return
-            if want_syn and (
-                scorer != "reference" or field or want_exact_count
-            ):
-                self._json(
-                    400,
-                    {"error": "synonyms=1 supports only scorer=reference "
-                              "without field/count"},
-                )
-                return
             t0 = time.time()
-            # Lucene-style multi-term syntax, resolved at the serve layer
-            # (the reference parser has no wildcards): `pre*` = prefix
-            # expansion, `word~d` = fuzzy with edit distance d in {1,2}.
-            # Expanded queries score as bag-of-words (engine rewrite) and
-            # return the doc_id/score shape like the bm25 scorer.
-            mt = _MULTITERM_RE.fullmatch(query.strip())
-            nr = _NEAR_RE.fullmatch(query.strip())
-            # sloppy phrase: `"w1 w2"~k` = ordered proximity (legacy
-            # distance-<=k form); `"w1 w2 w3 ..."~k` (>= 3 words) =
-            # Lucene n-term slop (span excess <= k)
-            spn = (
-                _SLOPPY_N_RE.fullmatch(query.strip()) if nr is None else None
-            )
-            sp = (
-                _SLOPPY_RE.fullmatch(query.strip())
-                if nr is None and spn is None
-                else None
-            )
-            # general wildcard (`te*t` / `t?st` / `*ing`) — only when the
-            # cheaper trailing-star prefix shape didn't already match
-            wc = (
-                _WILDCARD_RE.fullmatch(query.strip())
-                if mt is None and nr is None and sp is None and spn is None
-                else None
-            )
-            if (
-                mt is not None
-                or nr is not None
-                or sp is not None
-                or spn is not None
-                or wc is not None
-            ) and (scorer != "reference" or field or want_exact_count):
-                # extension syntax only runs on the reference scorer and
-                # cannot honor field/count yet: 400 beats silently
-                # dropping the caller's explicit params
-                self._json(
-                    400,
-                    {"error": "multi-term/NEAR syntax supports only "
-                              "scorer=reference without field/count"},
+            # extension syntax (`pre*`, `word~1`, `te*t`, `w1 NEAR/k w2`,
+            # `"w1 w2 ..."~k`) is classified by the parser and routed by
+            # engine.run, which refuses options the query cannot honor:
+            # a 400 beats silently dropping the caller's explicit params.
+            # count=exact adds the reference's true totalCount (full
+            # ranked-list size) as `totalMatches` — an extra aggregate
+            # job, so opt-in per request
+            try:
+                out = engine.run(
+                    parse_spec(query),
+                    page * size,
+                    scorer=scorer,
+                    field=field or None,
+                    synonyms=synonyms_df if want_syn else None,
+                    count=(q.get("count") or [""])[0] == "exact",
+                    exact=True,
                 )
+            except ValueError as e:
+                self._json(400, {"error": str(e)})
                 return
-            if field and scorer != "reference":
-                self._json(
-                    400,
-                    {"error": "field= requires scorer=reference"},
-                )
-                return
-            if want_syn and (
-                mt is not None
-                or nr is not None
-                or sp is not None
-                or spn is not None
-                or wc is not None
-            ):
-                # expansion-on-expansion is undefined: 400 beats
-                # silently dropping the caller's synonyms=1
-                self._json(
-                    400,
-                    {"error": "synonyms=1 applies to plain bag-of-words "
-                              "queries only"},
-                )
-                return
-            if want_syn:
-                try:
-                    rows = engine.search_synonym(
-                        query, synonyms_df, k=page * size, with_snippets=True
-                    )
-                except ValueError as e:
-                    # phrase/boolean flattening would silently drop
-                    # adjacency / NOT semantics — refuse instead
-                    self._json(400, {"error": str(e)})
-                    return
-            elif wc is not None:
-                rows = engine.search_wildcard(
-                    query.strip().lower(), k=page * size, with_snippets=True
-                )
-            elif nr is not None:
-                rows = engine.search_near(
-                    nr.group(1).lower(), nr.group(3).lower(),
-                    slop=int(nr.group(2)),
-                    k=page * size, with_snippets=True,
-                )
-            elif spn is not None:
-                rows = engine.search_sloppy(
-                    spn.group(1).lower().split(),
-                    slop=int(spn.group(2)),
-                    k=page * size, with_snippets=True,
-                )
-            elif sp is not None:
-                rows = engine.search_near(
-                    sp.group(1).lower(), sp.group(2).lower(),
-                    slop=int(sp.group(3)), ordered=True,
-                    k=page * size, with_snippets=True,
-                )
-            elif mt is not None:
-                word, wild, dist = (
-                    mt.group(1).lower(), mt.group(2), mt.group(3),
-                )
-                if wild:
-                    rows = engine.search_prefix(
-                        word, k=page * size, with_snippets=True
-                    )
-                else:
-                    rows = engine.search_fuzzy(
-                        word, k=page * size, max_dist=int(dist),
-                        with_snippets=True,
-                    )
-            elif field:
-                rows = engine.search_field(
-                    field, query, k=page * size, with_snippets=True
-                )
-            elif scorer in ("bm25", "bm25f"):
-                # standard Okapi BM25 / field-weighted BM25F (extension
-                # scorers; no snippet path — results carry doc_id/score
-                # only, url == doc_id shape)
-                fn = (
-                    engine.search_bm25f_df
-                    if scorer == "bm25f"
-                    else engine.search_bm25_df
-                )
-                got = fn(query, k=page * size).collect()
-                rows = [
-                    {"url": r.doc_id, "score": r.score, "title": "",
-                     "snippet": ""}
-                    for r in got
-                ]
-            else:
-                rows = engine.search(query, k=page * size, with_snippets=True)
-            sliced = rows[(page - 1) * size : page * size]
+            rows = out.pop("results")
             resp = {
+                # bm25/bm25f rows carry doc_id/score only: url == doc_id
                 "results": [
                     {
-                        "url": r["url"],
+                        "url": r.get("url", r["doc_id"]),
                         "score": r["score"],
-                        "title": r["title"],
-                        "snippet": r["snippet"],
+                        "title": r.get("title", ""),
+                        "snippet": r.get("snippet", ""),
                     }
-                    for r in sliced
+                    for r in rows[(page - 1) * size : page * size]
                 ],
-                "totalCount": len(rows),
+                "totalCount": out.pop("totalCount"),
                 "totalTime": int((time.time() - t0) * 1000),
+                **out,
             }
-            if (
-                not rows
-                and mt is None
-                and nr is None
-                and sp is None
-                and spn is None
-                and wc is None
-                and not field
-                and scorer == "reference"
-            ):
-                # zero hits on a plain query: offer "did you mean" from
-                # the spell suggester (out-of-vocab words replaced by
-                # their nearest vocabulary stem). One lexicon scan, only
-                # on the empty-result path.
-                fixes = engine.suggest_spelling(_tokenize(query))
-                if fixes:
-                    resp["didYouMean"] = " ".join(
-                        fixes.get(w, w) for w in _tokenize(query)
-                    )
-            if (
-                want_exact_count
-                and mt is None
-                and not field
-                and scorer == "reference"
-            ):
-                resp["totalMatches"] = int(
-                    engine.match_count_df(query).collect()[0].n_matches
-                )
-                resp["totalTime"] = int((time.time() - t0) * 1000)
             self._json(
                 200,
                 self._cache_put(ckey, resp),

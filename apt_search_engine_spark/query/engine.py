@@ -435,6 +435,8 @@ class SearchEngine:
         # parquet footer key ranges per (table dir, key column) for the
         # driver-side point reads (query/pointread.py)
         self._footer_cache: dict[tuple[str, str], list] = {}
+        # mlt_terms selections per (seed doc_id, max_terms)
+        self._mlt_cache: dict[tuple[str, int], tuple[str, ...]] = {}
         self.postings_path = os.path.join(index_dir, "postings")
         self.lexicon_path = os.path.join(index_dir, "lexicon")
         self.doc_meta_path = os.path.join(index_dir, "doc_meta")
@@ -482,7 +484,7 @@ class SearchEngine:
         self._deleted_cache.clear()
         # the MLT term-selection memo pins the same index state (dfs and
         # the seed's stored text both feed it)
-        getattr(self, "_mlt_cache", {}).clear()
+        self._mlt_cache.clear()
         self._load_meta()
         self._index_state = self._state_token()
 
@@ -1313,9 +1315,7 @@ class SearchEngine:
             words = parsed.scoring_words
             gate = words[0] if words else None
         else:  # normal / normal+boolean: bag of words, operators dropped
-            words = sorted(
-                {w for w in parsed.query_words if w.upper() not in parser.OPERATORS}
-            )
+            words = parsed.bag_words
             filtered = self._exploded(words, with_df=True)
             gate = None
         return filtered, words, gate
@@ -1554,10 +1554,21 @@ class SearchEngine:
         )
         return self._cache_dfs(rows)
 
-    def _score_expansion(self, terms: list[str], k: int) -> DataFrame:
-        """Exact bag-of-words scoring of a server-derived expansion:
-        each term multiplicity 1, true build-time df, no gate — the one
-        scoring shape every multi-term rewrite shares."""
+    def _expansion_df(
+        self, terms: list[str], k: int, wand: bool = False
+    ) -> DataFrame:
+        """Top-k of a server-derived term expansion (prefix, fuzzy,
+        wildcard, synonyms, mlt) ranked as a bag-of-words OR query: each
+        term multiplicity 1, true build-time df, no gate — the one
+        scoring shape every multi-term rewrite shares. With `wand` it
+        runs on the block-max WAND hot path (rank+score identical to the
+        exact plan, parity pinned in tests/test_multiterm.py) when the
+        index has a blocks companion; an empty expansion matches
+        nothing."""
+        if not terms:
+            return self._empty_results()
+        if wand and self._has_blocks():
+            return self._wand_topk_for_terms(sorted(terms), k)
         return self._score(
             self._exploded(terms, with_df=True), sorted(terms), None, k
         )
@@ -1570,16 +1581,27 @@ class SearchEngine:
     ) -> DataFrame:
         """Prefix query `pre*` as a scoring-boolean rewrite: expand
         against the lexicon, then rank the expansion exactly like a
-        bag-of-words OR query (each expanded term multiplicity 1, true
-        build-time df, no gate) — the reference scorer applied to a
-        server-derived term set. The distributed plan is identical in
-        shape to the normal path: bucket-pruned postings scan over <=
-        max_expansions terms."""
+        bag-of-words OR query (_expansion_df) — the reference scorer
+        applied to a server-derived term set. The distributed plan is
+        identical in shape to the normal path: bucket-pruned postings
+        scan over <= max_expansions terms."""
         self._ensure_fresh()
-        terms = self.expand_prefix(prefix, max_expansions)
-        if not terms:
-            return self._empty_results()
-        return self._score_expansion(terms, k)
+        return self._expansion_df(
+            self.expand_prefix(prefix, max_expansions), k
+        )
+
+    def search_prefix_wand_df(
+        self,
+        prefix: str,
+        k: int = DEFAULT_TOP_K,
+        max_expansions: int = DEFAULT_MAX_EXPANSIONS,
+    ) -> DataFrame:
+        """search_prefix_df on the block-max WAND hot path (falls back to
+        the exact plan without a blocks companion)."""
+        self._ensure_fresh()
+        return self._expansion_df(
+            self.expand_prefix(prefix, max_expansions), k, wand=True
+        )
 
     def search_fuzzy_df(
         self,
@@ -1592,10 +1614,38 @@ class SearchEngine:
         lexicon, ranked as a bag-of-words OR query over the expansion —
         same scoring-boolean rewrite as search_prefix_df."""
         self._ensure_fresh()
-        terms = self.expand_fuzzy(word, max_dist, max_expansions)
-        if not terms:
-            return self._empty_results()
-        return self._score_expansion(terms, k)
+        return self._expansion_df(
+            self.expand_fuzzy(word, max_dist, max_expansions), k
+        )
+
+    def search_wildcard_df(
+        self,
+        pattern: str,
+        k: int = DEFAULT_TOP_K,
+        max_expansions: int = DEFAULT_MAX_EXPANSIONS,
+    ) -> DataFrame:
+        """General wildcard query (`te*t`, `t?st`, `*ing`): LIKE
+        expansion against the lexicon, ranked as a bag-of-words OR query
+        over the expansion — the same scoring-boolean rewrite as
+        search_prefix_df, reached when the pattern has a wildcard
+        anywhere but the tail (parser.parse_spec)."""
+        self._ensure_fresh()
+        return self._expansion_df(
+            self.expand_wildcard(pattern, max_expansions), k
+        )
+
+    def search_wildcard_wand_df(
+        self,
+        pattern: str,
+        k: int = DEFAULT_TOP_K,
+        max_expansions: int = DEFAULT_MAX_EXPANSIONS,
+    ) -> DataFrame:
+        """search_wildcard_df on the block-max WAND hot path (see
+        search_prefix_wand_df)."""
+        self._ensure_fresh()
+        return self._expansion_df(
+            self.expand_wildcard(pattern, max_expansions), k, wand=True
+        )
 
     def search_near_df(
         self,
@@ -1659,19 +1709,6 @@ class SearchEngine:
         )
         return self._score(filtered, stems, stems[0], k)
 
-    def search_sloppy(
-        self,
-        words: list[str],
-        slop: int = 2,
-        k: int = DEFAULT_TOP_K,
-        with_snippets: bool = True,
-    ) -> list[dict]:
-        """Full-response n-term sloppy phrase (see search_sloppy_df);
-        the analyzed stems highlight like a phrase's scoring words."""
-        top = self.search_sloppy_df(words, slop, k).collect()
-        stems = [t for t in (parser.stem(w.strip().lower()) for w in words) if t]
-        return self._assemble(top, stems, with_snippets)
-
     def search_field_df(
         self, field: str, query: str, k: int = DEFAULT_TOP_K
     ) -> DataFrame:
@@ -1692,9 +1729,7 @@ class SearchEngine:
             )
         self._ensure_fresh()
         parsed = parser.parse(query)
-        words = sorted(
-            {w for w in parsed.query_words if w.upper() not in parser.OPERATORS}
-        )
+        words = parsed.bag_words
         if not words:
             return self._empty_results()
         sp = (
@@ -1703,76 +1738,6 @@ class SearchEngine:
             .drop("n_field")
         )
         return self._score(sp, words, None, k)
-
-    def search_prefix_wand_df(
-        self,
-        prefix: str,
-        k: int = DEFAULT_TOP_K,
-        max_expansions: int = DEFAULT_MAX_EXPANSIONS,
-    ) -> DataFrame:
-        """Prefix rewrite on the block-max WAND hot path: the expansion
-        is a bag of distinct terms, exactly the shape the pruned scorer
-        serves — rank+score identical to search_prefix_df (the exact
-        plan), parity pinned in tests/test_multiterm.py. Falls back to
-        the exact plan without a blocks companion."""
-        self._ensure_fresh()
-        terms = self.expand_prefix(prefix, max_expansions)
-        if not terms:
-            return self._empty_results()
-        if not self._has_blocks():
-            return self._score_expansion(terms, k)
-        return self._wand_topk_for_terms(sorted(terms), k)
-
-    def search_fuzzy_wand_df(
-        self,
-        word: str,
-        k: int = DEFAULT_TOP_K,
-        max_dist: int = 1,
-        max_expansions: int = DEFAULT_MAX_EXPANSIONS,
-    ) -> DataFrame:
-        """Fuzzy rewrite on the block-max WAND hot path (see
-        search_prefix_wand_df)."""
-        self._ensure_fresh()
-        terms = self.expand_fuzzy(word, max_dist, max_expansions)
-        if not terms:
-            return self._empty_results()
-        if not self._has_blocks():
-            return self._score_expansion(terms, k)
-        return self._wand_topk_for_terms(sorted(terms), k)
-
-    def search_wildcard_df(
-        self,
-        pattern: str,
-        k: int = DEFAULT_TOP_K,
-        max_expansions: int = DEFAULT_MAX_EXPANSIONS,
-    ) -> DataFrame:
-        """General wildcard query (`te*t`, `t?st`, `*ing`): LIKE
-        expansion against the lexicon, ranked as a bag-of-words OR query
-        over the expansion — the same scoring-boolean rewrite as
-        search_prefix_df, reached when the pattern has a wildcard
-        anywhere but the tail (parser.WILDCARD_RE)."""
-        self._ensure_fresh()
-        terms = self.expand_wildcard(pattern, max_expansions)
-        if not terms:
-            return self._empty_results()
-        return self._score_expansion(terms, k)
-
-    def search_wildcard_wand_df(
-        self,
-        pattern: str,
-        k: int = DEFAULT_TOP_K,
-        max_expansions: int = DEFAULT_MAX_EXPANSIONS,
-    ) -> DataFrame:
-        """Wildcard rewrite on the block-max WAND hot path (see
-        search_prefix_wand_df) — rank+score identical to the exact
-        rewrite."""
-        self._ensure_fresh()
-        terms = self.expand_wildcard(pattern, max_expansions)
-        if not terms:
-            return self._empty_results()
-        if not self._has_blocks():
-            return self._score_expansion(terms, k)
-        return self._wand_topk_for_terms(sorted(terms), k)
 
     def suggest_spelling_df(
         self,
@@ -1867,9 +1832,7 @@ class SearchEngine:
         Lucene term vector; occurrence counts are invariant under the
         sentence-split round trip because analysis splits on whitespace);
         dfs come from the driver-side pruned lexicon lookup."""
-        cache = getattr(self, "_mlt_cache", None)
-        if cache is None:
-            cache = self._mlt_cache = {}
+        cache = self._mlt_cache
         ck = (doc_id, max_terms)
         if ck in cache:
             return list(cache[ck])
@@ -1938,48 +1901,16 @@ class SearchEngine:
         seed exclusion scores top-(k+1) and drops the seed AFTER the
         <=(k+1)-row translation: removing one element from a correctly
         ordered top-(k+1) and trimming IS the top-k of the rest, and it
-        costs no extra doc_map lookup job."""
+        costs no extra doc_map lookup job. The cut runs in the driver
+        and the rows come back as a local relation: an orderBy/limit
+        tail over the <=(k+1)-row relation would plan a range exchange
+        and run three jobs to collect it."""
         self._ensure_fresh()
-        terms = self.mlt_terms(doc_id, max_terms)
-        if not terms:
-            return self._empty_results()
-        top = self._score_expansion(terms, k + 1)
-        return (
-            top.filter(F.col("doc_id") != doc_id)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-
-    def more_like_this(
-        self,
-        doc_id: str,
-        k: int = DEFAULT_TOP_K,
-        max_terms: int = DEFAULT_MLT_MAX_TERMS,
-        with_snippets: bool = True,
-    ) -> list[dict]:
-        """Full-response more-like-this: the MLT top-k with metadata +
-        snippet assembly; the seed's characteristic terms highlight."""
-        self._ensure_fresh()
-        top = self.more_like_this_df(doc_id, k, max_terms).collect()
-        if not top:
-            return []
-        terms = self.mlt_terms(doc_id, max_terms)
-        return self._assemble(top, terms, with_snippets)
-
-    def search_wildcard(
-        self,
-        pattern: str,
-        k: int = DEFAULT_TOP_K,
-        max_expansions: int = DEFAULT_MAX_EXPANSIONS,
-        with_snippets: bool = True,
-    ) -> list[dict]:
-        """Full-response wildcard search (see search_prefix)."""
-        self._ensure_fresh()
-        terms = self.expand_wildcard(pattern, max_expansions)
-        if not terms:
-            return []
-        top = self._score_expansion(terms, k).collect()
-        return self._assemble(top, terms, with_snippets)
+        top = self._expansion_df(self.mlt_terms(doc_id, max_terms), k + 1)
+        # translate_topk rows are already in (score desc, doc_id asc) order
+        rows = [(r.doc_id, r.score) for r in top.collect()
+                if r.doc_id != doc_id]
+        return local_frame(self.spark, rows[:k], RESULT_SCHEMA)
 
     def expand_synonyms(
         self, words: list[str], synonyms: DataFrame
@@ -2007,54 +1938,25 @@ class SearchEngine:
     ) -> DataFrame:
         """Bag-of-words search with query-time synonym expansion: each
         query word contributes itself plus its mapped synonyms, the
-        union scored as the standard multi-term rewrite (each expanded
-        term multiplicity 1, true build-time df — the scoring-boolean
-        shape every rewrite shares). Synonyms absent from the index
-        vocabulary contribute nothing (no postings rows), matching
-        Lucene's behavior for unindexed synonym targets. Phrase-family
-        queries are refused: flattening a phrase (or a NOT branch) into
-        an expanded bag would silently drop adjacency/exclusion
-        semantics."""
+        union scored as the standard multi-term rewrite (_expansion_df).
+        Synonyms absent from the index vocabulary contribute nothing (no
+        postings rows), matching Lucene's behavior for unindexed synonym
+        targets. Phrase-family queries are refused (_synonym_terms)."""
         self._ensure_fresh()
-        parsed = parser.parse(query)
-        if parsed.qtype not in ("normal", "normal+boolean"):
-            raise ValueError(
-                "synonym expansion applies to bag-of-words queries only "
-                f"(got {parsed.qtype})"
-            )
-        words = sorted(
-            {w for w in parsed.query_words if w.upper() not in parser.OPERATORS}
-        )
-        terms = self.expand_synonyms(words, synonyms)
-        if not terms:
-            return self._empty_results()
-        return self._score_expansion(terms, k)
+        return self._expansion_df(self._synonym_terms(query, synonyms), k)
 
-    def search_synonym(
-        self,
-        query: str,
-        synonyms: DataFrame,
-        k: int = DEFAULT_TOP_K,
-        with_snippets: bool = True,
-    ) -> list[dict]:
-        """Full-response synonym-expanded search (see search_prefix);
-        expanded terms highlight in snippets. Phrase-family queries are
-        refused like search_synonym_df."""
-        self._ensure_fresh()
+    def _synonym_terms(self, query: str, synonyms: DataFrame) -> list[str]:
+        """The synonym expansion of a bag-of-words query. Flattening a
+        phrase (or a NOT branch) into an expanded bag would silently
+        drop adjacency/exclusion semantics, so phrase-family queries
+        raise ValueError."""
         parsed = parser.parse(query)
         if parsed.qtype not in ("normal", "normal+boolean"):
             raise ValueError(
                 "synonym expansion applies to bag-of-words queries only "
                 f"(got {parsed.qtype})"
             )
-        words = sorted(
-            {w for w in parsed.query_words if w.upper() not in parser.OPERATORS}
-        )
-        terms = self.expand_synonyms(words, synonyms)
-        if not terms:
-            return []
-        top = self._score_expansion(terms, k).collect()
-        return self._assemble(top, terms, with_snippets)
+        return self.expand_synonyms(parsed.bag_words, synonyms)
 
     def suggest_terms_df(
         self, prefix: str, k: int = DEFAULT_TOP_K
@@ -2087,9 +1989,7 @@ class SearchEngine:
         hash join with the facet table on doc_id -> tiny groupBy."""
         self._ensure_fresh()
         parsed = parser.parse(query)
-        words = sorted(
-            {w for w in parsed.query_words if w.upper() not in parser.OPERATORS}
-        )
+        words = parsed.bag_words
         if not words:
             return local_frame(self.spark, [], "facet string, n_docs long")
         docs = (
@@ -2163,9 +2063,7 @@ class SearchEngine:
             filtered = self._boolean_filtered(parsed, with_occ_dl=True)
             words = sorted(set(parsed.scoring_words))
         else:
-            words = sorted(
-                {w for w in parsed.query_words if w.upper() not in parser.OPERATORS}
-            )
+            words = parsed.bag_words
         if not words:
             return self._empty_results()
         dfs = self.term_dfs(words)
@@ -2252,13 +2150,7 @@ class SearchEngine:
             cand = self._boolean_filtered(parsed)
             words = sorted(set(parsed.scoring_words))
         else:
-            words = sorted(
-                {
-                    x
-                    for x in parsed.query_words
-                    if x.upper() not in parser.OPERATORS
-                }
-            )
+            words = parsed.bag_words
         if not words:
             return self._empty_results()
         dfs = self.term_dfs(words)
@@ -2344,9 +2236,7 @@ class SearchEngine:
             return self.search_bm25_df(query, k, k1, b)
         from apt_search_engine_spark.query.wand import wand_bm25_topk
 
-        words = sorted(
-            {w for w in parsed.query_words if w.upper() not in parser.OPERATORS}
-        )
+        words = parsed.bag_words
         if not words:
             return self._empty_results()
         dfs = self.term_dfs(words)
@@ -2415,13 +2305,7 @@ class SearchEngine:
         for qid, qs in queries.items():
             p = parser.parse(qs)
             if p.qtype in ("normal", "normal+boolean"):
-                bag[qid] = sorted(
-                    {
-                        w
-                        for w in p.query_words
-                        if w.upper() not in parser.OPERATORS
-                    }
-                )
+                bag[qid] = p.bag_words
             else:
                 fallback[qid] = qs
         union_words = sorted({w for ws in bag.values() for w in ws})
@@ -2487,19 +2371,136 @@ class SearchEngine:
         out.sort(key=lambda r: (r[0], -r[2], r[1]))
         return local_frame(self.spark, out, out_schema)
 
+    def run(
+        self,
+        spec: parser.QuerySpec,
+        k: int = DEFAULT_TOP_K,
+        *,
+        scorer: str = "reference",
+        field: str | None = None,
+        synonyms: DataFrame | None = None,
+        count: bool = False,
+        exact: bool = False,
+        assemble: bool = True,
+        snippets: bool = True,
+    ) -> dict:
+        """The one query router: the top-k of a classified query
+        (parser.parse_spec, or an mlt spec) as a response body
+        {"results", "totalCount"[, "didYouMean"][, "totalMatches"]}.
+
+        Options: `scorer` bm25|bm25f swaps the reference formula for
+        Okapi BM25 / BM25F, `field` restricts matching to a heading
+        channel (search_field_df), `synonyms` expands the query words
+        through a (term, synonym) stem table, `count` adds the exact
+        size of the full ranked list (match_count_df). They apply only
+        to a `text` spec under the reference scorer, at most one at a
+        time, and synonyms only to a bag-of-words query; anything else
+        raises ValueError rather than silently dropping an option.
+
+        `exact=False` runs bag-of-words and prefix/fuzzy/wildcard
+        queries on the block-max WAND hot path (rank+score identical to
+        the exact plan). `assemble` attaches url, title and (with
+        `snippets`) a highlighted snippet to each reference-scorer row;
+        without it, and under bm25/bm25f, rows are {"doc_id", "score"}.
+        A zero-hit reference `text` query without `field` carries a
+        `didYouMean` rewrite: its out-of-vocabulary words replaced by
+        their nearest vocabulary stems."""
+        if scorer not in ("reference", "bm25", "bm25f"):
+            raise ValueError("scorer must be reference|bm25|bm25f")
+        opts = [
+            name
+            for name, on in (
+                ("field", field),
+                ("count", count),
+                ("synonyms", synonyms is not None),
+                (f"scorer={scorer}", scorer != "reference"),
+            )
+            if on
+        ]
+        if opts and spec.kind != "text":
+            raise ValueError(
+                f"{spec.kind} queries support only the reference scorer "
+                f"without field/count/synonyms (got {', '.join(opts)})"
+            )
+        if len(opts) > 1:
+            raise ValueError(
+                "field, count, synonyms and a non-reference scorer apply "
+                f"one at a time (got {', '.join(opts)})"
+            )
+        self._ensure_fresh()
+        words: list[str] = []  # snippet highlight words
+        if spec.kind == "text":
+            parsed = parser.parse(spec.text)
+            words = parsed.segments  # raw segments (Ranker.java:202)
+            if synonyms is not None:
+                words = self._synonym_terms(spec.text, synonyms)
+                top = self._expansion_df(words, k)
+            elif field:
+                top = self.search_field_df(field, spec.text, k)
+            elif scorer == "bm25":
+                top = self.search_bm25_df(spec.text, k)
+            elif scorer == "bm25f":
+                top = self.search_bm25f_df(spec.text, k)
+            else:
+                if parsed.qtype in ("phrase", "phrase+boolean"):
+                    words = parsed.scoring_words
+                top = (self.search_df if exact else self.search_df_wand)(
+                    spec.text, k
+                )
+        elif spec.kind in ("prefix", "fuzzy", "wildcard"):
+            cap = spec.max_terms or DEFAULT_MAX_EXPANSIONS
+            if spec.kind == "prefix":
+                words = self.expand_prefix(spec.text, cap)
+            elif spec.kind == "fuzzy":
+                words = self.expand_fuzzy(spec.text, spec.max_dist, cap)
+            else:
+                words = self.expand_wildcard(spec.text, cap)
+            top = self._expansion_df(words, k, wand=not exact)
+        elif spec.kind in ("near", "sloppy"):
+            if spec.kind == "sloppy" and len(spec.words) > 2:
+                top = self.search_sloppy_df(list(spec.words), spec.slop, k)
+            else:
+                # the two-word `"w1 w2"~k` keeps its ordered distance-<=k
+                # semantics on the NEAR machinery
+                top = self.search_near_df(
+                    *spec.words, slop=spec.slop, k=k,
+                    ordered=spec.kind == "sloppy",
+                )
+            # the analyzed stems highlight like a phrase's scoring words
+            words = [t for t in map(parser.stem, spec.words) if t]
+        elif spec.kind == "mlt":
+            cap = spec.max_terms or DEFAULT_MLT_MAX_TERMS
+            top = self.more_like_this_df(spec.text, k, cap)
+            words = self.mlt_terms(spec.text, cap)  # memoized
+        else:
+            raise ValueError(f"unknown query kind {spec.kind!r}")
+        rows = top.collect()
+        if assemble and scorer == "reference":
+            results = self._assemble(rows, words, snippets)
+        else:
+            results = [{"doc_id": r.doc_id, "score": r.score} for r in rows]
+        out = {"results": results, "totalCount": len(results)}
+        plain = spec.kind == "text" and scorer == "reference" and not field
+        if not results and plain:
+            # one lexicon scan, on the empty-result path only
+            qwords = parser.tokenize(spec.text)
+            fixes = self.suggest_spelling(qwords)
+            if fixes:
+                out["didYouMean"] = " ".join(fixes.get(w, w) for w in qwords)
+        if count:
+            out["totalMatches"] = int(
+                self.match_count_df(spec.text).collect()[0].n_matches
+            )
+        return out
+
     def search(
         self, query: str, k: int = DEFAULT_TOP_K, with_snippets: bool = True
     ) -> list[dict]:
-        """Full search: top-k + metadata join + snippets (driver-side on k
-        rows only, off the hot path — SURVEY.md R9)."""
-        self._ensure_fresh()
-        top = self.search_df(query, k).collect()
-        parsed = parser.parse(query)
-        if parsed.qtype in ("phrase", "phrase+boolean"):
-            snippet_words = parsed.scoring_words
-        else:
-            snippet_words = parsed.segments  # raw segments (Ranker.java:202)
-        return self._assemble(top, snippet_words, with_snippets)
+        """Full search of a reference-grammar query: top-k + metadata +
+        snippets (driver-side on k rows only, off the hot path — SURVEY.md
+        R9)."""
+        spec = parser.QuerySpec("text", query)
+        return self.run(spec, k, exact=True, snippets=with_snippets)["results"]
 
     def search_prefix(
         self,
@@ -2508,68 +2509,10 @@ class SearchEngine:
         max_expansions: int = DEFAULT_MAX_EXPANSIONS,
         with_snippets: bool = True,
     ) -> list[dict]:
-        """Full-response prefix search: the prefix rewrite's top-k with
-        the same metadata + snippet assembly as search(); expanded terms
-        highlight in snippets."""
-        self._ensure_fresh()
-        terms = self.expand_prefix(prefix, max_expansions)
-        if not terms:
-            return []
-        top = self._score_expansion(terms, k).collect()
-        return self._assemble(top, terms, with_snippets)
-
-    def search_fuzzy(
-        self,
-        word: str,
-        k: int = DEFAULT_TOP_K,
-        max_dist: int = 1,
-        max_expansions: int = DEFAULT_MAX_EXPANSIONS,
-        with_snippets: bool = True,
-    ) -> list[dict]:
-        """Full-response fuzzy search (see search_prefix)."""
-        self._ensure_fresh()
-        terms = self.expand_fuzzy(word, max_dist, max_expansions)
-        if not terms:
-            return []
-        top = self._score_expansion(terms, k).collect()
-        return self._assemble(top, terms, with_snippets)
-
-    def search_near(
-        self,
-        word1: str,
-        word2: str,
-        slop: int = 3,
-        k: int = DEFAULT_TOP_K,
-        with_snippets: bool = True,
-        ordered: bool = False,
-    ) -> list[dict]:
-        """Full-response NEAR search (see search_near_df); the two
-        analyzed stems highlight in snippets like a phrase's scoring
-        words."""
-        top = self.search_near_df(
-            word1, word2, slop, k, ordered=ordered
-        ).collect()
-        words = [
-            t
-            for t in (
-                parser.stem(word1.strip().lower()),
-                parser.stem(word2.strip().lower()),
-            )
-            if t
-        ]
-        return self._assemble(top, words, with_snippets)
-
-    def search_field(
-        self,
-        field: str,
-        query: str,
-        k: int = DEFAULT_TOP_K,
-        with_snippets: bool = True,
-    ) -> list[dict]:
-        """Full-response fielded search (see search_field_df)."""
-        top = self.search_field_df(field, query, k).collect()
-        parsed = parser.parse(query)
-        return self._assemble(top, parsed.segments, with_snippets)
+        """Full-response prefix search (search_prefix_df + the metadata
+        and snippet assembly of search(); expanded terms highlight)."""
+        spec = parser.QuerySpec("prefix", prefix, max_terms=max_expansions)
+        return self.run(spec, k, exact=True, snippets=with_snippets)["results"]
 
     def _assemble(
         self, top, snippet_words: list[str], with_snippets: bool

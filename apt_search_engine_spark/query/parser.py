@@ -28,35 +28,85 @@ _BOOL_SPLIT = re.compile(r"(?= AND | OR | NOT )|(?<= AND )|(?<= OR )|(?<= NOT )"
 
 OPERATORS = ("AND", "OR", "NOT")
 
-# Extension query syntax (NOT in the reference grammar) recognized by the
-# serving/CLI layers before the reference parser runs: `pre*` (prefix
-# expansion), `word~1` / `word~2` (fuzzy), `w1 NEAR/3 w2` (unordered
-# proximity, slop 1-99). One bare term per wildcard; all case-insensitive
-# (match groups should be lowercased before hitting the engine — the
-# vocabulary is lowercase by analysis).
-MULTITERM_RE = re.compile(r"([a-z0-9]+)(?:(\*)|~([12]))", re.I)
-NEAR_RE = re.compile(r"([a-z0-9]+)\s+NEAR/([1-9][0-9]?)\s+([a-z0-9]+)", re.I)
+# Extension query syntax (NOT in the reference grammar), read only by
+# parse_spec below: `pre*` (prefix expansion), `word~1` / `word~2`
+# (fuzzy), `w1 NEAR/3 w2` (unordered proximity, slop 1-99). One bare
+# term per wildcard; all case-insensitive (parse_spec lowercases the
+# captured terms — the vocabulary is lowercase by analysis).
+_MULTITERM_RE = re.compile(r"([a-z0-9]+)(?:(\*)|~([12]))", re.I)
+_NEAR_RE = re.compile(r"([a-z0-9]+)\s+NEAR/([1-9][0-9]?)\s+([a-z0-9]+)", re.I)
 # Sloppy phrase `"w1 w2"~k` (Lucene PhraseQuery with slop, two-word
 # form): ordered proximity — w1 must precede w2 within k positions.
-SLOPPY_RE = re.compile(
+_SLOPPY_RE = re.compile(
     r'"\s*([a-z0-9]+)\s+([a-z0-9]+)\s*"~([1-9][0-9]?)', re.I
 )
 # N-word sloppy phrase `"w1 w2 w3 ..."~k` (>= 3 words): Lucene
 # PhraseQuery slop over in-order chains — span excess <= k
 # (engine.search_sloppy_df; k=0 is excluded here because `~0` is the
 # exact phrase, which the plain quoted syntax already serves).
-SLOPPY_N_RE = re.compile(
+_SLOPPY_N_RE = re.compile(
     r'"\s*([a-z0-9]+(?:\s+[a-z0-9]+){2,})\s*"~([1-9][0-9]?)', re.I
 )
 # General wildcard pattern (`te*t`, `t?st`, `*ing`): `*` = any run, `?` =
 # any single char, anywhere in the term. The trailing-star-only shape
-# (`pre*`) is dispatched to the cheaper prefix path by MULTITERM_RE
-# first, so this matches only patterns the prefix rewrite can't serve.
-# Requires at least one wildcard AND at least one literal char (a bare
-# `*` / `??` would be an unbounded vocabulary dump, not a query).
-WILDCARD_RE = re.compile(
+# (`pre*`) is sent to the cheaper prefix path by _MULTITERM_RE first, so
+# this matches only patterns the prefix rewrite can't serve. Requires at
+# least one wildcard AND at least one literal char (a bare `*` / `??`
+# would be an unbounded vocabulary dump, not a query).
+_WILDCARD_RE = re.compile(
     r"(?=[a-z0-9*?]*[*?])(?=[*?]*[a-z0-9])[a-z0-9*?]+", re.I
 )
+
+
+@dataclass(frozen=True)
+class QuerySpec:
+    """One classified query: its `kind` and the arguments that kind
+    needs (SearchEngine.run dispatches on it).
+
+      text      `text` = the raw query, in the reference grammar
+      prefix    `text` = the prefix of `pre*`
+      fuzzy     `text` = the word of `word~d`, `max_dist` = d
+      wildcard  `text` = the glob pattern (`te*t`, `t?st`, `*ing`)
+      near      `words` = (w1, w2) of `w1 NEAR/k w2`, `slop` = k
+      sloppy    `words` of `"w1 w2 ..."~k` (ordered), `slop` = k
+      mlt       `text` = the seed doc_id (never parsed from query text)
+
+    `max_terms` caps a rewrite's term count (prefix / fuzzy / wildcard
+    expansions and mlt term selection); None = the engine default."""
+
+    kind: str
+    text: str = ""
+    words: tuple[str, ...] = ()
+    slop: int = 0
+    max_dist: int = 0
+    max_terms: int | None = None
+
+
+def parse_spec(text: str) -> QuerySpec:
+    """Classify `text` once: extension syntax in one fixed order (the
+    regexes' full matches are disjoint except `pre*`, which both the
+    multi-term and the wildcard shape accept and which goes to the
+    cheaper prefix path), else a reference-grammar `text` query. The
+    patterns match the lowercased text, so a letter whose lowercase is
+    not one [a-z0-9] character (`İ`) never forms extension syntax. The
+    text kind keeps the raw string: the boolean split is
+    case-sensitive."""
+    q = text.strip()
+    ql = q.lower()
+    if m := _SLOPPY_N_RE.fullmatch(ql):
+        words = tuple(m[1].split())
+        return QuerySpec("sloppy", q, words=words, slop=int(m[2]))
+    if m := _SLOPPY_RE.fullmatch(ql):
+        return QuerySpec("sloppy", q, words=(m[1], m[2]), slop=int(m[3]))
+    if m := _NEAR_RE.fullmatch(ql):
+        return QuerySpec("near", q, words=(m[1], m[3]), slop=int(m[2]))
+    if m := _MULTITERM_RE.fullmatch(ql):
+        if m[2]:
+            return QuerySpec("prefix", m[1])
+        return QuerySpec("fuzzy", m[1], max_dist=int(m[3]))
+    if _WILDCARD_RE.fullmatch(ql):
+        return QuerySpec("wildcard", ql)
+    return QuerySpec("text", text)
 
 
 def stem(word: str) -> str:
@@ -99,6 +149,12 @@ class ParsedQuery:
     qtype: str            # normal | normal+boolean | phrase | phrase+boolean
     query_words: list[str]  # stemmed, in order (duplicates preserved)
     segments: list[str]     # raw operator-split segments (incl. operators)
+
+    @property
+    def bag_words(self) -> list[str]:
+        """The distinct stems of a bag-of-words reading, in ascending
+        order, operator words dropped (QueryProcessor.java:121-128)."""
+        return sorted({w for w in self.query_words if not is_operator(w)})
 
     @property
     def scoring_words(self) -> list[str]:

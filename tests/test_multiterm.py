@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import pytest
 
+from apt_search_engine_spark.query.parser import QuerySpec
+
 
 def _levenshtein(a: str, b: str) -> int:
     # plain unweighted edit distance (== Spark F.levenshtein / DuckDB
@@ -231,10 +233,12 @@ def test_prefix_fuzzy_wand_equal_exact(engine, oracle, prefix):
     base = sorted(oracle.inverted)[len(oracle.inverted) // 2]
     word = ("z" + base[1:]) if len(base) > 2 else base + "z"
     exact = engine.search_fuzzy_df(word, k=10, max_dist=1).collect()
-    wand = engine.search_fuzzy_wand_df(word, k=10, max_dist=1).collect()
-    assert [r.doc_id for r in wand] == [r.doc_id for r in exact]
+    wand = engine.run(
+        QuerySpec("fuzzy", word, max_dist=1), k=10, assemble=False
+    )["results"]
+    assert [r["doc_id"] for r in wand] == [r.doc_id for r in exact]
     for w, e in zip(wand, exact):
-        assert w.score == pytest.approx(e.score, rel=1e-9)
+        assert w["score"] == pytest.approx(e.score, rel=1e-9)
     assert exact, "vacuous WAND-rewrite parity"
 
 
@@ -281,7 +285,7 @@ def test_field_search_parity(engine, oracle):
 
 
 def test_field_search_full_response(engine):
-    rows = engine.search_field("h1", "use user", k=3)
+    rows = engine.run(QuerySpec("text", "use user"), k=3, field="h1")["results"]
     assert rows
     for r in rows:
         assert set(r) == {"doc_id", "url", "score", "title", "snippet"}
@@ -542,7 +546,7 @@ def test_mlt_topk_excludes_seed_and_matches_oracle(engine, oracle):
     _assert_rank_identical(got, want)
     assert seed not in {r.doc_id for r in got}
     # full-response shape
-    full = engine.more_like_this(seed, k=3, max_terms=5)
+    full = engine.run(QuerySpec("mlt", seed, max_terms=5), k=3)["results"]
     assert full and all(
         set(r) >= {"doc_id", "url", "score", "title", "snippet"} for r in full
     )
@@ -626,7 +630,7 @@ def test_synonym_refuses_phrase_family(spark, engine):
     with pytest.raises(ValueError, match="bag-of-words"):
         engine.search_synonym_df('"travel guide"', syn)
     with pytest.raises(ValueError, match="bag-of-words"):
-        engine.search_synonym('"travel guide" AND tips', syn)
+        engine.run(QuerySpec("text", '"travel guide" AND tips'), synonyms=syn)
 
 
 def test_mlt_term_selection_is_one_driver_round_trip(spark, engine, oracle):

@@ -325,12 +325,15 @@ def test_query_job_counts(spark, engine):
     eng.search("europe tips", k=10)
     eng.search_bm25_wand_df("europe tips", k=10).collect()
     eng.search_prefix("eur", k=10)
+    seed = eng.search("travel guide", k=1)[0]["doc_id"]
+    eng.more_like_this_df(seed, k=10)
     cases = [
         ("bow", lambda: eng.search("travel guide", k=10), 2),
         ("bm25", lambda: eng.search_bm25_df("spark query", k=10), 2),
         ("wand", lambda: eng.search_bm25_wand_df("index query", k=10), 2),
         ("wand_ref", lambda: eng.search_df_wand("guide tips", k=10), 2),
         ("prefix", lambda: eng.search_prefix("tra", k=10), 3),
+        ("mlt", lambda: eng.more_like_this_df(seed, k=10), 2),
         ("phrase", lambda: eng.search('"travel guide"', k=10), 4),
         ("bool_or", lambda: eng.search('"europe tips" OR spark', k=10), 4),
         ("bool_not", lambda: eng.search('"travel guide" NOT europe', k=10), 4),

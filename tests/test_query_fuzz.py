@@ -34,6 +34,16 @@ def test_parser_total_on_query_shaped_text(q):
     assert p.qtype in ("normal", "normal+boolean", "phrase", "phrase+boolean")
 
 
+@settings(max_examples=500, deadline=None)
+@given(q=_QUERYISH)
+def test_parse_spec_total_on_query_shaped_text(q):
+    spec = parser.parse_spec(q)
+    assert spec.kind in ("text", "prefix", "fuzzy", "wildcard", "near", "sloppy")
+    if spec.kind != "text":
+        assert spec.text == spec.text.lower()
+        assert all(w == w.lower() for w in spec.words)
+
+
 ADVERSARIAL = [
     '"',
     '""',

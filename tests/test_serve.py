@@ -98,7 +98,7 @@ def test_search_error_returns_json_500(engine, monkeypatch):
     def boom(*args, **kwargs):
         raise RuntimeError("engine exploded")
 
-    monkeypatch.setattr(engine, "search", boom)
+    monkeypatch.setattr(engine, "search_df", boom)
     httpd = serve(engine, host="127.0.0.1", port=0)
     port = httpd.server_address[1]
     t = threading.Thread(target=httpd.serve_forever, daemon=True)
@@ -316,6 +316,8 @@ def test_multiterm_param_conflicts_and_case(engine):
             "query=tra*&count=exact",
             "query=travel%20NEAR/2%20guide&count=exact",
             "query=travel&field=h1&scorer=bm25",
+            "query=travel&field=h1&count=exact",
+            "query=travel&scorer=bm25&count=exact",
         ):
             try:
                 urllib.request.urlopen(
