@@ -103,7 +103,7 @@ ANALYZED_SCHEMA = (
 # doc, so it reaches the index with zero joins); disk postings store
 # parallel occs/dls arrays and the blocks companion gains
 # occs_vb/dls_vb + block_max_occ/block_min_dl, enabling block-max WAND
-# for the BM25 scorer (query/wand.wand_bm25_topk).
+# for the BM25 scorer (query/wand.bm25_scorer).
 # v9: positions are delta+varbyte-encoded AT ANALYZE TIME (one segmented
 # codec pass inside the analyzer UDF) and travel as a `positions_vb`
 # binary column through the analyze checkpoint, the merge shuffle and

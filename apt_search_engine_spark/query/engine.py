@@ -42,6 +42,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -55,14 +56,13 @@ from apt_search_engine_spark.config import (
     N_TERM_BUCKETS,
     idf_numerator,
 )
-from apt_search_engine_spark.query import parser
+from apt_search_engine_spark.query import parser, wand
 from apt_search_engine_spark.query.pointread import (
     _sql_lit,
     local_frame,
     read_rows,
     sql_in,
 )
-from apt_search_engine_spark.query.wand import RESULT_SCHEMA
 from apt_search_engine_spark.query.snippets import generate_snippet
 
 # R1/R2 tag-weight fold (Ranker.java:43-66) is precomputed at build time
@@ -402,6 +402,63 @@ def bm25_idf(df: int, n_docs: int) -> float:
     import math
 
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+# the per-doc sum of `contrib` over (term, contrib) rows in ascending term
+# order (determinism contract, SURVEY.md 7.4)
+_TERM_FOLD = (
+    "aggregate(array_sort(collect_list(struct(term, contrib))), "
+    "0D, (acc, x) -> acc + x.contrib)"
+)
+
+
+def _bag_words(parsed: parser.ParsedQuery) -> list[str] | None:
+    """The distinct stems of a bag-of-words query, or None for a phrase
+    or boolean-phrase query: its candidates need positions, which the
+    WAND blocks and the batched BM25 plan do not carry."""
+    if parsed.qtype in ("normal", "normal+boolean"):
+        return parsed.bag_words
+    return None
+
+
+class _BM25(NamedTuple):
+    """One query's Okapi BM25 constants (SearchEngine._bm25), computed
+    driver-side in Python and shared verbatim by the exact plans' SQL
+    text, the WAND kernel (query/wand.bm25_scorer) and the DuckDB oracle
+    SQL: `idfs` maps each query word with a df to its idf, and
+    K(dl) = c0 + c1*dl with c0 = k1*(1-b) and c1 = k1*b/avgdl."""
+
+    idfs: dict[str, float]
+    k1p1: float
+    c0: float
+    c1: float
+
+    def contrib(self, tf: str, idf: str | None = None) -> str:
+        """SQL text of one posting's contribution idf * tfn(tf, dl) —
+        `idf` defaults to the idf map looked up by term. Every
+        sub-expression is parenthesized, so the text parses to the
+        oracle's association: idf * ((tf * k1p1) / (tf + (c0 + c1*dl)))."""
+        if idf is None:
+            idf = "map(" + ", ".join(
+                f"{_sql_lit(w)}, {_sql_lit(v)}" for w, v in self.idfs.items()
+            ) + ")[term]"
+        return (
+            f"({idf} * (({tf} * {_sql_lit(self.k1p1)}) / ({tf} + "
+            f"({_sql_lit(self.c0)} + ({_sql_lit(self.c1)} * "
+            "CAST(dl AS DOUBLE))))))"
+        )
+
+
+# SearchEngine.run's plan per (scorer, exact): BM25F has no block bound,
+# so it runs exact either way
+_PLANS = {
+    ("reference", True): "search_df",
+    ("reference", False): "search_df_wand",
+    ("bm25", True): "search_bm25_df",
+    ("bm25", False): "search_bm25_wand_df",
+    ("bm25f", True): "search_bm25f_df",
+    ("bm25f", False): "search_bm25f_df",
+}
 
 
 class SearchEngine:
@@ -1188,10 +1245,7 @@ class SearchEngine:
                 return scored.selectExpr("count(1) AS n_matches")
             return scored.orderBy(F.desc("score"), F.asc("url")).limit(k)
 
-        aggs = [F.expr(
-            "aggregate(array_sort(collect_list(struct(term, contrib))), "
-            "0D, (acc, x) -> acc + x.contrib) AS raw"
-        )]
+        aggs = [F.expr(f"{_TERM_FOLD} AS raw")]
         if gate is not None:
             aggs.append(gate)
         raw_by_doc = sp.groupBy("doc_ord").agg(*aggs)
@@ -1208,9 +1262,7 @@ class SearchEngine:
             return scored.selectExpr("count(1) AS n_matches")
         # translate_topk cuts the top k and point-looks up doc_map for
         # those rows only
-        from apt_search_engine_spark.query.wand import translate_topk
-
-        return translate_topk(self.spark, scored, self._doc_ids, k)
+        return wand.translate_topk(self.spark, scored, self._doc_ids, k)
 
     def _prior_by_ord(self) -> DataFrame | None:
         """The url-keyed doc_prior mapped into ordinal space:
@@ -1242,49 +1294,57 @@ class SearchEngine:
         priors — admissible, rank-identical to the exact prior plan
         (tests/test_prior.py)."""
         self._ensure_fresh()
-        parsed = parser.parse(query)
-        if (
-            parsed.qtype not in ("normal", "normal+boolean")
-            or not self._has_blocks()
-        ):
-            # no compressed companion (built with --no-blocks): exact plan
-            return self.search_df(query, k)
-        words = [
-            w for w in parsed.query_words if w.upper() not in parser.OPERATORS
-        ]
-        return self._wand_topk_for_terms(words, k)
-
-    def _has_blocks(self) -> bool:
-        return os.path.isdir(
-            os.path.join(self.index_dir, "blocks")
+        return self._wand_df(
+            _bag_words(parser.parse(query)), k, lambda: self.search_df(query, k)
         )
 
-    def _wand_topk_for_terms(self, words: list[str], k: int) -> DataFrame:
-        """Block-max WAND over a bag of distinct terms (multiplicity 1 —
-        the exact normal path dedups words, so scores match it
-        bit-for-bit). Shared by the parsed normal path and the
-        prefix/fuzzy multi-term rewrite."""
-        from apt_search_engine_spark.query.wand import wand_topk
-
-        if not words:
+    def _wand_df(
+        self,
+        words: list[str] | None,
+        k: int,
+        exact: Callable[[], DataFrame],
+        bm25: tuple[float, float] | None = None,
+    ) -> DataFrame:
+        """The one block-max WAND entry (query/wand.wand_topk): the
+        reference scorer, or Okapi BM25 with `bm25` = (k1, b). `words`
+        are the distinct stems of a bag of words (multiplicity 1 — the
+        exact bag-of-words plans dedup words too, so scores match them
+        bit for bit). None marks a phrase-family query, which needs
+        positions: it, and an index built without the blocks companion,
+        run `exact()` — the same scorer's exact plan — instead."""
+        blocks_dir = os.path.join(self.index_dir, "blocks")
+        if words is None or not os.path.isdir(blocks_dir):
+            return exact()
+        if bm25 is None:
+            dfs = self.term_dfs(words)
+            weights = {
+                t: float(self.idf_numerator // dfs[t]) for t in words if t in dfs
+            }
+            scorer, prior, prior_by_ord = (
+                wand.REFERENCE, self.prior, self._prior_by_ord()
+            )
+        else:
+            bm = self._bm25(words, *bm25)
+            words = list(bm.idfs)
+            weights, prior, prior_by_ord = bm.idfs, 1.0, None
+            scorer = wand.bm25_scorer(bm.k1p1, bm.c0, bm.c1)
+        if not weights:
             return self._empty_results()
-        term_mult = {w: 1 for w in words}
-        buckets = sorted({self._bucket(t) for t in term_mult})
+        buckets = sorted({self._bucket(t) for t in words})
         blocks = (
-            self._read(os.path.join(self.index_dir, "blocks"))
+            self._read(blocks_dir)
             .filter(F.col("term_bucket").isin(buckets))
-            .filter(F.col("term").isin(list(term_mult)))
+            .filter(F.col("term").isin(words))
         )
-        return wand_topk(
+        return wand.wand_topk(
             self.spark,
             blocks,
             self._doc_ids,
-            term_mult,
-            self.term_dfs(words),
-            self.n_docs,
+            weights,
+            scorer,
             k,
-            idf_num=self.idf_numerator,
-            prior_by_ord=self._prior_by_ord(),
+            prior=prior,
+            prior_by_ord=prior_by_ord,
             deleted=self._deleted_keys(),
             deleted_df=self._deleted_df(),
         )
@@ -1303,20 +1363,33 @@ class SearchEngine:
             return self._empty_results()
         return self._score(filtered, words, gate, k, dedup_by_url=dedup_by_url)
 
-    def _filtered_plan(self, parsed):
-        """The query-type dispatch shared by search_df and
-        match_count_df: (filtered postings plan, scoring words, gate)."""
+    def _filtered_plan(self, parsed, with_occ_dl: bool = False):
+        """The one retrieval dispatch — the candidate operators every
+        scorer shares (SURVEY.md 2.4: "the same candidate sets ... only
+        the scorer differs"): (filtered postings plan, scoring words,
+        gate). Phrase and boolean plans filter by positions and gate on
+        their first scoring word (quirk Q7); a bag of words has no gate.
+        `with_occ_dl` carries the BM25 inputs (occ, dl) in place of the
+        reference scorer's stamped df column."""
         if parsed.qtype == "phrase":
-            filtered = self._phrase_filtered(parsed.query_words)
+            filtered = self._phrase_filtered(parsed.query_words, with_occ_dl)
             words = parsed.scoring_words
             gate = words[0] if words else None
         elif parsed.qtype == "phrase+boolean":
-            filtered = self._boolean_filtered(parsed)
+            filtered = self._boolean_filtered(parsed, with_occ_dl)
             words = parsed.scoring_words
             gate = words[0] if words else None
         else:  # normal / normal+boolean: bag of words, operators dropped
             words = parsed.bag_words
-            filtered = self._exploded(words, with_df=True)
+            if with_occ_dl:
+                # BM25 scores only words with a df: the scan reads just
+                # their buckets
+                dfs = self.term_dfs(words)
+                filtered = self._exploded(
+                    [w for w in words if w in dfs], with_occ_dl=True
+                )
+            else:
+                filtered = self._exploded(words, with_df=True)
             gate = None
         return filtered, words, gate
 
@@ -1567,11 +1640,13 @@ class SearchEngine:
         nothing."""
         if not terms:
             return self._empty_results()
-        if wand and self._has_blocks():
-            return self._wand_topk_for_terms(sorted(terms), k)
-        return self._score(
-            self._exploded(terms, with_df=True), sorted(terms), None, k
-        )
+
+        def exact():
+            return self._score(
+                self._exploded(terms, with_df=True), sorted(terms), None, k
+            )
+
+        return self._wand_df(sorted(terms), k, exact) if wand else exact()
 
     def search_prefix_df(
         self,
@@ -1910,7 +1985,7 @@ class SearchEngine:
         # translate_topk rows are already in (score desc, doc_id asc) order
         rows = [(r.doc_id, r.score) for r in top.collect()
                 if r.doc_id != doc_id]
-        return local_frame(self.spark, rows[:k], RESULT_SCHEMA)
+        return local_frame(self.spark, rows[:k], wand.RESULT_SCHEMA)
 
     def expand_synonyms(
         self, words: list[str], synonyms: DataFrame
@@ -1951,12 +2026,13 @@ class SearchEngine:
         drop adjacency/exclusion semantics, so phrase-family queries
         raise ValueError."""
         parsed = parser.parse(query)
-        if parsed.qtype not in ("normal", "normal+boolean"):
+        words = _bag_words(parsed)
+        if words is None:
             raise ValueError(
                 "synonym expansion applies to bag-of-words queries only "
                 f"(got {parsed.qtype})"
             )
-        return self.expand_synonyms(parsed.bag_words, synonyms)
+        return self.expand_synonyms(words, synonyms)
 
     def suggest_terms_df(
         self, prefix: str, k: int = DEFAULT_TOP_K
@@ -2006,6 +2082,31 @@ class SearchEngine:
             .orderBy(F.desc("n_docs"), F.asc("facet"))
         )
 
+    def _bm25(self, words: list[str], k1: float, b: float) -> _BM25:
+        """The BM25 constants of one query over `words`: the one place
+        they are computed, for the exact, WAND and batch plans. Refuses a
+        pre-v6 index (no total_len) rather than misscore."""
+        if not self.total_len:
+            raise ValueError(
+                "index meta has no total_len (pre-v6 layout): rebuild"
+            )
+        dfs = self.term_dfs(words)
+        avgdl = self.total_len / self.n_docs
+        return _BM25(
+            {w: bm25_idf(dfs[w], self.n_docs) for w in words if dfs.get(w)},
+            k1 + 1.0,
+            k1 * (1.0 - b),
+            k1 * b / avgdl,
+        )
+
+    def _fold_topk(self, sp: DataFrame, contrib: str, k: int) -> DataFrame:
+        """Top-k of the per-doc sums of the SQL expression `contrib` over
+        the posting rows `sp`, folded in ascending term order."""
+        scored = sp.selectExpr(
+            "doc_ord", "term", f"{contrib} AS contrib"
+        ).groupBy("doc_ord").agg(F.expr(f"{_TERM_FOLD} AS score"))
+        return wand.translate_topk(self.spark, scored, self._doc_ids, k)
+
     def search_bm25_df(
         self,
         query: str,
@@ -2017,8 +2118,8 @@ class SearchEngine:
         scorer offered ALONGSIDE the reference-parity scorer (search_df;
         the reference's own formula is tf*floor(N/df)*prior,
         Ranker.java:168-342 — this method is the standard alternative the
-        BASELINE.json metric names). Retrieval (candidate set) follows the
-        query type exactly like search_df — bag-of-words / phrase
+        BASELINE.json metric names). Retrieval (candidate set) is the
+        shared dispatch (_filtered_plan) — bag-of-words / phrase
         adjacency / boolean set algebra — only the scorer differs:
 
           score(d) = sum_t idf(t) * occ*(k1+1) / (occ + k1*(1-b+b*dl/avgdl))
@@ -2031,11 +2132,11 @@ class SearchEngine:
         avgdl = total_len/n_docs (meta, layout v6).
 
         Determinism/oracle contract: idf and the k1/b/avgdl-derived
-        constants are computed driver-side in Python and enter the plan as
-        double literals; the distributed expression is fixed-association
-        IEEE-754 arithmetic and the per-doc sum folds in ascending term
-        order — bit-identical to the DuckDB oracle evaluating the same
-        literals (extras/search_oracle.bm25_topk_sql).
+        constants are computed driver-side in Python (_bm25) and enter the
+        plan as double literals; the distributed expression is
+        fixed-association IEEE-754 arithmetic and the per-doc sum folds
+        in ascending term order — bit-identical to the DuckDB oracle
+        evaluating the same literals (extras/search_oracle.bm25_topk_sql).
 
         Scale shape: bucket-pruned postings scan with the stored
         per-posting occ/dl columns exploded in place (layout v7 postings
@@ -2043,64 +2144,19 @@ class SearchEngine:
         table's value for every posted doc) -> partial-aggregated per-doc
         fold in ordinal space -> TakeOrderedAndProject and point-lookup
         doc_map translation of the final k rows, both in translate_topk.
-        NO joins anywhere in the plan. The contrib expression is one
-        `selectExpr` over SQL text with every sub-expression
-        parenthesized, so it parses to the same association as the
-        oracle's: idf * ((occ * k1p1) / (occ + (c0 + c1 * dl)))."""
+        NO joins anywhere in the bag-of-words plan."""
         self._ensure_fresh()
-        if not self.total_len:
-            raise ValueError(
-                "index meta has no total_len (pre-v6 layout): rebuild"
-            )
-        parsed = parser.parse(query)
-        filtered = None
-        if parsed.qtype == "phrase":
-            filtered = self._phrase_filtered(
-                parsed.query_words, with_occ_dl=True
-            )
-            words = sorted(set(parsed.query_words))
-        elif parsed.qtype == "phrase+boolean":
-            filtered = self._boolean_filtered(parsed, with_occ_dl=True)
-            words = sorted(set(parsed.scoring_words))
-        else:
-            words = parsed.bag_words
-        if not words:
-            return self._empty_results()
-        dfs = self.term_dfs(words)
-        words = [w for w in words if dfs.get(w)]
-        if not words:
-            return self._empty_results()
-        if filtered is None:
-            # bag of words: the scan's own term predicate is the filter
-            sp = self._exploded(words, with_occ_dl=True)
-        else:
-            sp = filtered.where(sql_in("term", words))
-        # driver-side constants (shared verbatim with the oracle SQL):
-        # K(dl) = c0 + c1*dl, tfnorm = occ*k1p1 / (occ + K); every
-        # sub-expression parenthesized, so the text parses to the
-        # oracle's association: idf * (num / den), not (idf * num) / den
-        avgdl = self.total_len / self.n_docs
-        k1p1 = _sql_lit(k1 + 1.0)
-        c0 = _sql_lit(k1 * (1.0 - b))
-        c1 = _sql_lit(k1 * b / avgdl)
-        idf_map = "map(" + ", ".join(
-            f"{_sql_lit(w)}, {_sql_lit(bm25_idf(dfs[w], self.n_docs))}"
-            for w in words
-        ) + ")"
-        occ = "CAST(occ AS DOUBLE)"
-        contrib = (
-            f"({idf_map}[term] * (({occ} * {k1p1}) / "
-            f"({occ} + ({c0} + ({c1} * CAST(dl AS DOUBLE))))))"
+        filtered, words, _ = self._filtered_plan(
+            parser.parse(query), with_occ_dl=True
         )
-        scored = sp.selectExpr(
-            "doc_ord", "term", f"{contrib} AS contrib"
-        ).groupBy("doc_ord").agg(F.expr(
-            "aggregate(array_sort(collect_list(struct(term, contrib))), "
-            "0D, (acc, x) -> acc + x.contrib) AS score"
-        ))
-        from apt_search_engine_spark.query.wand import translate_topk
-
-        return translate_topk(self.spark, scored, self._doc_ids, k)
+        bm = self._bm25(sorted(set(words)), k1, b)
+        if not bm.idfs:
+            return self._empty_results()
+        return self._fold_topk(
+            filtered.where(sql_in("term", list(bm.idfs))),
+            bm.contrib("CAST(occ AS DOUBLE)"),
+            k,
+        )
 
     def search_bm25f_df(
         self,
@@ -2124,86 +2180,41 @@ class SearchEngine:
         document-level length normalization (dl/avgdl), not per-field
         lengths — the layout stores a single analyzer-stamped dl, and
         the per-field generalization would need per-field length
-        columns. Bag-of-words retrieval only (the scorer is field
-        emphasis, not a match predicate — compose with search_field_df
-        to restrict matching). Same no-join plan shape as search_bm25_df
-        with four more small-int arrays zipped off the pruned segments.
-        Float-parity contract as bm25: Python-computed double literals,
-        textual left-association shared with the generated SQL
-        (extras/search_oracle.bm25f_topk_sql)."""
+        columns. Retrieval is the shared dispatch (_filtered_plan): a
+        phrase or boolean query's set algebra decides which docs match,
+        and the field-weighted postings of those docs score. Same
+        no-join bag-of-words plan as search_bm25_df with four more
+        small-int arrays zipped off the pruned segments. Float-parity
+        contract as bm25: Python-computed double literals in SQL text
+        with every sub-expression parenthesized, the association of the
+        generated oracle SQL (extras/search_oracle.bm25f_topk_sql)."""
         self._ensure_fresh()
-        if not self.total_len:
-            raise ValueError(
-                "index meta has no total_len (pre-v6 layout): rebuild"
-            )
         w = dict(BM25F_WEIGHTS)
         if weights:
             w.update(weights)
-        parsed = parser.parse(query)
-        # retrieval (candidate set) follows the query type exactly like
-        # search_bm25_df — the scorers are interchangeable per query
-        cand = None
-        if parsed.qtype == "phrase":
-            cand = self._phrase_filtered(parsed.query_words)
-            words = sorted(set(parsed.query_words))
-        elif parsed.qtype == "phrase+boolean":
-            cand = self._boolean_filtered(parsed)
-            words = sorted(set(parsed.scoring_words))
-        else:
-            words = parsed.bag_words
-        if not words:
+        cand, words, gate = self._filtered_plan(parser.parse(query))
+        bm = self._bm25(sorted(set(words)), k1, b)
+        if not bm.idfs:
             return self._empty_results()
-        dfs = self.term_dfs(words)
-        words = [x for x in words if dfs.get(x)]
-        if not words:
-            return self._empty_results()
-        filtered = self._exploded(
-            words, with_occ_dl=True, with_all_fields=True
+        sp = self._exploded(
+            list(bm.idfs), with_occ_dl=True, with_all_fields=True
         )
-        if cand is not None:
-            # the phrase/boolean set algebra decides WHICH docs match;
-            # the field-weighted frame of those docs is what scores
-            filtered = filtered.join(
+        if gate is not None:
+            # a phrase or boolean plan: its doc set is the candidate set
+            sp = sp.join(
                 cand.select("doc_ord").distinct(), "doc_ord", "left_semi"
             )
-        avgdl = self.total_len / self.n_docs
-        k1p1 = k1 + 1.0
-        c0 = k1 * (1.0 - b)
-        c1 = k1 * b / avgdl
-        idf_map = F.create_map(
-            *[
-                F.lit(x)
-                for t in words
-                for x in (t, bm25_idf(dfs[t], self.n_docs))
-            ]
-        )
-        occ = F.col("occ").cast("double")
-        nt = F.col("n_title").cast("double")
-        nh1 = F.col("n_h1").cast("double")
-        nh2 = F.col("n_h2").cast("double")
-        nh3 = F.col("n_h3").cast("double")
+        lit = {f: _sql_lit(float(v)) for f, v in w.items()}
+        n = {f: f"CAST(n_{f} AS DOUBLE)" for f in ("title", "h1", "h2", "h3")}
         # textual left-association mirrored in the oracle SQL
-        tfw = (
-            F.lit(w["title"]) * nt
-            + F.lit(w["h1"]) * nh1
-            + F.lit(w["h2"]) * nh2
-            + F.lit(w["h3"]) * nh3
-            + F.lit(w["body"]) * (occ - nt - nh1 - nh2 - nh3)
-        )
-        contrib = idf_map[F.col("term")] * (
-            (tfw * F.lit(k1p1))
-            / (tfw + (F.lit(c0) + F.lit(c1) * F.col("dl").cast("double")))
-        )
-        sp = filtered.withColumn("contrib", contrib)
-        scored = sp.groupBy("doc_ord").agg(
-            F.expr(
-                "aggregate(array_sort(collect_list(struct(term, contrib))), "
-                "0D, (acc, x) -> acc + x.contrib)"
-            ).alias("score")
-        )
-        from apt_search_engine_spark.query.wand import translate_topk
-
-        return translate_topk(self.spark, scored, self._doc_ids, k)
+        tfw = f"({lit['title']} * {n['title']})"
+        body = "CAST(occ AS DOUBLE)"
+        for f in ("h1", "h2", "h3"):
+            tfw = f"({tfw} + ({lit[f]} * {n[f]}))"
+        for f in ("title", "h1", "h2", "h3"):
+            body = f"({body} - {n[f]})"
+        tfw = f"({tfw} + ({lit['body']} * {body}))"
+        return self._fold_topk(sp, bm.contrib(tfw), k)
 
     def search_bm25_wand_df(
         self,
@@ -2215,53 +2226,20 @@ class SearchEngine:
         """Okapi BM25 top-k via block-max WAND over the compressed blocks
         companion — the north rule's combination (BM25 scoring +
         posting-list block-max pruning + bounded per-partition heap ->
-        global top-k). Results are bit-identical to the exact plan
-        (search_bm25_df; parity pinned in tests/test_bm25.py): both paths
-        evaluate the same Python-computed idf / K(dl) double literals in
+        global top-k), through the same WAND entry and kernel as
+        search_df_wand with the BM25 block scorer
+        (query/wand.bm25_scorer). Results are bit-identical to the exact
+        plan (search_bm25_df; parity pinned in tests/test_bm25.py): both
+        paths evaluate the same Python-computed idf / K(dl) doubles in
         the same IEEE order and fold per-doc contributions ascending by
-        term. Pruning uses the stored per-block stats (block_max_occ,
-        block_min_dl): the BM25 tf-norm is increasing in occ and
-        decreasing in dl, so idf * tfnorm(max_occ, min_dl) is an
-        admissible block bound under the QUERY-TIME k1/b/avgdl — nothing
-        scoring-related is baked into the blocks, so compaction-driven
-        avgdl drift never invalidates them. Phrase/boolean queries need
-        positions and fall back to the exact BM25 plan."""
+        term. Phrase/boolean queries need positions and fall back to the
+        exact BM25 plan."""
         self._ensure_fresh()
-        parsed = parser.parse(query)
-        if (
-            parsed.qtype not in ("normal", "normal+boolean")
-            or not self.total_len
-            or not os.path.isdir(os.path.join(self.index_dir, "blocks"))
-        ):
-            return self.search_bm25_df(query, k, k1, b)
-        from apt_search_engine_spark.query.wand import wand_bm25_topk
-
-        words = parsed.bag_words
-        if not words:
-            return self._empty_results()
-        dfs = self.term_dfs(words)
-        words = [w for w in words if dfs.get(w)]
-        if not words:
-            return self._empty_results()
-        avgdl = self.total_len / self.n_docs
-        idfs = {w: bm25_idf(dfs[w], self.n_docs) for w in words}
-        buckets = sorted({self._bucket(t) for t in words})
-        blocks = (
-            self._read(os.path.join(self.index_dir, "blocks"))
-            .filter(F.col("term_bucket").isin(buckets))
-            .filter(F.col("term").isin(words))
-        )
-        return wand_bm25_topk(
-            self.spark,
-            blocks,
-            self._doc_ids,
-            idfs,
-            k1 + 1.0,
-            k1 * (1.0 - b),
-            k1 * b / avgdl,
+        return self._wand_df(
+            _bag_words(parser.parse(query)),
             k,
-            deleted=self._deleted_keys(),
-            deleted_df=self._deleted_df(),
+            lambda: self.search_bm25_df(query, k, k1, b),
+            bm25=(k1, b),
         )
 
     def search_bm25_batch_df(
@@ -2295,40 +2273,30 @@ class SearchEngine:
         join the local result.
         """
         self._ensure_fresh()
-        if not self.total_len:
-            raise ValueError(
-                "index meta has no total_len (pre-v6 layout): rebuild"
-            )
         out_schema = "query_id string, doc_id string, score double"
         bag: dict[str, list[str]] = {}
         fallback: dict[str, str] = {}
         for qid, qs in queries.items():
-            p = parser.parse(qs)
-            if p.qtype in ("normal", "normal+boolean"):
-                bag[qid] = p.bag_words
-            else:
+            words = _bag_words(parser.parse(qs))
+            if words is None:
                 fallback[qid] = qs
-        union_words = sorted({w for ws in bag.values() for w in ws})
-        dfs = self.term_dfs(union_words) if union_words else {}
+            else:
+                bag[qid] = words
+        bm = self._bm25(sorted({w for ws in bag.values() for w in ws}), k1, b)
         qt_rows = [
-            (qid, w, bm25_idf(dfs[w], self.n_docs))
+            (qid, w, bm.idfs[w])
             for qid, ws in sorted(bag.items())
             for w in ws
-            if dfs.get(w)
+            if w in bm.idfs
         ]
         out: list[tuple] = []
         if qt_rows:
-            avgdl = self.total_len / self.n_docs
-            k1p1 = _sql_lit(k1 + 1.0)
-            c0 = _sql_lit(k1 * (1.0 - b))
-            c1 = _sql_lit(k1 * b / avgdl)
             # a local relation: broadcasting it runs no job, where
             # createDataFrame parallelizes
             qt = local_frame(
                 self.spark, qt_rows, "query_id string, term string, idf double"
             )
             present = sorted({t for _, t, _ in qt_rows})
-            occ = "CAST(occ AS DOUBLE)"
             scored = (
                 self._exploded(present, with_occ_dl=True)
                 .join(F.broadcast(qt), "term")
@@ -2336,15 +2304,10 @@ class SearchEngine:
                     "query_id",
                     "doc_ord",
                     "term",
-                    f"(idf * (({occ} * {k1p1}) / ({occ} + "
-                    f"({c0} + ({c1} * CAST(dl AS DOUBLE)))))) AS contrib",
+                    f"{bm.contrib('CAST(occ AS DOUBLE)', 'idf')} AS contrib",
                 )
                 .groupBy("query_id", "doc_ord")
-                .agg(F.expr(
-                    "aggregate(array_sort(collect_list("
-                    "struct(term, contrib))), "
-                    "0D, (acc, x) -> acc + x.contrib) AS score"
-                ))
+                .agg(F.expr(f"{_TERM_FOLD} AS score"))
             )
             rows = scored.selectExpr(
                 "query_id",
@@ -2397,9 +2360,10 @@ class SearchEngine:
         time, and synonyms only to a bag-of-words query; anything else
         raises ValueError rather than silently dropping an option.
 
-        `exact=False` runs bag-of-words and prefix/fuzzy/wildcard
-        queries on the block-max WAND hot path (rank+score identical to
-        the exact plan). `assemble` attaches url, title and (with
+        `exact=False` runs bag-of-words queries under the reference and
+        BM25 scorers, and prefix/fuzzy/wildcard queries, on the
+        block-max WAND hot path (rank+score identical to the exact
+        plan). `assemble` attaches url, title and (with
         `snippets`) a highlighted snippet to each reference-scorer row;
         without it, and under bm25/bm25f, rows are {"doc_id", "score"}.
         A zero-hit reference `text` query without `field` carries a
@@ -2437,16 +2401,10 @@ class SearchEngine:
                 top = self._expansion_df(words, k)
             elif field:
                 top = self.search_field_df(field, spec.text, k)
-            elif scorer == "bm25":
-                top = self.search_bm25_df(spec.text, k)
-            elif scorer == "bm25f":
-                top = self.search_bm25f_df(spec.text, k)
             else:
-                if parsed.qtype in ("phrase", "phrase+boolean"):
+                if _bag_words(parsed) is None:
                     words = parsed.scoring_words
-                top = (self.search_df if exact else self.search_df_wand)(
-                    spec.text, k
-                )
+                top = getattr(self, _PLANS[scorer, bool(exact)])(spec.text, k)
         elif spec.kind in ("prefix", "fuzzy", "wildcard"):
             cap = spec.max_terms or DEFAULT_MAX_EXPANSIONS
             if spec.kind == "prefix":
@@ -2555,4 +2513,4 @@ class SearchEngine:
         return out
 
     def _empty_results(self) -> DataFrame:
-        return local_frame(self.spark, [], RESULT_SCHEMA)
+        return local_frame(self.spark, [], wand.RESULT_SCHEMA)

@@ -1,15 +1,33 @@
 """Block-max WAND top-k over the compressed posting blocks (north rule;
 SURVEY.md section 4.2 item 3, FIXTURES.md section P).
 
-Replaces full scoring on the bag-of-words hot path. The score of doc d is
+Replaces full scoring on the bag-of-words hot path, for every scorer. A
+scorer is one per-posting formula, and the score of doc d is
 
-    score(d) = prior * sum_{t in query} wtf_t(d) * floor(6000 / df_t) * mult_t
+    score(d) = prior(d) * sum_{t in query} weight_t * c_t(d)
 
-(reference kernel, Ranker.java:55-66 + 196; wtf = tf * sum(tag weights) is
-precomputed per posting at build time — indexing/blocks.py). Because every
-term's contribution to d lives in exactly one block, and blocks are keyed by
-the corpus-wide doc ordinal, the doc-ordinal axis can be sliced and scored
-independently:
+where the scorer supplies the term weight and the contribution c:
+
+  reference  weight = floor(6000 / df_t) * mult_t, c = wtf (tf * sum of
+             tag weights, precomputed per posting at build time —
+             indexing/blocks.py); prior = the doc prior (Ranker.java:55-66
+             + 196)
+  BM25       weight = idf_t, c = tfn(occ, dl) = occ*(k1+1) / (occ + K(dl))
+             with K(dl) = c0 + c1*dl; prior = 1.0 (x * 1.0 is the IEEE
+             identity, so the shared code needs no BM25 branch)
+
+A `BlockScorer` names the block columns its formula reads and two
+functions of them: a per-block BOUND on c (reference: the stored
+block_max_wtf; BM25: tfn(block_max_occ, block_min_dl) — tfn grows with
+occ and falls with dl, so the bound composes at query time and
+compaction-driven avgdl drift never invalidates stored blocks) and a
+per-block DECODE to per-posting c. Both are multiplied by the term
+weight, so each formula is written once and scores match the exact
+plans bit for bit (weight * c == c * weight in IEEE-754).
+
+Because every term's contribution to d lives in exactly one block, and
+blocks are keyed by the corpus-wide doc ordinal, the doc-ordinal axis can
+be sliced and scored independently:
 
   1. bucket-pruned scan of the query terms' blocks (a few directories);
   2. each block is assigned to every SLICE_ORDS-wide ordinal slice it
@@ -18,11 +36,11 @@ independently:
   3. repartition by slice, sort by slice within partitions, then one
      mapInPandas pass per partition holds a bounded min-heap of size k:
      for each slice it first compares the slice's score upper bound
-     sum_t max(block_max_wtf) * weight_t against the heap threshold and
-     SKIPS the slice entirely when it cannot beat the current kth score —
-     the block-max WAND prune; surviving slices are decoded (varbyte) and
-     scored exactly with vectorized numpy in ascending-term order (the
-     determinism contract, SURVEY.md 7.4);
+     sum_t max(block bound) * weight_t * max prior against the heap
+     threshold and SKIPS the slice entirely when it cannot beat the
+     current kth score — the block-max WAND prune; surviving slices are
+     decoded (varbyte) and scored exactly with vectorized numpy in
+     ascending-term order (the determinism contract, SURVEY.md 7.4);
   4. the per-partition top-k survivors reduce to the global top-k via
      orderBy(score desc).limit(k) — Spark's TakeOrderedAndProject — and
      that collect is the query's only Spark action. The <=k surviving
@@ -38,19 +56,20 @@ independently:
 Pruning never changes results: a skipped slice's upper bound is below the
 partition's current kth score, so none of its docs can reach the partition
 top-k, and the global top-k is contained in the union of partition top-ks.
-Parity with the exact path is asserted in tests/test_wand.py.
+Parity with the exact plans is asserted in tests/test_wand.py and
+tests/test_bm25.py.
 """
 
 from __future__ import annotations
 
 import heapq
+from dataclasses import dataclass
 from typing import Callable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from apt_search_engine_spark.config import idf_numerator
 from apt_search_engine_spark.indexing import codec
 from apt_search_engine_spark.query.pointread import local_frame
 
@@ -61,6 +80,54 @@ SLICE_ORDS = 8192
 
 _OUT_SCHEMA = "doc_ord long, score double"
 RESULT_SCHEMA = "doc_id string, score double"
+
+
+@dataclass(frozen=True)
+class BlockScorer:
+    """One scorer's formula over the blocks companion. `bound` takes the
+    `bound_cols` arrays of one term's blocks in a slice and returns a
+    per-block upper bound on the contribution; `decode` takes one block's
+    `payload_cols` values and returns its per-posting contributions (in
+    doc_ids_vb order). The kernel multiplies both by the term weight."""
+
+    bound_cols: tuple[str, ...]
+    payload_cols: tuple[str, ...]
+    bound: Callable[..., np.ndarray]
+    decode: Callable[..., np.ndarray]
+
+
+def _wtf_bound(block_max_wtf: np.ndarray) -> np.ndarray:
+    return block_max_wtf
+
+
+def _wtf_decode(wtfs: bytes) -> np.ndarray:
+    return codec.decode_tfs(bytes(wtfs))
+
+
+# the reference formula: contribution = the stored wtf
+REFERENCE = BlockScorer(
+    ("block_max_wtf",), ("wtfs",), _wtf_bound, _wtf_decode
+)
+
+
+def bm25_scorer(k1p1: float, c0: float, c1: float) -> BlockScorer:
+    """Okapi BM25's tf-norm occ*k1p1 / (occ + (c0 + c1*dl)) — the SAME
+    IEEE-754 expression order as the exact plans' SQL text
+    (engine._BM25.contrib), with the caller's Python-computed constants."""
+
+    def tfn(occ: np.ndarray, dl: np.ndarray) -> np.ndarray:
+        occ = occ.astype(np.float64)
+        return (occ * k1p1) / (occ + (c0 + c1 * dl.astype(np.float64)))
+
+    def decode(occs_vb: bytes, dls_vb: bytes) -> np.ndarray:
+        return tfn(
+            codec.varbyte_decode(bytes(occs_vb)),
+            codec.varbyte_decode(bytes(dls_vb)),
+        )
+
+    return BlockScorer(
+        ("block_max_occ", "block_min_dl"), ("occs_vb", "dls_vb"), tfn, decode
+    )
 
 
 def _live_mask(ords: np.ndarray, deleted: np.ndarray) -> np.ndarray:
@@ -104,6 +171,7 @@ def translate_topk(
 
 def _score_partition_factory(
     weights: dict[str, float],
+    scorer: BlockScorer,
     k: int,
     prior: float,
     slice_ords: int,
@@ -111,9 +179,9 @@ def _score_partition_factory(
     deleted: np.ndarray | None = None,
     with_tomb_rows: bool = False,
 ):
-    """Returns a mapInPandas function closing over the per-term weights
-    (floor(6000/df) * multiplicity), k and the DEFAULT prior (uniform
-    1/n_docs — the reference's absent-URL branch, Ranker.java:196).
+    """Returns a mapInPandas function closing over the per-term weights,
+    the scorer's bound/decode, k and the DEFAULT prior (the reference's
+    uniform 1/n_docs — its absent-URL branch, Ranker.java:196 — or 1.0).
 
     With `with_prior_rows` the partition additionally carries PRIOR rows
     (term null, doc_ord + prior set) co-partitioned by the same ordinal
@@ -132,6 +200,8 @@ def _score_partition_factory(
     maxima stay admissible and pruning needs no other change."""
 
     terms_sorted = sorted(weights)
+    bound_cols = list(scorer.bound_cols)
+    payload_cols = list(scorer.payload_cols)
 
     def score_partition(batches):
         heap: list[tuple[float, int]] = []  # (score, -ord) min-heap of top-k
@@ -187,7 +257,10 @@ def _score_partition_factory(
             for t in terms_sorted:
                 g = by_term.get(t)
                 if g is not None:
-                    ub += float(g["block_max_wtf"].max()) * weights[t]
+                    bounds = scorer.bound(
+                        *(g[c].to_numpy() for c in bound_cols)
+                    )
+                    ub += float(bounds.max()) * weights[t]
             if ub * slice_max_prior <= theta:
                 return  # pruned: no doc here can beat the kth score
             # ---- exact scoring (ascending term order) --------------------
@@ -198,19 +271,21 @@ def _score_partition_factory(
                 if g is None:
                     continue
                 w = weights[t]
-                for dvb, wvb in zip(g["doc_ids_vb"], g["wtfs"]):
+                for dvb, *payload in zip(
+                    g["doc_ids_vb"], *(g[c] for c in payload_cols)
+                ):
                     ords = codec.decode_doc_ids(bytes(dvb))
-                    wtf = codec.decode_tfs(bytes(wvb))
+                    contrib = scorer.decode(*payload)
                     m = (ords >= lo) & (ords < hi)  # mask: block may span
                     if deleted is not None:
                         m &= _live_mask(ords, deleted)
                     if slice_dead is not None:
                         m &= _live_mask(ords, slice_dead)
                     if not m.all():
-                        ords, wtf = ords[m], wtf[m]
+                        ords, contrib = ords[m], contrib[m]
                     if ords.size:
                         ord_parts.append(ords)
-                        sc_parts.append(wtf * w)
+                        sc_parts.append(contrib * w)
             if not ord_parts:
                 return
             all_ords = np.concatenate(ord_parts)
@@ -264,21 +339,22 @@ def wand_topk(
     spark: SparkSession,
     blocks: DataFrame,
     doc_ids: Callable,
-    term_mult: dict[str, int],
-    term_dfs: dict[str, int],
-    n_docs: int,
+    weights: dict[str, float],
+    scorer: BlockScorer,
     k: int,
     slice_ords: int = SLICE_ORDS,
-    idf_num: int | None = None,
+    prior: float = 1.0,
     prior_by_ord: DataFrame | None = None,
     deleted: np.ndarray | None = None,
     deleted_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Top-k (doc_id, score) for a bag-of-words query whose (already
-    stemmed) terms and multiplicities are `term_mult`, over a pre-filtered
-    `blocks` DataFrame (bucket + term pruned by the caller). `term_dfs`
-    comes from the lexicon (engine reads the pruned lexicon buckets —
-    a driver-side lookup of a few rows, no extra Spark job here).
+    """Top-k (doc_id, score) of a bag-of-words query under `scorer`,
+    over a pre-filtered `blocks` DataFrame (bucket + term pruned by the
+    caller). `weights` maps each (stemmed) query term with postings to
+    its term weight — the caller's Python-computed doubles, identical to
+    the exact plan's literals, so scores match it bit for bit. `prior`
+    multiplies every doc's sum (the reference's uniform doc prior; 1.0
+    leaves the sum as is).
 
     `prior_by_ord` is an optional (doc_ord, prior) frame — the engine's
     url-keyed doc prior mapped into ordinal space. Its rows are assigned
@@ -292,25 +368,19 @@ def wand_topk(
     prior side approaches corpus size — the same cost the reference pays
     holding its whole pageRanks map per ranking pass (Ranker.java:196);
     a deployment serving many queries should persist the slice-keyed
-    prior frame once per prior refresh."""
-    terms = sorted(term_mult)
-    prior = 1.0 / n_docs
-    if idf_num is None:
-        idf_num = idf_numerator(n_docs)
+    prior frame once per prior refresh.
 
-    weights = {
-        t: float((idf_num // term_dfs[t]) * term_mult[t])
-        for t in terms
-        if t in term_dfs
-    }
+    `deleted` (a sorted int64 ordinal array) masks tombstoned docs in
+    the scorer; `deleted_df` carries a tombstone set too large to
+    collect as slice-co-partitioned rows instead."""
     if not weights:
         return local_frame(spark, [], RESULT_SCHEMA)
 
     sliced = blocks.filter(F.col("term").isin(list(weights))).select(
         "term",
-        "block_max_wtf",
+        *scorer.bound_cols,
         "doc_ids_vb",
-        "wtfs",
+        *scorer.payload_cols,
         F.explode(
             F.sequence(
                 (F.col("lo_ord") / slice_ords).cast("long"),
@@ -321,7 +391,7 @@ def wand_topk(
     if prior_by_ord is not None:
         # the semi-join's build side re-references the blocks subtree, but
         # Catalyst column-prunes it to (term, lo_ord, hi_ord) — the payload
-        # columns (doc_ids_vb, wtfs) are scanned ONCE, by the scoring side.
+        # columns are scanned ONCE, by the scoring side.
         # The EXACT covered-slice set is load-bearing at scale: a rare term
         # whose postings scatter across the ordinal space covers few slices
         # but spans the whole corpus, so a min/max range (or shipping the
@@ -351,196 +421,9 @@ def wand_topk(
     partitioned = sliced.repartition(n_parts, "slice").sortWithinPartitions("slice")
     survivors = partitioned.mapInPandas(
         _score_partition_factory(
-            weights, k, prior, slice_ords,
+            weights, scorer, k, prior, slice_ords,
             with_prior_rows=prior_by_ord is not None,
             deleted=deleted,
-            with_tomb_rows=deleted_df is not None,
-        ),
-        _OUT_SCHEMA,
-    )
-    return translate_topk(spark, survivors, doc_ids, k)
-
-
-# -------------------------------------------------------------- BM25 mode
-def _score_partition_bm25_factory(
-    idfs: dict[str, float],
-    k: int,
-    k1p1: float,
-    c0: float,
-    c1: float,
-    slice_ords: int,
-    deleted: np.ndarray | None = None,
-    with_tomb_rows: bool = False,
-):
-    """BM25 variant of the slice scorer. Per-posting contribution is
-    idf_t * (occ*k1p1) / (occ + (c0 + c1*dl)) — the SAME IEEE-754
-    expression order as engine.search_bm25_df, so WAND results are
-    bit-identical to the exact plan (tests/test_bm25.py). The slice
-    upper bound uses the stored block stats: tfnorm is increasing in occ
-    and decreasing in dl, so idf * tfnorm(block_max_occ, block_min_dl)
-    bounds every posting in a block under the query-time k1/b/avgdl —
-    the bound composes at query time, so compaction-driven avgdl drift
-    never invalidates stored blocks."""
-
-    terms_sorted = sorted(idfs)
-
-    def _tfn(occ: np.ndarray, dl: np.ndarray) -> np.ndarray:
-        occ = occ.astype(np.float64)
-        return (occ * k1p1) / (occ + (c0 + c1 * dl.astype(np.float64)))
-
-    def score_partition(batches):
-        heap: list[tuple[float, int]] = []  # (score, -ord) min-heap
-        cur_slice = None
-        buf: list[pd.DataFrame] = []
-
-        def flush():
-            nonlocal cur_slice
-            if cur_slice is None or not buf:
-                cur_slice = None
-                return
-            rows = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            buf.clear()
-            s = cur_slice
-            cur_slice = None
-            lo, hi = s * slice_ords, (s + 1) * slice_ords
-            theta = heap[0][0] if len(heap) == k else -np.inf
-            # ---- split off this slice's tombstone rows -------------------
-            slice_dead = None
-            if with_tomb_rows:
-                is_tomb = rows["tomb"].fillna(False).astype(bool)
-                if is_tomb.any():
-                    slice_dead = np.sort(
-                        rows.loc[is_tomb, "doc_ord"]
-                        .to_numpy()
-                        .astype(np.int64)
-                    )
-                    rows = rows[~is_tomb]
-                if not len(rows):
-                    return
-            by_term = {t: g for t, g in rows.groupby("term", sort=True)}
-            # ---- block-max prune ------------------------------------------
-            ub = 0.0
-            for t in terms_sorted:
-                g = by_term.get(t)
-                if g is not None:
-                    bounds = _tfn(
-                        g["block_max_occ"].to_numpy(),
-                        g["block_min_dl"].to_numpy(),
-                    )
-                    ub += float(bounds.max()) * idfs[t]
-            if ub <= theta:
-                return
-            # ---- exact scoring (ascending term order) --------------------
-            ord_parts: list[np.ndarray] = []
-            sc_parts: list[np.ndarray] = []
-            for t in terms_sorted:
-                g = by_term.get(t)
-                if g is None:
-                    continue
-                idf = idfs[t]
-                for dvb, ovb, lvb in zip(
-                    g["doc_ids_vb"], g["occs_vb"], g["dls_vb"]
-                ):
-                    ords = codec.decode_doc_ids(bytes(dvb))
-                    occs = codec.varbyte_decode(bytes(ovb))
-                    dls = codec.varbyte_decode(bytes(lvb))
-                    m = (ords >= lo) & (ords < hi)
-                    if deleted is not None:
-                        m &= _live_mask(ords, deleted)
-                    if slice_dead is not None:
-                        m &= _live_mask(ords, slice_dead)
-                    if not m.all():
-                        ords, occs, dls = ords[m], occs[m], dls[m]
-                    if ords.size:
-                        ord_parts.append(ords)
-                        sc_parts.append(idf * _tfn(occs, dls))
-            if not ord_parts:
-                return
-            all_ords = np.concatenate(ord_parts)
-            all_sc = np.concatenate(sc_parts)
-            uniq, inv = np.unique(all_ords, return_inverse=True)
-            sums = np.zeros(uniq.size, dtype=np.float64)
-            np.add.at(sums, inv, all_sc)
-            cand = (
-                np.flatnonzero(sums > theta)
-                if len(heap) == k
-                else np.arange(uniq.size)
-            )
-            for i in cand:
-                sc = float(sums[i])
-                item = (sc, -int(uniq[i]))
-                if len(heap) < k:
-                    heapq.heappush(heap, item)
-                elif item > heap[0]:
-                    heapq.heapreplace(heap, item)
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            for s, grp in pdf.groupby("slice", sort=True):
-                if cur_slice is not None and s != cur_slice:
-                    flush()
-                cur_slice = int(s)
-                buf.append(grp)
-        flush()
-        if heap:
-            yield pd.DataFrame(
-                {
-                    "doc_ord": np.array([-o for _, o in heap], dtype=np.int64),
-                    "score": np.array([s for s, _ in heap], dtype=np.float64),
-                }
-            )
-
-    return score_partition
-
-
-def wand_bm25_topk(
-    spark: SparkSession,
-    blocks: DataFrame,
-    doc_ids: Callable,
-    idfs: dict[str, float],
-    k1p1: float,
-    c0: float,
-    c1: float,
-    k: int,
-    slice_ords: int = SLICE_ORDS,
-    deleted: np.ndarray | None = None,
-    deleted_df: DataFrame | None = None,
-) -> DataFrame:
-    """Top-k (doc_id, score) under Okapi BM25 via block-max WAND. `idfs`
-    and the K(dl) = c0 + c1*dl constants are the caller's Python-computed
-    doubles (engine.search_bm25_wand_df — identical to the exact plan's
-    literals, so scores match bit-for-bit)."""
-    if not idfs:
-        return local_frame(spark, [], RESULT_SCHEMA)
-    sliced = blocks.filter(F.col("term").isin(list(idfs))).select(
-        "term",
-        "block_max_occ",
-        "block_min_dl",
-        "doc_ids_vb",
-        "occs_vb",
-        "dls_vb",
-        F.explode(
-            F.sequence(
-                (F.col("lo_ord") / slice_ords).cast("long"),
-                (F.col("hi_ord") / slice_ords).cast("long"),
-            )
-        ).alias("slice"),
-    )
-    if deleted_df is not None:
-        # distributed deletes: slice-co-partitioned tombstone rows (see
-        # wand_topk) — the driver never materializes the set
-        tmb = deleted_df.select(
-            (F.col("doc_ord") / slice_ords).cast("long").alias("slice"),
-            F.col("doc_ord").cast("long").alias("doc_ord"),
-            F.lit(True).alias("tomb"),
-        ).join(sliced.select("slice").distinct(), "slice", "left_semi")
-        sliced = sliced.unionByName(tmb, allowMissingColumns=True)
-    n_parts = max(2, spark.sparkContext.defaultParallelism)
-    partitioned = sliced.repartition(n_parts, "slice").sortWithinPartitions("slice")
-    survivors = partitioned.mapInPandas(
-        _score_partition_bm25_factory(
-            idfs, k, k1p1, c0, c1, slice_ords, deleted=deleted,
             with_tomb_rows=deleted_df is not None,
         ),
         _OUT_SCHEMA,

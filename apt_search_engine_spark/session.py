@@ -16,7 +16,13 @@ def get_spark(
     """Local-mode session tuned like the cluster profile: AQE on (runtime
     coalescing + skew-join handling), Arrow on for all pandas UDF traffic.
     `master`/parallelism come from env so bench can run the same job at two
-    parallelism levels (scaling-efficiency evidence, BASELINE.md)."""
+    parallelism levels (scaling-efficiency evidence, BASELINE.md).
+
+    A session already active in this thread comes back unchanged: the
+    builder's getOrCreate would re-apply the confs below to it."""
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("APTSE_MASTER", f"local[{cpus}]")
     shuffle = shuffle_partitions or int(

@@ -116,26 +116,27 @@ def test_prior_wand_small_slices_pruning(spark, index_dir, prior_engine):
 
     from pyspark.sql import functions as F
 
-    from apt_search_engine_spark.query.wand import wand_topk
+    from apt_search_engine_spark.query.wand import REFERENCE, wand_topk
 
-    term_mult = {"travel": 1, "guid": 1}
-    buckets = sorted({prior_engine._bucket(t) for t in term_mult})
+    terms = ["guid", "travel"]
+    buckets = sorted({prior_engine._bucket(t) for t in terms})
     blocks = (
         spark.read.parquet(os.path.join(index_dir, "blocks"))
         .filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term").isin(list(term_mult)))
+        .filter(F.col("term").isin(terms))
     )
+    dfs = prior_engine.term_dfs(terms)
     wand = [
         (r.doc_id, round(r.score, 9))
         for r in wand_topk(
             spark,
             blocks,
             prior_engine._doc_ids,
-            term_mult,
-            prior_engine.term_dfs(list(term_mult)),
-            prior_engine.n_docs,
+            {t: float(prior_engine.idf_numerator // dfs[t]) for t in terms},
+            REFERENCE,
             10,
             slice_ords=64,
+            prior=prior_engine.prior,
             prior_by_ord=prior_engine._prior_by_ord(),
         ).collect()
     ]

@@ -28,14 +28,12 @@ def server(engine):
 
 
 @pytest.fixture
-def cli(spark, index_dir, capsys, monkeypatch):
+def cli(spark, index_dir, capsys):
     """Runs jobs.search.main on the shared index in this process (the
-    session factory hands back the fixture session); returns (exit code,
-    parsed stdout JSON or None, parsed stderr JSON or None)."""
-    from apt_search_engine_spark import session
+    session factory hands back the active fixture session unchanged);
+    returns (exit code, parsed stdout JSON or None, parsed stderr JSON or
+    None)."""
     from apt_search_engine_spark.jobs import search
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **kw: spark)
 
     def _run(*argv):
         code = search.main(["--index-dir", index_dir, "-k", str(K), *argv])
@@ -125,6 +123,42 @@ def test_cli_unassembled_flags(cli, engine):
             assert [s for _, s in got] == pytest.approx(
                 [s for _, s in want], rel=1e-9
             )
+
+
+def test_cli_bm25_no_snippets_runs_wand(cli, engine, monkeypatch):
+    """--scorer bm25 --no-snippets runs a bag-of-words query on the
+    block-max WAND plan, as --no-snippets promises, and prints its rows."""
+    from apt_search_engine_spark.query import wand
+
+    want = [
+        (r.doc_id, r.score)
+        for r in engine.search_bm25_wand_df("travel guide", K).collect()
+    ]
+    assert want
+    calls = []
+    real = wand.wand_topk
+
+    def spy(*a, **kw):
+        calls.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(wand, "wand_topk", spy)
+    code, out, _ = cli(
+        "--query", "travel guide", "--scorer", "bm25", "--no-snippets"
+    )
+    assert code == 0 and len(calls) == 1
+    assert [(r["doc_id"], r["score"]) for r in out["results"]] == want
+
+
+def test_get_spark_returns_the_active_session_unchanged(spark, monkeypatch):
+    """A job's session factory called inside a process that holds a
+    session hands that session back without re-applying its confs."""
+    from apt_search_engine_spark.session import get_spark
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("APTSE_SHUFFLE_PARTITIONS", raising=False)
+    assert get_spark("x") is spark
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
 
 
 def test_cli_conflicts_exit_2(cli, spark, tmp_path, oracle):

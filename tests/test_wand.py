@@ -37,34 +37,39 @@ def test_wand_matches_exact(engine, query):
         assert sw == pytest.approx(se, rel=1e-9)
 
 
-def test_wand_small_slices_and_spanning_blocks(spark, engine, index_dir):
+@pytest.mark.parametrize("scorer", ["reference", "bm25"])
+def test_wand_small_slices_and_spanning_blocks(spark, engine, index_dir, scorer):
     """Force many ordinal slices (width 64 << block size 128) so blocks span
-    slice boundaries and the dedup mask + multi-partition heap paths run."""
-    from apt_search_engine_spark.query.wand import wand_topk
+    slice boundaries and the dedup mask + multi-partition heap paths run,
+    under each scorer's block bound and decode."""
+    from apt_search_engine_spark.query import wand
+    from apt_search_engine_spark.query.engine import BM25_B, BM25_K1
 
-    term_mult = {"travel": 1, "guid": 1}  # stemmed forms
-    buckets = sorted({engine._bucket(t) for t in term_mult})
+    terms = ["guid", "travel"]  # stemmed forms
+    buckets = sorted({engine._bucket(t) for t in terms})
     blocks = (
         spark.read.parquet(os.path.join(index_dir, "blocks"))
         .filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term").isin(list(term_mult)))
+        .filter(F.col("term").isin(terms))
     )
-    wand = [
+    if scorer == "reference":
+        dfs = engine.term_dfs(terms)
+        weights = {t: float(engine.idf_numerator // dfs[t]) for t in terms}
+        kw = {"scorer": wand.REFERENCE, "prior": engine.prior}
+        exact = _rows(engine.search_df("travel guide", k=10))
+    else:
+        bm = engine._bm25(terms, BM25_K1, BM25_B)
+        weights = bm.idfs
+        kw = {"scorer": wand.bm25_scorer(bm.k1p1, bm.c0, bm.c1)}
+        exact = _rows(engine.search_bm25_df("travel guide", k=10))
+    got = [
         (r.doc_id, r.score)
-        for r in wand_topk(
-            spark,
-            blocks,
-            engine._doc_ids,
-            term_mult,
-            engine.term_dfs(list(term_mult)),
-            engine.n_docs,
-            10,
-            slice_ords=64,
+        for r in wand.wand_topk(
+            spark, blocks, engine._doc_ids, weights, k=10, slice_ords=64, **kw
         ).collect()
     ]
-    exact = _rows(engine.search_df("travel guide", k=10))
-    assert [d for d, _ in wand] == [d for d, _ in exact]
-    for (_, sw), (_, se) in zip(wand, exact):
+    assert [d for d, _ in got] == [d for d, _ in exact]
+    for (_, sw), (_, se) in zip(got, exact):
         assert sw == pytest.approx(se, rel=1e-9)
 
 
